@@ -38,8 +38,6 @@ from typing import TYPE_CHECKING
 
 import numpy as np
 
-from .pdkeys import emit_key_column, unhelp_key, with_string_key_helpers
-
 if TYPE_CHECKING:  # pyspark deferred so `import tdigest_spark` stays NumPy-only
     from pyspark.sql import DataFrame
 
@@ -222,53 +220,38 @@ def fd_sketch_by(
     ell: int = 64,
 ) -> DataFrame:
     """Distributed FD build, digest_by's map-side-combine shape:
-    stage 1 = mapInPandas keeps one sketch per group per partition
+    stage 1 = one mapInArrow keeps one sketch per group per partition
     (zero raw-vector shuffle — the shuffle carries ≤(groups×partitions)
     serialized ℓ×d buffers); stage 2 = applyInPandas merge per group.
     Returns (by…, fd binary, n_rows long)."""
     import pandas as pd
+    import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
+    from .operators._arrow_groups import map_groups
+
     by = list(by or [])
-    cols = [*by, vec_col]
-    sdf = df.select(*cols).filter(F.col(vec_col).isNotNull())
-    # lossless integer group keys across the pandas boundary (pdkeys)
-    sdf, helper, group_cols = with_string_key_helpers(sdf, by)
-    by_schema = ", ".join(
-        f"{c} {df.schema[c].dataType.simpleString()}" for c in by
+    sdf = df.select(*by, vec_col).filter(F.col(vec_col).isNotNull())
+    part_schema = ", ".join(
+        [*(f"{c} {df.schema[c].dataType.simpleString()}" for c in by), _FD_FIELDS]
     )
-    part_schema = (by_schema + ", " if by_schema else "") + _FD_FIELDS
 
-    def build(batches):
-        sketches: dict[tuple, FrequentDirections] = {}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            X = np.array([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-            if not by:
-                groups = [((), np.arange(len(pdf)))]
-            else:
-                gb = pdf.groupby(group_cols, sort=False, dropna=False).indices
-                groups = [
-                    (g if isinstance(g, tuple) else (g,), idx)
-                    for g, idx in gb.items()
-                ]
-            for g, idx in groups:
-                sk = sketches.get(g)
-                if sk is None:
-                    sk = sketches[g] = FrequentDirections(X.shape[1], ell)
-                sk.add(X[idx])
-        rows = {}
-        for i, c in enumerate(by):
-            rows[c] = emit_key_column(
-                helper, c, [unhelp_key(helper, c, g[i]) for g in sketches]
-            )
-        rows["fd"] = [sk.serialize() for sk in sketches.values()]
-        rows["n_rows"] = [sk.n_rows for sk in sketches.values()]
-        yield pd.DataFrame(rows, columns=[*by, "fd", "n_rows"])
+    def matrix(batch) -> np.ndarray:
+        col = batch.column(vec_col)
+        width = pc.list_value_length(col).to_numpy()
+        if width.min() != width.max():
+            raise ValueError(f"fd_sketch_by: {vec_col} vectors differ in length")
+        flat = pc.list_flatten(col).to_numpy(zero_copy_only=False)
+        return np.asarray(flat, dtype=np.float64).reshape(len(col), -1)
 
-    partials = sdf.select(*group_cols, vec_col).mapInPandas(
-        build, schema=part_schema
+    def feed(sk, X: np.ndarray, rows: np.ndarray):
+        sk = FrequentDirections(X.shape[1], ell) if sk is None else sk
+        sk.add(X[rows])
+        return sk
+
+    partials = map_groups(
+        sdf, by, _FD_FIELDS, matrix, feed,
+        emit=lambda sk, pid: [(sk.serialize(), sk.n_rows)],
     )
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:

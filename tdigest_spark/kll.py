@@ -17,9 +17,9 @@ While no compaction has happened (n <= k at a single level) every item
 is retained: rank/quantile answers equal the exact rank oracle, which is
 the regime the oracle-checked driver query runs in.
 
-Spark distribution mirrors operators.digest: per-partition/group partials
-via applyInPandas, level-wise-concat merge + recompress, serialized state
-in a BinaryType column.
+Spark distribution mirrors operators.digest: per-(group, partition)
+partials via the Arrow grouping kernel, level-wise-concat merge +
+recompress, serialized state in a BinaryType column.
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ from typing import Iterable, Sequence
 import numpy as np
 import pandas as pd
 
-from .pdkeys import emit_key_column, unhelp_key, with_string_key_helpers
 
 _C = 2.0 / 3.0
 
@@ -244,7 +243,7 @@ def kll_by(
     """Grouped KLL build+merge over a DataFrame (same two-stage shape as
     operators.digest.digest_by).  Returns (by..., kll binary, n_rows long).
 
-    `combine="map"` (default): stage 1 is mapInPandas keeping a dict
+    `combine="map"` (default): stage 1 is one mapInArrow keeping a dict
     group→sketch per input partition — the raw rows NEVER shuffle, only
     (group, KB-sketch) partials do.  `combine="shuffle"`: salted
     groupBy build, the fallback for cardinality-explosive group keys
@@ -252,8 +251,6 @@ def kll_by(
     to the shuffle path; mix of repeated values is irrelevant on the map
     path because partitioning, not value hashing, spreads hot groups.
     """
-    from typing import Iterator
-
     from pyspark.sql import functions as F
 
     keys = list(by)
@@ -271,50 +268,13 @@ def kll_by(
     out_schema = ", ".join(x for x in (key_schema, "kll binary, n_rows long") if x)
 
     if combine == "map":
-        mdf = sdf.withColumn("__pid", F.spark_partition_id())
-        # lossless integer group keys across the pandas boundary (pdkeys)
-        mdf, helper, group_cols = with_string_key_helpers(mdf, keys)
+        from .operators._arrow_groups import floats, map_sketches
 
-        def build_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            sks: dict[tuple, KLL] = {}
-            rows: dict[tuple, int] = {}
-            pid = 0
-            for pdf in batches:
-                if len(pdf):
-                    pid = int(pdf["__pid"].iloc[0])
-                vals = pdf["__v"].to_numpy(dtype=np.float64)
-                ok = ~np.isnan(vals)
-                if keys:
-                    idx_by_group = pdf.groupby(
-                        group_cols, sort=False, dropna=False
-                    ).indices
-                else:
-                    idx_by_group = {(): np.arange(len(pdf))}
-                for g, idx in idx_by_group.items():
-                    g = g if isinstance(g, tuple) else (g,)
-                    sk = sks.get(g)
-                    if sk is None:
-                        sk = sks[g] = KLL(k)
-                        rows[g] = 0
-                    v = vals[idx]
-                    v = v[ok[idx]]
-                    if v.size:
-                        sk.add(v)
-                        rows[g] += int(v.size)
-            if sks:
-                out = {
-                    c: emit_key_column(
-                        helper, c, [unhelp_key(helper, c, g[i]) for g in sks]
-                    )
-                    for i, c in enumerate(keys)
-                }
-                out["__s"] = [pid] * len(sks)
-                out["kll"] = [sk.to_bytes() for sk in sks.values()]
-                out["n_rows"] = [rows[g] for g in sks]
-                yield pd.DataFrame(out)
-
-        partials = mdf.select(*group_cols, "__v", "__pid").mapInPandas(
-            build_partition, schema=part_schema
+        partials = map_sketches(
+            sdf, keys, lambda b: floats(b.column("__v")),
+            new=lambda: KLL(k),
+            fields="__s int, kll binary, n_rows long",
+            emit=lambda sk, n, pid: (pid, sk.to_bytes(), n),
         )
     else:
         if salt and salt > 1:

@@ -4,11 +4,15 @@ The reference library IS a partial+final aggregation (SURVEY.md §2.2):
 update = vectorized fit over a batch, merge = digest ⊕ digest, evaluate =
 compress + quantile/cdf.  Spark-first mapping:
 
-    stage 1 (update):  mapInPandas builds one digest per (group, input
+    stage 1 (update):  one mapInArrow builds a digest per (group, input
                        partition) — *map-side combine*: no raw row ever
-                       shuffles; Arrow delivers 10k-row batches, the same
-                       amortization granularity as the reference's
-                       ingestion chunking (build_partials_grouped)
+                       shuffles.  Each 10k-row Arrow batch (the reference's
+                       ingestion-chunk granularity) splits by key in Arrow
+                       (dictionary_encode + stable argsort,
+                       `_arrow_groups`), so keys never become pandas
+                       objects and each group's values reach `add` in row
+                       order (build_partials_grouped; `by=()` is the
+                       per-partition build)
     stage 2 (merge):   groupBy(keys).applyInPandas(merge)
                        — digests are ~8·delta bytes, so the shuffle moves
                        KBs per group regardless of input size
@@ -17,7 +21,7 @@ compress + quantile/cdf.  Spark-first mapping:
 
 Scale notes (100 TB / 1000 executors):
 - The DEFAULT grouped path (`digest_by(combine="map")`) shuffles ZERO raw
-  rows: stage 1 is mapInPandas keeping a dict group→digest per input
+  rows: stage 1 is mapInArrow keeping a dict group→digest per input
   partition, so the only shuffle carries (group, KB-digest) partials —
   splits × groups rows, independent of input size.  A hot group (e.g.
   lang='en' at 60% of a trillion rows) is automatically spread over every
@@ -27,7 +31,7 @@ Scale notes (100 TB / 1000 executors):
   per-partition dict would exceed executor memory and partials would
   outnumber raw rows.  With `salt=S` a skewed group splits into S
   reducers; merge cost is S tiny digests.
-- `build_partials_per_partition` (mapInPandas) is the ungrouped variant:
+- `build_partials_per_partition` is the ungrouped variant (`by=()`):
   each input split emits one digest row. This is the 100 TB fast path for
   global digests.
 - Merge order is canonicalized (sort by salt/split id) so re-runs are
@@ -44,8 +48,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..core import MergingDigest
-from ..pdkeys import emit_key_column, unhelp_key, with_string_key_helpers
 from ..scale import get_scale
+from ._arrow_groups import Counted, floats, map_groups, map_sketches
 
 _VALUE = "__td_value"
 _SALT = "__td_salt"
@@ -139,6 +143,23 @@ def build_partials(
     return sdf.groupBy(*group_cols).applyInPandas(build, schema=out_schema)
 
 
+def _digest_partials(sdf: DataFrame, keys, values, delta: float, scale: str):
+    """Stage-1 digests of `sdf` per (group, partition) through the Arrow
+    kernel; `values(batch)` gives each batch's float64 values."""
+    return map_sketches(
+        sdf, keys, values,
+        new=lambda: MergingDigest(delta, scale=get_scale(scale)),
+        fields=f"{_SALT} int, {DIGEST_FIELDS}",
+        emit=lambda d, n, pid: (pid, d.to_bytes(), n),
+    )
+
+
+def _min_parallel(sdf: DataFrame, min_parallelism: int | None) -> DataFrame:
+    if min_parallelism and sdf.rdd.getNumPartitions() < min_parallelism:
+        return sdf.repartition(min_parallelism)
+    return sdf
+
+
 def build_partials_grouped(
     df: DataFrame,
     value_col,
@@ -147,8 +168,8 @@ def build_partials_grouped(
     scale: str = "K_3",
     min_parallelism: int | None = None,
 ) -> DataFrame:
-    """Map-side-combining stage 1 for GROUPED digests: mapInPandas keeps a
-    dict group→digest per input partition and emits one digest row per
+    """Map-side-combining stage 1 for GROUPED digests: one mapInArrow keeps
+    a dict group→digest per input partition and emits one digest row per
     (group, partition).  The raw data NEVER shuffles — only (group,
     KB-digest) partials do, exactly like `histogram_ops.histogram_by`.
 
@@ -159,6 +180,7 @@ def build_partials_grouped(
 
     Output schema matches `build_partials` (`_SALT` carries the input
     partition id) so `merge_partials` consumes either interchangeably.
+    `by=()` is the ungrouped build: one digest row per input partition.
 
     `min_parallelism` (opt-in): repartition iff the input has fewer
     partitions than this — rescues local runs over few/unsplittable files
@@ -168,66 +190,10 @@ def build_partials_grouped(
     """
     keys = list(by)
     value = F.col(value_col) if isinstance(value_col, str) else value_col
-    sdf = df.select(
-        *[F.col(k) for k in keys], value.cast("double").alias(_VALUE)
-    )
-    if min_parallelism and sdf.rdd.getNumPartitions() < min_parallelism:
-        sdf = sdf.repartition(min_parallelism)
-    sdf = sdf.withColumn("__pid", F.spark_partition_id())
-
-    key_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in sdf.schema.fields
-        if f.name in keys
-    )
-    out_schema = ", ".join(
-        x for x in (key_schema, f"{_SALT} int", DIGEST_FIELDS) if x
-    )
-    # integer key columns group on lossless STRING helpers and come back
-    # as nullable Int64 — see pdkeys module docstring for the two ways
-    # pandas corrupts raw int64 keys
-    sdf, helper, group_cols = with_string_key_helpers(sdf, keys)
-
-    def _unhelp(k: str, v):
-        return unhelp_key(helper, k, v)
-
-    def build_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        digests: dict[tuple, MergingDigest] = {}
-        rows: dict[tuple, int] = {}
-        pid = 0
-        for pdf in batches:
-            if len(pdf):
-                pid = int(pdf["__pid"].iloc[0])
-            vals = pdf[_VALUE].to_numpy(dtype=np.float64)
-            ok = ~np.isnan(vals)
-            # groupby().indices: one pass over the batch, index arrays per
-            # group (not a per-group boolean scan of the whole batch)
-            idx_by_group = pdf.groupby(group_cols, sort=False, dropna=False).indices
-            for g, idx in idx_by_group.items():
-                g = g if isinstance(g, tuple) else (g,)
-                d = digests.get(g)
-                if d is None:
-                    d = digests[g] = MergingDigest(delta, scale=get_scale(scale))
-                    rows[g] = 0
-                v = vals[idx]
-                v = v[ok[idx]]
-                if v.size:
-                    d.add(v)
-                    rows[g] += int(v.size)
-        if digests:
-            out = {}
-            for i, k in enumerate(keys):
-                vals_k = [_unhelp(k, g[i]) for g in digests]
-                out[k] = emit_key_column(helper, k, vals_k)
-            out[_SALT] = [pid] * len(digests)
-            out["digest"] = [d.to_bytes() for d in digests.values()]
-            out["n_rows"] = [rows[g] for g in digests]
-            yield pd.DataFrame(out)
-
-    # ship ONLY what the builder reads: the original integer key
-    # columns ride along as string helpers, so re-sending them over
-    # Arrow would double the key bytes per row
-    return sdf.select(*group_cols, _VALUE, "__pid").mapInPandas(
-        build_partition, schema=out_schema
+    sdf = df.select(*keys, value.cast("double").alias(_VALUE))
+    sdf = _min_parallel(sdf, min_parallelism)
+    return _digest_partials(
+        sdf, keys, lambda b: floats(b.column(_VALUE)), delta, scale
     )
 
 
@@ -238,38 +204,14 @@ def build_partials_per_partition(
     scale: str = "K_3",
     min_parallelism: int | None = None,
 ) -> DataFrame:
-    """Shuffle-free stage 1 for ungrouped digests: mapInPandas emits ONE
-    digest row per input partition (the 100 TB fast path — the raw data
-    never crosses the network; only ~KB digest rows do).
-
-    `min_parallelism`: same opt-in low-partition rescue as
-    `build_partials_grouped` — None keeps the plan exchange-free."""
-    value = F.col(value_col) if isinstance(value_col, str) else value_col
-    sdf = df.select(value.cast("double").alias(_VALUE))
-    if min_parallelism and sdf.rdd.getNumPartitions() < min_parallelism:
-        sdf = sdf.repartition(min_parallelism)
-    sdf = sdf.withColumn("__pid", F.spark_partition_id())
-
-    def per_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        d = None
-        pid = -1
-        n = 0
-        for pdf in batches:
-            vals = pdf[_VALUE].to_numpy(dtype=np.float64)
-            vals = vals[~np.isnan(vals)]
-            if d is None:
-                d = MergingDigest(delta, scale=get_scale(scale))
-                if len(pdf):
-                    pid = int(pdf["__pid"].iloc[0])
-            if vals.size:
-                d.add(vals)
-                n += vals.size
-        if d is not None:
-            yield pd.DataFrame(
-                {_SALT: [pid], "digest": [d.to_bytes()], "n_rows": [n]}
-            )
-
-    return sdf.mapInPandas(per_partition, schema=f"{_SALT} int, {DIGEST_FIELDS}")
+    """Shuffle-free stage 1 for ungrouped digests: ONE digest row per input
+    partition (the 100 TB fast path — the raw data never crosses the
+    network; only ~KB digest rows do).  `build_partials_grouped` with
+    `by=()`."""
+    return build_partials_grouped(
+        df, value_col, (), delta=delta, scale=scale,
+        min_parallelism=min_parallelism,
+    )
 
 
 def build_partials_multi(
@@ -294,74 +236,27 @@ def build_partials_multi(
     `build_partials_grouped`."""
     cols = list(value_cols)
     keys = list(by)
-    sdf = df.select(
-        *[F.col(k) for k in keys],
-        *[F.col(c).cast("double").alias(c) for c in cols],
-    )
-    if min_parallelism and sdf.rdd.getNumPartitions() < min_parallelism:
-        sdf = sdf.repartition(min_parallelism)
-    sdf = sdf.withColumn("__pid", F.spark_partition_id())
-    # lossless integer group keys across the pandas boundary (pdkeys)
-    sdf, helper, group_cols = with_string_key_helpers(sdf, keys)
+    sdf = df.select(*keys, *[F.col(c).cast("double").alias(c) for c in cols])
+    sdf = _min_parallel(sdf, min_parallelism)
 
-    key_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in sdf.schema.fields
-        if f.name in keys
-    )
-    out_schema = ", ".join(
-        x
-        for x in (key_schema, f"col string, {_SALT} int", DIGEST_FIELDS)
-        if x
-    )
+    def feed(ds: dict | None, vals: list, rows: np.ndarray) -> dict:
+        ds = {} if ds is None else ds
+        for c, arr in zip(cols, vals):
+            v = arr[rows]
+            v = v[~np.isnan(v)]
+            if v.size:
+                if c not in ds:
+                    ds[c] = Counted(MergingDigest(delta, scale=get_scale(scale)))
+                ds[c].add(v)
+        return ds
 
-    def per_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ds: dict[tuple, MergingDigest] = {}
-        ns: dict[tuple, int] = {}
-        pid = -1
-        seen = False
-
-        def feed(g: tuple, pdf: pd.DataFrame, idx=None) -> None:
-            for c in cols:
-                arr = pdf[c].to_numpy(dtype=np.float64)
-                if idx is not None:
-                    arr = arr[idx]
-                arr = arr[~np.isnan(arr)]
-                if arr.size:
-                    k = (*g, c)
-                    d = ds.get(k)
-                    if d is None:
-                        d = ds[k] = MergingDigest(delta, scale=get_scale(scale))
-                        ns[k] = 0
-                    d.add(arr)
-                    ns[k] += int(arr.size)
-
-        for pdf in batches:
-            if not seen and len(pdf):
-                pid = int(pdf["__pid"].iloc[0])
-                seen = True
-            if not keys:
-                feed((), pdf)
-            else:
-                for g, idx in pdf.groupby(
-                    group_cols, sort=False, dropna=False
-                ).indices.items():
-                    feed(g if isinstance(g, tuple) else (g,), pdf, idx)
-        if seen and ds:
-            out = {
-                k: emit_key_column(
-                    helper, k, [unhelp_key(helper, k, key[i]) for key in ds]
-                )
-                for i, k in enumerate(keys)
-            }
-            out["col"] = [key[-1] for key in ds]
-            out[_SALT] = [pid] * len(ds)
-            out["digest"] = [d.to_bytes() for d in ds.values()]
-            out["n_rows"] = [ns[key] for key in ds]
-            yield pd.DataFrame(out)
-
-    return sdf.select(*group_cols, *cols, "__pid").mapInPandas(
-        per_partition, schema=out_schema
+    return map_groups(
+        sdf, keys, f"col string, {_SALT} int, {DIGEST_FIELDS}",
+        prepare=lambda b: [floats(b.column(c)) for c in cols],
+        feed=feed,
+        emit=lambda ds, pid: [
+            (c, pid, s.sketch.to_bytes(), s.n) for c, s in ds.items()
+        ],
     )
 
 

@@ -4,7 +4,8 @@ Histogram merge is element-wise addition of conformal count vectors
 (LogHistogram.jl:92-122) — fully expressible with built-in Spark
 operators, no Python on the merge path:
 
-    stage 1: applyInPandas builds one count vector per (group, salt)
+    stage 1: one mapInArrow builds a count vector per (group, input
+             partition) through the Arrow grouping kernel
     stage 2: posexplode → groupBy(keys, pos).sum → re-assemble with
              sort_array(collect_list(struct(pos, cnt)))  — all JVM-side
 
@@ -17,12 +18,10 @@ from __future__ import annotations
 from typing import Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..pdkeys import emit_key_column, unhelp_key, with_string_key_helpers
-
 from ..histogram import LogHistogram
+from ._arrow_groups import floats, map_sketches
 
 _VALUE = "__lh_value"
 
@@ -39,69 +38,18 @@ def histogram_by(
     keys = list(by)
     value = F.col(value_col) if isinstance(value_col, str) else value_col
     sdf = df.select(*[F.col(k) for k in keys], value.cast("double").alias(_VALUE))
-    # lossless integer group keys across the pandas boundary (pdkeys)
-    sdf, helper, group_cols = with_string_key_helpers(sdf, keys)
 
-    key_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in sdf.schema.fields
-        if f.name in keys
-    )
-    part_schema = ", ".join(
-        x for x in (key_schema, "counts array<bigint>, n_rows bigint") if x
-    )
-
-    from typing import Iterator
-
-    def build_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        # one histogram per group seen in THIS partition: narrow (no
-        # shuffle of the raw rows), skew-immune (a hot group is spread
-        # across every input split), bounded state (groups x n_bins longs)
-        hists: dict[tuple, LogHistogram] = {}
-        rows: dict[tuple, int] = {}
-        for pdf in batches:
-            vals = pdf[_VALUE].to_numpy(dtype=np.float64)
-            ok = ~np.isnan(vals) & (vals > 0)
-            # groupby().indices: one pass over the batch, index arrays per
-            # group — not a per-group boolean scan of the whole batch —
-            # and dropna=False keeps NULL group keys (SQL GROUP BY
-            # semantics; a NaN key never satisfies == comparisons, so the
-            # mask formulation silently dropped those rows entirely).
-            # Mirrors digest.build_partials_grouped.
-            if not keys:
-                grp_iter = [((), np.arange(len(pdf)))]
-            else:
-                grp_iter = [
-                    (g if isinstance(g, tuple) else (g,), idx)
-                    for g, idx in pdf.groupby(
-                        group_cols, sort=False, dropna=False
-                    ).indices.items()
-                ]
-            for g, idx in grp_iter:
-                h = hists.get(g)
-                if h is None:
-                    h = hists[g] = LogHistogram(min_value, max_value, epsilon)
-                    rows[g] = 0
-                v = vals[idx]
-                v = v[ok[idx]]
-                if v.size:
-                    h.add(v)
-                    rows[g] += int(v.size)
-        if hists:
-            out = {
-                k: emit_key_column(
-                    helper, k, [unhelp_key(helper, k, g[i]) for g in hists]
-                )
-                for i, k in enumerate(keys)
-            }
-            out["counts"] = [h.counts.tolist() for h in hists.values()]
-            out["n_rows"] = [rows[g] for g in hists]
-            yield pd.DataFrame(out)
-
-    # stage 1: per (group, input-partition) partial vectors via mapInPandas
-    # ship only (group helpers, value): see pdkeys note in digest.py
-    partials = sdf.select(*group_cols, _VALUE).mapInPandas(
-        build_partition, schema=part_schema
+    # stage 1: per (group, input-partition) count vectors — narrow (no
+    # shuffle of the raw rows), skew-immune (a hot group is spread across
+    # every input split), bounded state (groups x n_bins longs).  NULL
+    # group keys are groups (SQL GROUP BY); NULL/NaN/non-positive values
+    # are skipped (`v > 0` is False for NaN).
+    partials = map_sketches(
+        sdf, keys, lambda b: floats(b.column(_VALUE)),
+        new=lambda: LogHistogram(min_value, max_value, epsilon),
+        fields="counts array<bigint>, n_rows bigint",
+        emit=lambda h, n, pid: (h.counts.tolist(), n),
+        keep=lambda v: v > 0,
     )
 
     # stage 2: JVM-side vector sum via posexplode + re-assembly.  n_rows

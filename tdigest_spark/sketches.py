@@ -26,9 +26,10 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
 
-from .pdkeys import emit_key_column, unhelp_key, with_string_key_helpers
+from .operators._arrow_groups import map_groups
 
 # ------------------------------------------------------------------ hashing
 
@@ -420,7 +421,7 @@ def heavy_hitters(
     with the two-pass Misra-Gries pattern — the 100 TB heavy-hitter
     design: no raw-row shuffle, candidates-only exact verification.
 
-    Pass 1 (mapInPandas, zero shuffle): each input partition runs a
+    Pass 1 (mapInArrow, zero shuffle): each input partition runs a
     Misra-Gries summary with `counters` slots (default 2/threshold) and
     emits its surviving items — KBs per partition.  Pigeonhole: an item
     with global frequency > threshold exceeds the local threshold in at
@@ -431,7 +432,7 @@ def heavy_hitters(
     (group, item) pairs through a partial-aggregating count.
 
     NULL semantics match SQL GROUP BY: a NULL item (and a NULL group
-    key) is an ordinary value — counted through pass 1 (dropna=False),
+    key) is an ordinary value — counted through pass 1 (Arrow keeps NULL),
     matched null-safely (<=>) in pass 2 — so a NULL exceeding the
     threshold IS returned, exactly as the GROUP BY/HAVING oracle would.
 
@@ -452,80 +453,44 @@ def heavy_hitters(
         counters = max(8, int(math.ceil(2.0 / threshold)))
     value = F.col(value_col) if isinstance(value_col, str) else value_col
     sdf = df.select(*keys, value.cast("string").alias("__item"))
-    # lossless integer group keys across the pandas boundary (pdkeys)
-    sdf, helper, group_cols = with_string_key_helpers(sdf, keys)
     if broadcast_candidates is None:
         n_parts = sdf.rdd.getNumPartitions()
         broadcast_candidates = n_parts * counters <= _HH_BROADCAST_MAX_ROWS
 
-    key_fields = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in sdf.schema.fields
-        if f.name in keys
-    )
-    cand_schema = ", ".join(x for x in (key_fields, "__item string") if x)
-
     k_counters = int(counters)
 
-    def mg_partition(batches):
-        import pandas as _pd
+    def insert(s: dict, it, c: int) -> None:
+        # weighted Misra-Gries insert of `c` copies of `it`
+        while c > 0:
+            if it in s:
+                s[it] += c
+                return
+            if len(s) < k_counters:
+                s[it] = c
+                return
+            m = min(min(s.values()), c)
+            for kk in list(s):
+                s[kk] -= m
+                if s[kk] == 0:
+                    del s[kk]
+            c -= m
 
-        # one weighted Misra-Gries summary per group seen in this
-        # partition.  Per-batch item counting is vectorized
-        # (value_counts); the Python loop runs per DISTINCT item per
-        # batch (weighted MG insert), not per row.
-        summaries: dict[tuple, dict] = {}
+    def feed(s: dict | None, items, rows) -> dict:
+        # one MG summary per group seen in this partition; per-batch item
+        # counting is vectorized (Arrow value_counts, NULL counted as an
+        # item), the Python loop runs per DISTINCT item per batch
+        s = {} if s is None else s
+        vc = pc.value_counts(items.take(rows))
+        for it, c in zip(vc.field("values").to_pylist(), vc.field("counts").to_pylist()):
+            insert(s, it, c)
+        return s
 
-        def insert(s: dict, it, c: int) -> None:
-            while c > 0:
-                if it in s:
-                    s[it] += c
-                    return
-                if len(s) < k_counters:
-                    s[it] = c
-                    return
-                m = min(min(s.values()), c)
-                for kk in list(s):
-                    s[kk] -= m
-                    if s[kk] == 0:
-                        del s[kk]
-                c -= m
-
-        def norm(v):
-            # pandas surfaces string NULLs as None (plain value_counts)
-            # or NaN (grouped value_counts index); both must come back
-            # out as proper SQL NULLs
-            return None if v is None or (isinstance(v, float) and v != v) else v
-
-        for pdf in batches:
-            if not keys:
-                s = summaries.setdefault((), {})
-                for it, c in pdf["__item"].value_counts(dropna=False).items():
-                    insert(s, norm(it), int(c))
-                continue
-            grouped = pdf.groupby(group_cols, sort=False, dropna=False)["__item"]
-            vcs = grouped.value_counts(dropna=False)
-            for g, vc in vcs.groupby(level=list(range(len(keys))), dropna=False):
-                g = g if isinstance(g, tuple) else (g,)
-                s = summaries.setdefault(tuple(norm(x) for x in g), {})
-                for idx_key, c in vc.items():
-                    insert(s, norm(idx_key[-1]), int(c))
-        key_lists: dict[str, list] = {k: [] for k in keys}
-        items = []
-        for g, s in summaries.items():
-            for it in s:
-                for i, k in enumerate(keys):
-                    key_lists[k].append(unhelp_key(helper, k, g[i]))
-                items.append(it)
-        rows = {k: emit_key_column(helper, k, key_lists[k]) for k in keys}
-        rows["__item"] = items
-        yield _pd.DataFrame(rows)
-
-    candidates = (
-        sdf.select(*group_cols, "__item")
-        .mapInPandas(mg_partition, schema=cand_schema)
-        .distinct()
-    )
+    candidates = map_groups(
+        sdf, keys, "__item string",
+        prepare=lambda b: b.column("__item"),
+        feed=feed,
+        emit=lambda s, pid: [(it,) for it in s],
+    ).distinct()
 
     # candidate cardinality <= n_partitions x counters; broadcast is right
     # for normal thresholds (hundreds of survivors/partition, KBs), but a

@@ -248,7 +248,7 @@ def extract_digest_partials(
     html_col: str = "html",
 ):
     """Fused stage 1 of the flagship pipeline: extract_text(html) + text
-    length + grouped digest build in ONE mapInPandas pass.
+    length + grouped digest build in ONE mapInArrow pass.
 
     Chaining the generic operators (extract pandas_udf -> length ->
     build_partials_grouped) is semantically identical but runs TWO Python
@@ -261,67 +261,21 @@ def extract_digest_partials(
     Output matches operators.digest.build_partials_grouped, so
     merge_partials consumes it unchanged.
     """
-    from ..core import MergingDigest
-    from ..operators.digest import DIGEST_FIELDS, _SALT
-    from ..pdkeys import emit_key_column, unhelp_key, with_string_key_helpers
-    from ..scale import get_scale
+    from ..operators.digest import _digest_partials
 
     keys = list(by)
-    sdf = df.select(*keys, F.col(html_col).alias("__html")).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    # lossless integer group keys across the pandas boundary (pdkeys)
-    sdf, helper, group_cols = with_string_key_helpers(sdf, keys)
-    key_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in sdf.schema.fields
-        if f.name in keys
-    )
-    out_schema = ", ".join(
-        x for x in (key_schema, f"{_SALT} int", DIGEST_FIELDS) if x
-    )
+    sdf = df.select(*keys, F.col(html_col).alias("__html"))
 
-    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        digests: dict[tuple, MergingDigest] = {}
-        rows: dict[tuple, int] = {}
-        pid = 0
-        for pdf in batches:
-            if len(pdf):
-                pid = int(pdf["__pid"].iloc[0])
-            lens = pdf["__html"].map(
-                lambda b: float(len(extract_text(bytes(b)))) if b is not None
-                else np.nan
-            ).to_numpy(dtype=np.float64)
-            ok = ~np.isnan(lens)
-            idx_by_group = pdf.groupby(
-                group_cols, sort=False, dropna=False
-            ).indices
-            for g, idx in idx_by_group.items():
-                g = g if isinstance(g, tuple) else (g,)
-                d = digests.get(g)
-                if d is None:
-                    d = digests[g] = MergingDigest(delta, scale=get_scale(scale))
-                    rows[g] = 0
-                v = lens[idx]
-                v = v[ok[idx]]
-                if v.size:
-                    d.add(v)
-                    rows[g] += int(v.size)
-        if digests:
-            out = {
-                k: emit_key_column(
-                    helper, k, [unhelp_key(helper, k, g[i]) for g in digests]
-                )
-                for i, k in enumerate(keys)
-            }
-            out[_SALT] = [pid] * len(digests)
-            out["digest"] = [d.to_bytes() for d in digests.values()]
-            out["n_rows"] = [rows[g] for g in digests]
-            yield pd.DataFrame(out)
+    def lengths(batch) -> np.ndarray:
+        return np.array(
+            [
+                np.nan if h is None else float(len(extract_text(h)))
+                for h in batch.column("__html").to_pylist()
+            ],
+            dtype=np.float64,
+        )
 
-    return sdf.select(*group_cols, "__html", "__pid").mapInPandas(
-        fused, schema=out_schema
-    )
+    return _digest_partials(sdf, keys, lengths, delta, scale)
 
 
 WRAPPER_SUFFIX = "</p></body></html>"  # fixed tail emitted by the generator

@@ -155,7 +155,8 @@ def test_fd_drift_same_vs_rotated():
 
 def test_fd_sketch_by_bigint_keys_with_null_in_batch(spark):
     """Grouped FD build with float64-colliding bigint keys plus a NULL
-    key in the same batch: per-group sketches must not merge (pdkeys)."""
+    key in the same batch: per-group sketches must not merge (the Arrow
+    grouping kernel keeps keys typed)."""
     from tdigest_spark.fd import fd_sketch_by
 
     big = 1 << 53
@@ -168,3 +169,15 @@ def test_fd_sketch_by_bigint_keys_with_null_in_batch(spark):
     df = spark.createDataFrame(rows, "g long, v array<double>").coalesce(1)
     out = {r["g"]: r["n_rows"] for r in fd_sketch_by(df, "v", by=["g"], ell=4).collect()}
     assert out == {big: 1, big + 1: 2, None: 1}
+
+
+def test_fd_sketch_by_rejects_ragged_vectors(spark):
+    """Vectors of unequal length in one batch raise, even when their total
+    length divides evenly into rows (2+4+3+3 = 4 rows x 3) and a reshape
+    alone would silently build a sketch of the wrong matrix."""
+    from tdigest_spark.fd import fd_sketch_by
+
+    rows = [([1.0, 2.0],), ([1.0, 2.0, 3.0, 4.0],), ([1.0, 2.0, 3.0],), ([1.0, 2.0, 3.0],)]
+    df = spark.createDataFrame(rows, "v array<double>").coalesce(1)
+    with pytest.raises(Exception, match="differ in length"):
+        fd_sketch_by(df, "v", ell=4).collect()

@@ -166,7 +166,8 @@ def test_golden_log_fit_csv():
 
 def test_histogram_by_bigint_keys_with_null_in_batch(spark):
     """Grouped histogram with float64-colliding bigint keys plus a NULL
-    key in the same batch: groups must stay distinct (pdkeys)."""
+    key in the same batch: groups must stay distinct (the Arrow grouping
+    kernel keeps keys typed)."""
     from tdigest_spark.operators.histogram_ops import histogram_by
 
     big = 1 << 53
@@ -195,8 +196,8 @@ def test_histogram_rejects_nan_like_kll():
 
 
 def test_histogram_by_helper_name_collision(spark):
-    """A data column already named __gk_0 must not collide with the
-    pdkeys string-helper names."""
+    """A data column named like an internal helper (`__gk_0`, the old
+    string-helper name) is an ordinary group key."""
     from tdigest_spark.operators.histogram_ops import histogram_by
 
     rows = [(1, "a", 1.0), (1, "a", 2.0), (2, "b", 3.0)]

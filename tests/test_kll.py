@@ -100,7 +100,7 @@ def test_kll_by_spark(spark):
 def test_kll_by_bigint_keys_with_null_in_batch(spark):
     """Map-lane grouped KLL with float64-colliding bigint keys plus a
     NULL key in the same Arrow batch: groups must stay distinct
-    (the pdkeys string-helper discipline)."""
+    (the Arrow grouping kernel keeps keys typed)."""
     from tdigest_spark.kll import kll_by
 
     big = (1 << 53) + 1

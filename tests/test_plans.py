@@ -48,19 +48,37 @@ def test_grouped_digest_single_exchange(docs):
 
 def test_grouped_digest_map_combine_no_raw_shuffle(docs):
     """The DEFAULT grouped digest path (digest_by combine='map') never
-    shuffles raw rows: stage 1 is mapInPandas with zero upstream
+    shuffles raw rows: stage 1 is mapInArrow with zero upstream
     exchanges; the single exchange in the full plan carries only
     (group, digest) partial rows into the merge."""
     merged = digest.digest_by(docs, "n_chars", by=["lang"], delta=500.0)
     simple = explain_str(merged, "simple")
-    assert simple.count("MapInPandas") == 1
+    assert simple.count("MapInArrow") == 1
     # exactly one exchange in the WHOLE plan: the KB-row merge groupBy
     assert simple.count("Exchange") == 1
     # nothing between the scan and the python build stage shuffles
-    before_python = simple.split("MapInPandas")[1]
+    before_python = simple.split("MapInArrow")[1]
     assert "Exchange" not in before_python
     read = explain_str(merged).split("ReadSchema")[1][:200]
     assert "lang" in read and "n_chars" in read and "text" not in read
+
+
+@pytest.mark.parametrize("by", [["lang"], ["lang", "doc_id"], []])
+def test_map_build_input_is_keys_and_value_only(docs, by):
+    """The Arrow build ships only the key columns and the value: no
+    partition-id column (the partition id comes from the task) and no
+    string-helper copies of integer keys."""
+    partials = digest.build_partials_grouped(docs, "n_chars", by=by)
+    build = [
+        line for line in explain_str(partials, "simple").splitlines()
+        if "MapInArrow" in line
+    ]
+    assert len(build) == 1
+    arg = build[0].split("(", 1)[1].split(")#")[0]
+    assert "__pid" not in arg and "__gk_" not in arg
+    assert sorted(a.split("#")[0] for a in arg.split(", ")) == sorted(
+        [*by, "__td_value"]
+    )
 
 
 def test_grouped_kll_map_combine_no_raw_shuffle(lineitem):
@@ -70,18 +88,18 @@ def test_grouped_kll_map_combine_no_raw_shuffle(lineitem):
 
     sk = kll_by(lineitem, "l_extendedprice", by=["l_returnflag"], k=200)
     simple = explain_str(sk, "simple")
-    assert simple.count("MapInPandas") == 1
+    assert simple.count("MapInArrow") == 1
     assert simple.count("Exchange") == 1
-    assert "Exchange" not in simple.split("MapInPandas")[1]
+    assert "Exchange" not in simple.split("MapInArrow")[1]
 
 
 def test_partition_digest_no_shuffle(lineitem):
-    """The mapInPandas fast path builds partials with NO exchange at all —
+    """The mapInArrow fast path builds partials with NO exchange at all —
     only digest rows ever shuffle (in the separate merge stage)."""
     partials = digest.build_partials_per_partition(lineitem, "l_extendedprice")
     plan = explain_str(partials)
     assert "Exchange" not in plan
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
 
 
 def test_merge_shuffles_digest_rows_only(lineitem):
@@ -193,13 +211,13 @@ def test_histogram_merge_is_jvm_side(spark):
     ev = spark.read.parquet(f"{SF}/events.parquet")
     h = histogram_ops.histogram_by(ev, "value", 0.01, 500.0, by=["event_type"])
     plan = explain_str(h, "simple")
-    # python appears exactly once (stage-1 mapInPandas partial build, no
+    # python appears exactly once (stage-1 mapInArrow partial build, no
     # shuffle of raw rows); the merge is posexplode + sum, all JVM
-    assert plan.count("MapInPandas") == 1
+    assert plan.count("MapInArrow") == 1
     assert "FlatMapGroupsInPandas" not in plan
     assert "posexplode" in plan
     # the only exchanges carry (group, pos, cnt) partial rows
-    before_python = plan.split("MapInPandas")[1]
+    before_python = plan.split("MapInArrow")[1]
     assert "Exchange" not in before_python
 
 

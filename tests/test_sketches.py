@@ -336,7 +336,7 @@ def test_heavy_hitters_bigint_keys_with_null_in_batch(spark):
     """Grouped heavy hitters with float64-colliding bigint group keys and
     a NULL-key group in the same batch: the Misra-Gries candidates must
     carry exact keys or the exact-recount semi-join silently drops those
-    groups (pdkeys)."""
+    groups (the Arrow grouping kernel keeps keys typed)."""
     from tdigest_spark.sketches import heavy_hitters
 
     big = 1 << 53

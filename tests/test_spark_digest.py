@@ -15,6 +15,7 @@ from tdigest_spark.operators import (
     merge_partials,
     quantiles_of,
 )
+from tdigest_spark.operators.digest import build_partials_grouped
 
 from .conftest import SF_DIR
 from .util import quantile_ref
@@ -532,9 +533,9 @@ def test_percentile_enrich_bigint_keys_with_null_in_batch(spark):
 
 
 def test_build_partials_multi_bigint_keys_with_null_in_batch(spark):
-    """build_partials_multi groups pandas-side: bigint keys above 2^53
+    """build_partials_multi groups in Arrow: bigint keys above 2^53
     colliding under float64, sharing a batch with a NULL key, must stay
-    distinct groups (the pdkeys string-helper discipline)."""
+    distinct groups (the grouping kernel keeps keys typed)."""
     from tdigest_spark.operators.digest import (
         build_partials_multi, merge_partials,
     )
@@ -555,3 +556,89 @@ def test_build_partials_multi_bigint_keys_with_null_in_batch(spark):
     assert got[(big, "a")] == 1 and got[(big + 1, "a")] == 2
     assert got[(None, "a")] == 1
     assert got[(big, "b")] == 1 and got[(big + 1, "b")] == 2
+
+
+def _keyed_range(spark, n: int, parts: int):
+    """`n` rows in `parts` partitions: (id, lang string with NULLs,
+    k bigint above 2^53 with NULLs, v double with NULLs)."""
+    ident = F.col("id")
+    return spark.range(0, n, 1, parts).select(
+        "id",
+        F.element_at(
+            F.array(*map(F.lit, "abc"), F.lit(None).cast("string")),
+            (ident % 4 + 1).cast("int"),
+        ).alias("lang"),
+        F.when(ident % 5 == 0, F.lit(None))
+        .otherwise(F.lit(1 << 53) + ident % 3)
+        .alias("k"),
+        F.when(ident % 97 == 0, F.lit(None))
+        .otherwise(((ident * 7919) % 10007).cast("double"))
+        .alias("v"),
+    )
+
+
+def test_map_builders_one_partial_per_group_and_partition(spark):
+    """A NULL group key spread over several Arrow batches of one partition
+    is ONE group: every map-side builder emits exactly one partial row per
+    (group, partition), and the salt is the partition id."""
+    from tdigest_spark.operators.digest import build_partials_multi
+    from tdigest_spark.sources.webpages import extract_digest_partials
+
+    df = _keyed_range(spark, 40_000, 2)  # 20k rows = 2 batches per partition
+    n_v = sum(1 for i in range(40_000) if i % 97)  # rows with a value
+    html = df.select(
+        "lang", F.concat(F.lit("<p>"), F.col("v").cast("string"), F.lit("</p>"))
+        .cast("binary").alias("html"),
+    )
+    # (partials, unique row key, groups, values fed): 16 = lang x k groups
+    cases = [
+        (build_partials_grouped(df, "v", by=["lang", "k"]),
+         ("lang", "k"), 16, n_v),
+        (build_partials_multi(df, ["v", "id"], by=["lang", "k"]),
+         ("lang", "k", "col"), 32, n_v + 40_000),
+        (extract_digest_partials(html, by=["lang"]), ("lang",), 4, n_v),
+        (build_partials_per_partition(df, "v"), (), 1, n_v),
+        # float keys: NaN is one group, -0.0 and 0.0 are one group
+        (build_partials_grouped(df.withColumn("f", F.when(
+            F.col("id") % 3 == 0, F.lit(float("nan"))
+        ).otherwise(F.when(F.col("id") % 3 == 1, F.lit(-0.0)).otherwise(0.0))),
+            "v", by=["f"]), ("f",), 2, n_v),
+    ]
+    for partials, key, n_groups, n_fed in cases:
+        rows = partials.collect()
+        seen = [tuple(r[c] for c in (*key, "__td_salt")) for r in rows]
+        assert len(seen) == len(set(seen)) == 2 * n_groups, key
+        assert {r["__td_salt"] for r in rows} == {0, 1}
+        assert sum(r["n_rows"] for r in rows) == n_fed
+
+
+def test_grouped_partials_byte_identical_to_driver_feed(spark):
+    """Three Arrow batches (25k rows, one partition) with a string key
+    holding NULL and a bigint key above 2^53 holding NULL in the same
+    batch: each partial equals, byte for byte, a driver-side digest fed
+    that group's values batch by batch in row order."""
+    n, batch = 25_000, 10_000
+    parts = build_partials_grouped(
+        _keyed_range(spark, n, 1), "v", by=["lang", "k"]
+    ).collect()
+
+    ids = np.arange(n)
+    lang = np.array(["a", "b", "c", None], dtype=object)[ids % 4]
+    k = [None if i % 5 == 0 else (1 << 53) + i % 3 for i in range(n)]
+    v = np.where(ids % 97 == 0, np.nan, ((ids * 7919) % 10007).astype(float))
+    expect: dict[tuple, MergingDigest] = {}
+    for lo in range(0, n, batch):
+        rows: dict[tuple, list] = {}
+        for i in range(lo, min(lo + batch, n)):
+            rows.setdefault((lang[i], k[i]), []).append(v[i])
+        for g, vals in rows.items():
+            vals = np.asarray(vals)
+            d = expect.setdefault(g, MergingDigest(100.0))
+            if (~np.isnan(vals)).any():
+                d.add(vals[~np.isnan(vals)])
+    assert len(parts) == len(expect) == 16
+    for r in parts:
+        d = expect[(r["lang"], r["k"])]
+        assert bytes(r["digest"]) == d.to_bytes()
+        assert r["n_rows"] == d.total_weight
+        assert r["__td_salt"] == 0
