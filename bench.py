@@ -137,7 +137,7 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     # 1. global t-digest over lineitem: shuffle-free partial build
-    #    (mapInPandas per partition) + canonical merge + quantiles.
+    #    (mapInArrow per partition) + canonical merge + quantiles.
     #    min_parallelism rescues the LOCAL run only: the sf parquet is one
     #    unsplittable row group, which would pin the build to one Python
     #    worker; at real scale splits >> cores and this is a no-op.
@@ -168,7 +168,7 @@ def main() -> None:
     bench("tdigest_profile_3col", profile_digest)
 
     # 2a. grouped digest, DEFAULT map-side-combine path (zero raw-row
-    #     shuffle: stage 1 is mapInPandas partials per input partition)
+    #     shuffle: stage 1 is mapInArrow partials per input partition)
     def grouped_digest_map():
         partials = digest.build_partials_grouped(
             docs, "n_chars", by=["lang"], delta=200.0, min_parallelism=cpus
@@ -497,7 +497,7 @@ def main() -> None:
     def kll():
         from tdigest_spark.kll import kll_by, kll_quantile_udf
 
-        sk = kll_by(li, "l_extendedprice", by=["l_returnflag"], k=200, salt=8)
+        sk = kll_by(li, "l_extendedprice", by=["l_returnflag"], k=200)
         qudf = kll_quantile_udf()
         sk.select("l_returnflag", qudf(F.col("kll"), F.lit(0.99))).collect()
 
@@ -524,7 +524,7 @@ def main() -> None:
     )
 
     # 14. per-row percentile enrichment over the BIG table: map-combine
-    #     digest build + broadcast side channel + one mapInPandas scoring
+    #     digest build + broadcast side channel + one mapInArrow scoring
     #     scan through cdf_batch (zero corpus shuffle; count() keeps the
     #     timed region the full scoring scan without collecting 600k rows)
     bench(

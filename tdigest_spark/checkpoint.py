@@ -40,10 +40,11 @@ import hashlib
 import os
 from dataclasses import dataclass
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .core import MergingDigest
-from .operators.digest import DIGEST_FIELDS
+from .operators._arrow_groups import Counted, floats, map_groups
 from .scale import get_scale
 
 MANIFEST_SCHEMA = (
@@ -99,63 +100,40 @@ def _split_build_frame(
     scale: str,
 ) -> DataFrame:
     """One manifest row per pending split, built map-side: scan ->
-    mapInPandas keeping one digest per __split seen in the partition.
-    With whole-file partitions (caller raises maxPartitionBytes past the
-    largest file) every split completes inside one partition, so the
-    plan contains NO Exchange before the write — zero raw-row shuffle
-    (plan-asserted in tests/test_checkpoint.py)."""
-    import numpy as np
-    import pandas as pd
-    from typing import Iterator
+    `map_groups` keyed by __split, keeping one digest per split seen in
+    the partition.  With whole-file partitions (caller raises
+    maxPartitionBytes past the largest file) every split completes
+    inside one partition, so the plan contains NO Exchange before the
+    write — zero raw-row shuffle (plan-asserted in
+    tests/test_checkpoint.py)."""
+    from urllib.parse import unquote
 
-    d_scale = scale
     df = spark.read.parquet(*pending).select(
         F.col(value_col).cast("double").alias("__v"),
         F.input_file_name().alias("__split"),
     )
 
-    def build_splits(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from urllib.parse import unquote
+    def feed(state, data, rows: np.ndarray):
+        vals, splits = data
+        if state is None:
+            split_id = unquote(splits[int(rows[0])].as_py())
+            state = (split_id, Counted(MergingDigest(delta, scale=get_scale(scale))))
+        v = vals[rows]
+        state[1].add(v[~np.isnan(v)])
+        return state
 
-        digs: dict[str, MergingDigest] = {}
-        counts: dict[str, int] = {}
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            col = pdf["__v"].to_numpy(dtype=np.float64)
-            for split, idx in pdf.groupby("__split", sort=False).indices.items():
-                vals = col[idx]
-                vals = vals[~np.isnan(vals)]
-                dg = digs.get(split)
-                if dg is None:
-                    dg = digs[split] = MergingDigest(delta, scale=get_scale(d_scale))
-                    counts[split] = 0
-                if vals.size:
-                    dg.add(vals)
-                    counts[split] += int(vals.size)
-        if digs:
-            rows = []
-            for split, dg in digs.items():
-                blob = dg.to_bytes()
-                rows.append(
-                    (
-                        unquote(split),
-                        blob,
-                        counts[split],
-                        hashlib.sha256(blob).hexdigest(),
-                        float(delta),
-                        d_scale,
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "split_id", "digest", "n_rows",
-                    "digest_sha", "delta", "scale",
-                ],
-            )
+    def emit(state, pid: int):
+        split_id, s = state
+        blob = s.sketch.to_bytes()
+        sha = hashlib.sha256(blob).hexdigest()
+        return [(split_id, blob, s.n, sha, float(delta), scale)]
 
-    return df.mapInPandas(build_splits, schema=MANIFEST_SCHEMA)
+    return map_groups(
+        df, ["__split"], MANIFEST_SCHEMA,
+        prepare=lambda b: (floats(b.column("__v")), b.column("__split")),
+        feed=feed,
+        emit=emit,
+    ).drop("__split")
 
 
 def checkpointed_build(

@@ -248,68 +248,42 @@ def kll_by(
     (group, KB-sketch) partials do.  `combine="shuffle"`: salted
     groupBy build, the fallback for cardinality-explosive group keys
     (per-partition dict state would exceed memory).  `salt` only applies
-    to the shuffle path; mix of repeated values is irrelevant on the map
-    path because partitioning, not value hashing, spreads hot groups.
+    to the shuffle path (partitioning, not value hashing, spreads hot
+    groups on the map path): `salt > 1` with `combine="map"` raises
+    ValueError.  Both stages group in Arrow (`_arrow_groups`), so keys
+    stay typed.
     """
+    import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
+    from .operators._arrow_groups import (
+        floats, map_sketches, merged, reduce_groups, reduce_sketches,
+    )
+
+    if combine == "map" and salt > 1:
+        raise ValueError('salt applies only to combine="shuffle"')
     keys = list(by)
     value = F.col(value_col) if isinstance(value_col, str) else value_col
     sdf = df.select(*[F.col(c) for c in keys], value.cast("double").alias("__v"))
-
-    key_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in sdf.schema.fields
-        if f.name in keys
-    )
-    part_schema = ", ".join(
-        x for x in (key_schema, "__s int, kll binary, n_rows long") if x
-    )
-    out_schema = ", ".join(x for x in (key_schema, "kll binary, n_rows long") if x)
+    fields = "kll binary, n_rows long"
 
     if combine == "map":
-        from .operators._arrow_groups import floats, map_sketches
-
         partials = map_sketches(
             sdf, keys, lambda b: floats(b.column("__v")),
             new=lambda: KLL(k),
-            fields="__s int, kll binary, n_rows long",
+            fields=f"__s int, {fields}",
             emit=lambda sk, n, pid: (pid, sk.to_bytes(), n),
         )
     else:
-        if salt and salt > 1:
-            sdf = sdf.withColumn(
-                "__s", F.pmod(F.xxhash64(F.col("__v")), F.lit(salt)).cast("int")
-            )
-        else:
-            sdf = sdf.withColumn("__s", F.lit(0))
+        salt_col = F.pmod(F.xxhash64("__v"), F.lit(salt)).cast("int") if salt > 1 else F.lit(0)
+        sdf = sdf.withColumn("__s", salt_col)
+        partials = reduce_sketches(sdf, [*keys, "__s"], "__v", lambda: KLL(k), fields)
 
-        def build(pdf: pd.DataFrame) -> pd.DataFrame:
-            sk = KLL(k)
-            vals = pdf["__v"].to_numpy(dtype=np.float64)
-            vals = vals[~np.isnan(vals)]
-            if vals.size:
-                sk.add(vals)
-            row = {c: [pdf[c].iloc[0]] for c in keys}
-            row["__s"] = [int(pdf["__s"].iloc[0])]
-            row["kll"] = [sk.to_bytes()]
-            row["n_rows"] = [int(vals.size)]
-            return pd.DataFrame(row)
+    def merge(t) -> tuple:
+        sk = merged(t, "kll", "__s", KLL.from_bytes)
+        return sk.to_bytes(), pc.sum(t["n_rows"]).as_py()
 
-        partials = sdf.groupBy(*keys, "__s").applyInPandas(build, schema=part_schema)
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("__s", kind="stable")
-        sks = [KLL.from_bytes(b) for b in pdf["kll"]]
-        out = sks[0]
-        for s in sks[1:]:
-            out.merge(s)
-        row = {c: [pdf[c].iloc[0]] for c in keys}
-        row["kll"] = [out.to_bytes()]
-        row["n_rows"] = [int(pdf["n_rows"].sum())]
-        return pd.DataFrame(row)
-
-    return partials.groupBy(*keys).applyInPandas(merge, schema=out_schema)
+    return reduce_groups(partials, keys, fields, merge)
 
 
 def kll_stored_weight_udf():

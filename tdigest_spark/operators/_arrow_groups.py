@@ -1,4 +1,5 @@
-"""Map-side group -> sketch builds over ``DataFrame.mapInArrow``.
+"""Group -> sketch builds and merges over Arrow: ``mapInArrow`` map-side,
+``groupBy().applyInArrow`` for keyed reduces.
 
 Stage 1 of every mergeable sketch here (t-digest, log-histogram, KLL,
 Frequent Directions, Misra-Gries heavy-hitter candidates) has one shape:
@@ -15,6 +16,12 @@ are byte-identical to a row-ordered feed.  Keys stay typed from input to
 output: an int64 key above 2**53 next to a NULL never passes through
 float64 (pandas would round it), and the partition id comes from
 ``TaskContext`` rather than a shipped column.
+
+Stage 2 (and the salted shuffle build) is a keyed reduce:
+`reduce_groups` hands each group's rows to a function as one Arrow table
+and slices the output row's key values from that table, so a reduced key
+never passes through a Python or pandas value either (NaN stays NaN,
+NULL stays NULL).
 """
 
 from __future__ import annotations
@@ -33,6 +40,15 @@ from pyspark.sql.types import _parse_datatype_string
 _NAN = float("nan")
 
 
+def key_tuple(values: Iterable) -> tuple:
+    """`values` as the key tuple `split_groups` yields: NaN is `_NAN`.
+
+    Fold keys that crossed a pickle (a broadcast, say) on the worker:
+    unpickling makes each NaN a new object, and a closure that names
+    `_NAN` itself is pickled with its own copy."""
+    return tuple(_NAN if v != v else v for v in values)
+
+
 def _key_codes(col: pa.Array) -> tuple[np.ndarray, list]:
     """Dictionary codes of one key column and the Python key per code."""
     floating = pa.types.is_floating(col.type)
@@ -41,7 +57,7 @@ def _key_codes(col: pa.Array) -> tuple[np.ndarray, list]:
     enc = pc.dictionary_encode(col, null_encoding="encode")
     keys = enc.dictionary.to_pylist()
     if floating:
-        keys = [_NAN if k != k else k for k in keys]
+        keys = list(key_tuple(keys))
     return enc.indices.to_numpy().astype(np.int64), keys
 
 
@@ -73,6 +89,14 @@ def split_groups(
         yield tuple(vals[idx[rows[0]]] for idx, vals in cols), rows
 
 
+def _out_schema(sdf: DataFrame, keys: list, fields: str):
+    """(Spark, Arrow) schema of the `keys` columns as typed in `sdf`, then
+    `fields` (DDL)."""
+    key_ddl = [f"`{k}` {sdf.schema[k].dataType.simpleString()}" for k in keys]
+    schema = _parse_datatype_string(", ".join([*key_ddl, fields]))
+    return schema, to_arrow_schema(schema)
+
+
 def map_groups(
     sdf: DataFrame,
     keys: Sequence[str],
@@ -90,9 +114,7 @@ def map_groups(
     partition_id)`, each prefixed by the group's key values.  Output
     schema: the `keys` columns as typed in `sdf`, then `fields` (DDL)."""
     keys = list(keys)
-    key_ddl = [f"`{k}` {sdf.schema[k].dataType.simpleString()}" for k in keys]
-    schema = _parse_datatype_string(", ".join([*key_ddl, fields]))
-    arrow_schema = to_arrow_schema(schema)
+    schema, arrow_schema = _out_schema(sdf, keys, fields)
 
     def group_build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from pyspark import TaskContext
@@ -158,3 +180,57 @@ def map_sketches(
         sdf, keys, fields, values, feed,
         emit=lambda s, pid: [emit(s.sketch, s.n, pid)],
     )
+
+
+def reduce_groups(
+    sdf: DataFrame,
+    keys: Sequence[str],
+    fields: str,
+    reduce: Callable[[pa.Table], tuple],
+) -> DataFrame:
+    """groupBy(keys).applyInArrow emitting one row per group.
+
+    `reduce(table)` gets the group's rows as one Arrow table and returns
+    the row's `fields` values; the key values are sliced from the table,
+    typed as in `sdf`.  Output schema: the `keys` columns, then `fields`
+    (DDL)."""
+    keys = list(keys)
+    schema, arrow_schema = _out_schema(sdf, keys, fields)
+    out_fields = list(arrow_schema)
+    key_fields, value_fields = out_fields[: len(keys)], out_fields[len(keys) :]
+
+    def group_reduce(table: pa.Table) -> pa.Table:
+        cols = [table.column(f.name).slice(0, 1).cast(f.type) for f in key_fields]
+        cols += [pa.array([v], type=f.type) for v, f in zip(reduce(table), value_fields)]
+        return pa.Table.from_arrays(cols, schema=arrow_schema)
+
+    return sdf.groupBy(*keys).applyInArrow(group_reduce, schema)
+
+
+def reduce_sketches(
+    sdf: DataFrame,
+    keys: Sequence[str],
+    value: str,
+    new: Callable[[], Any],
+    fields: str,
+) -> DataFrame:
+    """`reduce_groups` building one sketch per group from the float
+    column `value`: `new()` is fed the group's non-NaN values in row
+    order, and the row is (serialized sketch, number of values)."""
+
+    def build(table: pa.Table) -> tuple:
+        v = floats(table.column(value))
+        s = Counted(new()).add(v[~np.isnan(v)])
+        return s.sketch.to_bytes(), s.n
+
+    return reduce_groups(sdf, keys, fields, build)
+
+
+def merged(table: pa.Table, blob: str, order: str, load: Callable[[bytes], Any]):
+    """The serialized sketches in column `blob`, loaded and merged in
+    ascending `order` (stable, so re-runs merge byte-identically)."""
+    blobs = table.sort_by(order).column(blob).to_pylist()
+    out = load(blobs[0])
+    for b in blobs[1:]:
+        out.merge(load(b))
+    return out

@@ -13,9 +13,13 @@ compress + quantile/cdf.  Spark-first mapping:
                        objects and each group's values reach `add` in row
                        order (build_partials_grouped; `by=()` is the
                        per-partition build)
-    stage 2 (merge):   groupBy(keys).applyInPandas(merge)
-                       — digests are ~8·delta bytes, so the shuffle moves
-                       KBs per group regardless of input size
+    stage 2 (merge):   groupBy(keys).applyInArrow (`reduce_groups`):
+                       each group's partials arrive as one Arrow table and
+                       merge in salt order; the key is sliced from that
+                       table, so it stays typed (NaN and NULL stay two
+                       groups) — digests are ~8·delta bytes, so the
+                       shuffle moves KBs per group regardless of input
+                       size
     evaluate:          scalar pandas UDFs over the digest column
                        (tdigest_quantile / tdigest_cdf / ...)
 
@@ -26,11 +30,12 @@ Scale notes (100 TB / 1000 executors):
   splits × groups rows, independent of input size.  A hot group (e.g.
   lang='en' at 60% of a trillion rows) is automatically spread over every
   input split, so there is no skewed reducer to salt away.
-- The salted groupBy path (`combine="shuffle"`) remains for cardinality-
-  explosive keys (e.g. group-by-user_id with 10^9 groups), where the
-  per-partition dict would exceed executor memory and partials would
-  outnumber raw rows.  With `salt=S` a skewed group splits into S
-  reducers; merge cost is S tiny digests.
+- The salted groupBy path (`combine="shuffle"`: `reduce_groups` over
+  (keys, salt)) remains for cardinality-explosive keys (e.g.
+  group-by-user_id with 10^9 groups), where the per-partition dict would
+  exceed executor memory and partials would outnumber raw rows.  With
+  `salt=S` a skewed group splits into S reducers; merge cost is S tiny
+  digests.
 - `build_partials_per_partition` is the ungrouped variant (`by=()`):
   each input split emits one digest row. This is the 100 TB fast path for
   global digests.
@@ -44,12 +49,16 @@ from __future__ import annotations
 from typing import Iterable, Iterator, Sequence
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from ..core import MergingDigest
 from ..scale import get_scale
-from ._arrow_groups import Counted, floats, map_groups, map_sketches
+from ._arrow_groups import (
+    Counted, floats, key_tuple, map_groups, map_sketches, merged,
+    reduce_groups, reduce_sketches, split_groups,
+)
 
 _VALUE = "__td_value"
 _SALT = "__td_salt"
@@ -73,14 +82,6 @@ def release_broadcasts() -> None:
             b.unpersist(blocking=True)
         except Exception:
             pass  # context already stopped
-
-
-def _build_digest(values: np.ndarray, delta: float, scale: str) -> MergingDigest:
-    d = MergingDigest(delta, scale=get_scale(scale))
-    vals = values[~np.isnan(values)]
-    if vals.size:
-        d.add(vals)
-    return d
 
 
 def build_partials(
@@ -112,7 +113,6 @@ def build_partials(
     proj = [F.col(k) for k in keys] + [value.cast("double").alias(_VALUE)]
     proj += [F.col(c) for c in salt_cols if c not in keys]
     sdf = df.select(*proj)
-    group_cols = list(keys)
     if salt and salt > 1:
         salt_inputs = [F.col(_VALUE)] + [F.col(c) for c in salt_cols]
         sdf = sdf.withColumn(
@@ -121,26 +121,11 @@ def build_partials(
     else:
         sdf = sdf.withColumn(_SALT, F.lit(0))
     sdf = sdf.drop(*[c for c in salt_cols if c not in keys])
-    group_cols.append(_SALT)
-
-    key_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in sdf.schema.fields
-        if f.name in keys
+    return reduce_sketches(
+        sdf, [*keys, _SALT], _VALUE,
+        new=lambda: MergingDigest(delta, scale=get_scale(scale)),
+        fields=DIGEST_FIELDS,
     )
-    out_schema = ", ".join(
-        x for x in (key_schema, f"{_SALT} int", DIGEST_FIELDS) if x
-    )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        vals = pdf[_VALUE].to_numpy(dtype=np.float64)
-        d = _build_digest(vals, delta, scale)
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row[_SALT] = [pdf[_SALT].iloc[0]]
-        row["digest"] = [d.to_bytes()]
-        row["n_rows"] = [int(np.count_nonzero(~np.isnan(vals)))]
-        return pd.DataFrame(row)
-
-    return sdf.groupBy(*group_cols).applyInPandas(build, schema=out_schema)
 
 
 def _digest_partials(sdf: DataFrame, keys, values, delta: float, scale: str):
@@ -293,42 +278,18 @@ def merge_partials(
     pass touches only `fanin` rows.
     """
     keys = list(by)
-    key_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in partials.schema.fields
-        if f.name in keys
-    )
-    out_schema = ", ".join(x for x in (key_schema, f"{_SALT} int", DIGEST_FIELDS) if x)
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(_SALT, kind="stable")
-        digests = [MergingDigest.from_bytes(b) for b in pdf["digest"]]
-        out = digests[0]
-        for d in digests[1:]:
-            out.merge(d)
-        row = {k: [pdf[k].iloc[0]] for k in keys}
-        row[_SALT] = [int(pdf[_SALT].min())]
-        row["digest"] = [out.to_bytes()]
-        row["n_rows"] = [int(pdf["n_rows"].sum())]
-        return pd.DataFrame(row)
+    def merge(t: pa.Table) -> tuple:
+        d = merged(t, "digest", _SALT, MergingDigest.from_bytes)
+        return pc.min(t[_SALT]).as_py(), d.to_bytes(), pc.sum(t["n_rows"]).as_py()
 
     cur = partials
     if stages > 1:
-        bucket_keys = keys + ["__bucket"]
         cur = cur.withColumn("__bucket", F.pmod(F.col(_SALT), F.lit(fanin)))
-        bschema = ", ".join(
-            x for x in (key_schema, "__bucket int", f"{_SALT} int", DIGEST_FIELDS) if x
-        )
-
-        def merge_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-            out = merge(pdf.drop(columns=["__bucket"]))
-            out["__bucket"] = pdf["__bucket"].iloc[0]
-            return out[[*keys, "__bucket", _SALT, "digest", "n_rows"]]
-
-        cur = cur.groupBy(*bucket_keys).applyInPandas(merge_bucket, schema=bschema)
-        cur = cur.drop("__bucket")
-
-    merged = cur.groupBy(*keys).applyInPandas(merge, schema=out_schema)
-    return merged.drop(_SALT)
+        cur = reduce_groups(
+            cur, [*keys, "__bucket"], f"{_SALT} int, {DIGEST_FIELDS}", merge
+        ).drop("__bucket")
+    return reduce_groups(cur, keys, DIGEST_FIELDS, lambda t: merge(t)[1:])
 
 
 def digest_by(
@@ -345,7 +306,11 @@ def digest_by(
     `combine="map"` (default): map-side-combining build — zero raw-row
     shuffle, the 100 TB path.  `combine="shuffle"`: salted groupBy build —
     the fallback for cardinality-explosive group keys (see module doc).
+    `salt` splits groups only on the shuffle path; `salt > 1` with
+    `combine="map"` raises ValueError.
     """
+    if combine == "map" and salt > 1:
+        raise ValueError('salt applies only to combine="shuffle"')
     if combine == "map" and by:
         partials = build_partials_grouped(df, value_col, by=by, delta=delta, scale=scale)
     elif combine == "map":
@@ -547,25 +512,27 @@ def percentile_enrich(
     Plan shape (the 100 TB path): one map-side-combining digest build
     (KB partials, zero raw-row shuffle), then the digest table — KB per
     group — travels to workers as an `sc.broadcast` SIDE CHANNEL into a
-    single mapInPandas over the corpus.  The corpus is scanned exactly
+    single mapInArrow over the corpus.  The corpus is scanned exactly
     twice and shuffled ZERO times, and the digest bytes are materialized
     once per executor, NOT copied per row — deliberately not a broadcast
     join, which would clone the KB digest blob onto every joined row
     (the pq_topk lesson: join-output row-copy moved ~100 GB through a
-    6.4M-row join).  Per Arrow batch the rows group in pandas and score
-    through the vectorized `cdf_batch` lane (bit-identical to scalar
-    `cdf`, tests/test_core.py).
+    6.4M-row join).  Each Arrow batch splits by key in Arrow
+    (`_arrow_groups.split_groups`), scores through the vectorized
+    `cdf_batch` lane (bit-identical to scalar `cdf`, tests/test_core.py)
+    and leaves with `out_col` appended: the incoming columns pass
+    through untouched, never through pandas.
 
     Pass `digests` (a `digest_by`/`merge_partials` table with columns
     (*by, digest)) to score against a FROZEN snapshot — e.g. last
     crawl's checkpointed sketches — instead of rebuilding; rows whose
     group is absent from it get NULL.  In frozen mode the operator is a
-    STATELESS mapInPandas, so it runs unchanged on a streaming
+    STATELESS mapInArrow, so it runs unchanged on a streaming
     DataFrame (the monitoring face: score arriving rows against last
-    crawl's distribution; chunking-invariant — tests/test_streaming.py).  NULL group keys are groups like
-    any other (groupBy semantics).  NULL / non-finite values yield NULL
-    (finite probes on a non-empty digest never produce NaN, so NaN is
-    an unambiguous missing-marker internally).
+    crawl's distribution; chunking-invariant — tests/test_streaming.py).
+    NULL group keys are groups like any other (groupBy semantics), and
+    a NaN key is a group distinct from NULL.  NULL / non-finite values
+    yield NULL.
 
     Reference parity: cdf semantics per TDigest.jl:430-544
     (defect-corrected, SURVEY §2.3); the enrichment shape itself is the
@@ -580,102 +547,39 @@ def percentile_enrich(
     # the side channel is for distribution-like keys (lang, source,
     # day — up to ~10^5 KB-sized digests); limit() caps what the driver
     # ever pulls, so a groupBy-user_id mistake raises instead of OOMing.
-    rows = digests.select(*by, "digest").limit(max_groups + 1).collect()
+    # Arrow on both sides of the channel: the table's keys are the same
+    # Python values split_groups derives from a batch.
+    rows = digests.select(*by, "digest").limit(max_groups + 1).toArrow().to_pylist()
     if len(rows) > max_groups:
         raise ValueError(
             f"percentile_enrich: more than max_groups={max_groups} groups; "
             "a digest side channel this large should not broadcast — "
             "reduce the key cardinality or raise max_groups deliberately"
         )
-
-    def _norm_key(k):
-        # NaN float group keys: nan != nan would miss every dict lookup,
-        # and pandas floats NULL-able numeric keys anyway — fold both
-        # sides of the channel to None
-        return None if isinstance(k, float) and np.isnan(k) else k
-
-    # integer group keys travel as STRING helper columns: an int64 batch
-    # containing one NULL arrives in pandas as float64, silently rounding
-    # keys above 2^53 (hash-derived bigints live there) onto wrong or
-    # missing table entries.  Spark's long->string cast is plain decimal
-    # digits, matching Python str(int) exactly, so strings are lossless.
-    int_types = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
-    field_types = {f.name: f.dataType for f in df.schema.fields}
-    helper = {
-        c: f"__pe_key_{i}"
-        for i, c in enumerate(by)
-        if isinstance(field_types.get(c), int_types)
-    }
-    group_cols = [helper.get(c, c) for c in by]
-
-    def _table_key(r) -> tuple:
-        out = []
-        for c in by:
-            v = _norm_key(r[c])
-            if c in helper and v is not None:
-                v = str(v)
-            out.append(v)
-        return tuple(out)
-
     table = {
-        _table_key(r): bytes(r["digest"])
-        for r in rows
-        if r["digest"] is not None
+        tuple(r[c] for c in by): r["digest"] for r in rows if r["digest"] is not None
     }
     bc = df.sparkSession.sparkContext.broadcast(table)
     _BROADCASTS.append(bc)
     out_schema = T.StructType(
         list(df.schema.fields) + [T.StructField(out_col, T.DoubleType(), True)]
     )
-    src = df
-    if helper:
-        src = df.select(
-            "*", *[F.col(c).cast("string").alias(h) for c, h in helper.items()]
-        )
 
-    def _norm(k):
-        # pandas group keys: NaN for NULL numeric keys (None for object),
-        # numpy scalars for the rest; collect() gave None / python values.
-        if k is None or (isinstance(k, float) and np.isnan(k)):
-            return None
-        return k.item() if hasattr(k, "item") else k
-
-    helper_names = list(helper.values())
-
-    def enrich(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def enrich(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # NaN keys match by identity: fold them to split_groups' NaN
+        tbl = {key_tuple(key): blob for key, blob in bc.value.items()}
         cache: dict[tuple, MergingDigest] = {}
-        tbl = bc.value
-        for pdf in batches:
-            n = len(pdf)
-            out = np.full(n, np.nan)
-            vals = pd.to_numeric(pdf[value_col], errors="coerce").to_numpy(
-                dtype=np.float64, na_value=np.nan
-            )
-            if by:
-                groups = pdf.groupby(group_cols, dropna=False, sort=False).indices
-            else:
-                groups = {(): np.arange(n)}
-            for key, idx in groups.items():
-                kt = key if isinstance(key, tuple) else (key,)
-                kt = tuple(_norm(k) for k in kt)
-                d = cache.get(kt)
-                if d is None:
-                    blob = tbl.get(kt)
-                    if blob is None:
-                        continue
-                    d = MergingDigest.from_bytes(blob)
-                    cache[kt] = d
-                v = vals[idx]
-                mask = np.isfinite(v)
-                if mask.any():
-                    res = np.full(v.shape, np.nan)
-                    res[mask] = d.cdf_batch(v[mask])
-                    out[idx] = res
-            res_pdf = (
-                pdf.drop(columns=helper_names) if helper_names else pdf.copy()
-            )
-            # nullable Float64 maps NaN -> NULL on the Arrow wire
-            res_pdf[out_col] = pd.array(out, dtype="Float64")
-            yield res_pdf
+        for batch in batches:
+            vals = floats(batch.column(value_col))
+            out = np.full(batch.num_rows, np.nan)
+            for key, idx in split_groups(batch, by):
+                if key not in cache:
+                    blob = tbl.get(key)
+                    cache[key] = None if blob is None else MergingDigest.from_bytes(blob)
+                idx = idx[np.isfinite(vals[idx])]
+                if cache[key] is not None and idx.size:
+                    out[idx] = cache[key].cdf_batch(vals[idx])
+            # NaN (missing group or value) -> NULL on the wire
+            yield batch.append_column(out_col, pa.array(out, from_pandas=True))
 
-    return src.mapInPandas(enrich, out_schema)
+    return df.mapInArrow(enrich, out_schema)

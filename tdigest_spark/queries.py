@@ -192,7 +192,7 @@ def q_percentile_enrich_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row within-group percentile (operators/digest.py:
     percentile_enrich): every document scored with the cdf of its own
     n_chars in its language's digest — broadcast side-channel + one
-    mapInPandas, zero corpus shuffle (test_plans.py).  Singleton regime
+    mapInArrow, zero corpus shuffle (test_plans.py).  Singleton regime
     -> bit-exact against the windowed SQL: generic (below + eq/2)/n with
     the reference's ==max precedence (1 - 0.5/n even when the max is
     tied; cdf branch order, core.py:520-537)."""
@@ -513,7 +513,7 @@ def _rank_err_ok(
 
 def q_tdigest_lineitem_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """APPROXIMATE-regime gate: global digest over 60k+ rows at delta=100
-    (compaction fully engaged) through the shuffle-free mapInPandas fast
+    (compaction fully engaged) through the shuffle-free mapInArrow fast
     path.  Emits, per q: the digest's total weight (must equal the exact
     row count — ingest completeness) and whether the estimate's exact
     rank is within the t-digest bound (1/delta).  The oracle computes the
@@ -657,7 +657,7 @@ def q_kll_quantiles_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .kll import kll_by, kll_quantile_udf
 
     docs = load_table(spark, sf_dir, "documents")
-    sk = kll_by(docs, "n_chars", by=["lang"], k=KLL_EXACT_K, salt=2)
+    sk = kll_by(docs, "n_chars", by=["lang"], k=KLL_EXACT_K)
     qudf = kll_quantile_udf()
     out = sk.select(
         "lang",

@@ -156,7 +156,7 @@ def test_unreadable_manifest_propagates(spark, tmp_path):
 
 def test_split_build_plan_has_no_exchange(spark, tmp_path):
     """The per-split checkpoint build must not shuffle raw rows: scan ->
-    mapInPandas -> (manifest rows).  The previous groupBy(__split) shape
+    mapInArrow -> (manifest rows).  The previous groupBy(__split) shape
     shuffled the entire input."""
     import pyspark.sql.functions as F
 

@@ -84,7 +84,7 @@ def test_kll_by_spark(spark):
         ("b", float(v)) for v in rng.uniform(100, 200, 1500)
     ]
     df = spark.createDataFrame(rows, "g string, x double")
-    sk = kll_by(df, "x", by=["g"], k=200, salt=4)
+    sk = kll_by(df, "x", by=["g"], k=200)
     qudf = kll_quantile_udf()
     got = {
         r["g"]: r

@@ -2,6 +2,8 @@
 digest over the same values (byte-identical in the canonical path), and
 quantiles match the exact oracle in the singleton regime."""
 
+import math
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -55,8 +57,8 @@ def test_grouped_digest_singleton_exact(spark):
 
 def test_salted_build_same_result_in_singleton_regime(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plain = digest_by(docs, "n_chars", by=["lang"], delta=500, salt=0)
-    salted = digest_by(docs, "n_chars", by=["lang"], delta=500, salt=8)
+    plain = digest_by(docs, "n_chars", by=["lang"], delta=500, salt=0, combine="shuffle")
+    salted = digest_by(docs, "n_chars", by=["lang"], delta=500, salt=8, combine="shuffle")
     a = {r["lang"]: bytes(r["digest"]) for r in plain.collect()}
     b = {r["lang"]: bytes(r["digest"]) for r in salted.collect()}
     # singleton regime: pure multiset union -> byte-identical however split
@@ -511,25 +513,66 @@ def test_percentile_enrich_nan_group_key(spark):
 
 
 def test_percentile_enrich_bigint_keys_with_null_in_batch(spark):
-    """Integer group keys above 2^53 sharing a batch with a NULL key:
-    pandas would float64 the column and round the keys — the string
-    helper-key path keeps them exact."""
+    """Integer columns above 2^53 sharing a batch with a NULL: pandas
+    would float64 them and round.  The batch is split and passed through
+    in Arrow, so the key groups stay exact and a non-key bigint column
+    comes back unchanged."""
     big = (1 << 53) + 1  # 9007199254740993, not representable in float64
     rows = [
-        (1, big, 10.0),
-        (2, big, 20.0),
-        (3, None, 7.0),
-        (4, (1 << 53) - 1, 5.0),
+        (1, big, 10.0, big),
+        (2, big, 20.0, None),
+        (3, None, 7.0, big),
+        (4, (1 << 53) - 1, 5.0, None),
     ]
     from tdigest_spark.operators import percentile_enrich
 
-    df = spark.createDataFrame(rows, "id long, g long, v double").coalesce(1)
+    df = spark.createDataFrame(rows, "id long, g long, v double, p long").coalesce(1)
+    out = percentile_enrich(df, "v", by=["g"], delta=100.0).collect()
+    got = {r["id"]: r["percentile"] for r in out}
+    assert got[1] == 0.25 and got[2] == 0.75   # the big-key group works
+    assert got[3] == 0.5 and got[4] == 0.5     # NULL group + neighbor key
+    assert sorted(tuple(r)[:4] for r in out) == rows  # pass-through exact
+
+
+def test_nan_and_null_keys_stay_distinct_groups(spark):
+    """A double key with NaN rows and NULL rows in one batch: every
+    grouped build+merge lane returns a NaN group and a NULL group with
+    their own row counts, and percentile_enrich scores the NULL rows
+    against the NULL group's digest."""
+    from tdigest_spark.kll import kll_by
+    from tdigest_spark.operators import percentile_enrich
+
+    nan = float("nan")
+    rows = [(1, nan, 1.0), (2, nan, 2.0),
+            (3, None, 100.0), (4, None, 200.0), (5, None, 300.0),
+            (6, 1.0, 5.0)]
+    df = spark.createDataFrame(rows, "id long, g double, v double").coalesce(1)
+
+    def counts(frame):
+        out = {}
+        for r in frame.collect():
+            g = r["g"]
+            out["nan" if g is not None and math.isnan(g) else g] = r["n_rows"]
+        return out
+
+    expect = {"nan": 2, None: 3, 1.0: 1}
+    lanes = {
+        "map": merge_partials(build_partials_grouped(df, "v", by=["g"]), by=["g"]),
+        "salted": merge_partials(build_partials(df, "v", by=["g"], salt=4), by=["g"]),
+        "two-stage": merge_partials(
+            build_partials(df, "v", by=["g"], salt=4), by=["g"], fanin=2, stages=2
+        ),
+        "kll": kll_by(df, "v", by=["g"], combine="shuffle", salt=4),
+        "kll-map": kll_by(df, "v", by=["g"]),
+    }
+    for lane, frame in lanes.items():
+        assert counts(frame) == expect, lane
     got = {
         r["id"]: r["percentile"]
         for r in percentile_enrich(df, "v", by=["g"], delta=100.0).collect()
     }
-    assert got[1] == 0.25 and got[2] == 0.75   # the big-key group works
-    assert got[3] == 0.5 and got[4] == 0.5     # NULL group + neighbor key
+    assert (got[3], got[4], got[5]) == (1 / 6, 1 / 2, 5 / 6)
+    assert (got[1], got[2], got[6]) == (0.25, 0.75, 0.5)
 
 
 def test_build_partials_multi_bigint_keys_with_null_in_batch(spark):
