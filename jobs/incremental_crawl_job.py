@@ -70,6 +70,36 @@ def build_parser() -> argparse.ArgumentParser:
     return ap
 
 
+def reusable_batch_id(candidates, read_sidecar, new_snapshot):
+    """The previous batch id a rerun of ``new_snapshot`` may reuse, as
+    ``(batch_id, verified)``; ``(None, False)`` when none may.
+
+    Identity is only a 48-bit hash prefix; before reusing an id (and
+    thereby excluding that batch's signatures from the dedup read +
+    overwriting its dir) verify the FULL snapshot string against the
+    batch's _snapshot sidecar (``read_sidecar(cand)``: bytes, or None
+    when absent).  Scan ALL same-suffix candidates (newest first), not
+    just the max: after a real suffix collision there are several
+    batches with this suffix and only the one whose sidecar matches is
+    OUR previous write — picking max() would make a rerun of the
+    EARLIER snapshot mistake the collider's batch for foreign, allocate
+    a fresh id, keep its own old signatures in the dedup read, and
+    self-dedup to an empty output.  A pre-sidecar batch (no _snapshot
+    file) is reused only when it is the sole unverified candidate: with
+    two or more, nothing says which one is ours.
+    """
+    unverified = []
+    for cand in sorted(candidates, reverse=True):
+        side = read_sidecar(cand)
+        if side is None:
+            unverified.append(cand)
+        elif side.decode("utf-8") == new_snapshot:
+            return cand, True
+    if len(unverified) == 1:
+        return unverified[0], False
+    return None, False
+
+
 def run(spark, args) -> dict:
     """The whole job on a CALLER-provided session; returns the report
     dict main() prints.  Importable so a driver program (or a test) can
@@ -183,32 +213,14 @@ def run(spark, args) -> dict:
             )
             return (nxt << _HASH_BITS) | suffix
 
-        # Identity is only a 48-bit hash prefix; before reusing an id
-        # (and thereby excluding that batch's signatures from the dedup
-        # read + overwriting its dir) verify the FULL snapshot string
-        # against the batch's _snapshot sidecar.  Scan ALL same-suffix
-        # candidates (newest first), not just the max: after a real
-        # suffix collision there are several batches with this suffix
-        # and only the one whose sidecar matches is OUR previous write —
-        # picking max() would make a rerun of the EARLIER snapshot
-        # mistake the collider's batch for foreign, allocate a fresh id,
-        # keep its own old signatures in the dedup read, and self-dedup
-        # to an empty output.  A pre-sidecar batch (no _snapshot file)
-        # is reused only when it is the sole candidate, with the
-        # decision logged.
-        batch_id = None
-        unverified = []
-        for cand in sorted(same_snapshot, reverse=True):
-            side = _fs_read_bytes(
+        batch_id, verified = reusable_batch_id(
+            same_snapshot,
+            lambda cand: _fs_read_bytes(
                 spark, f"{args.index_dir}/batch={cand:020d}__dir/_snapshot"
-            )
-            if side is None:
-                unverified.append(cand)
-            elif side.decode("utf-8") == args.new_snapshot:
-                batch_id = cand
-                break
-        if batch_id is None and unverified:
-            batch_id = max(unverified)
+            ),
+            args.new_snapshot,
+        )
+        if batch_id is not None and not verified:
             print(
                 json.dumps({
                     "info": "reusing batch id by 48-bit suffix "

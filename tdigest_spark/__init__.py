@@ -42,6 +42,9 @@ Public surface:
 - checkpoint: resumable per-split digest builds with lineage
 """
 
+# first: every Python worker that unpickles a library function imports
+# this package, and later tasks in that worker skip the zip re-reads
+from . import _zipcache  # noqa: F401
 from .core import MergingDigest, merge_all
 from .fd import FrequentDirections
 from .histogram import LogHistogram, SignedLogHistogram

@@ -21,6 +21,7 @@ and a local-only read would declare every remote manifest missing.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 from typing import Sequence
@@ -115,13 +116,16 @@ def _fs_write_bytes(spark: SparkSession, path: str, data: bytes) -> None:
     )
     stream = fs.create(tmp, True)
     try:
-        stream.write(data)
-    except BaseException:
+        try:
+            stream.write(data)
+        except BaseException:
+            with contextlib.suppress(Exception):
+                stream.close()  # the write error is the one to report
+            raise
         stream.close()
+    except BaseException:
         fs.delete(tmp, False)  # do not leak a uuid temp per failed write
         raise
-    else:
-        stream.close()
     if fs.exists(jp):
         fs.delete(jp, False)
     if not fs.rename(tmp, jp):

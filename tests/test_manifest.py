@@ -60,3 +60,42 @@ def test_write_observed_partitioned(spark, tmp_path):
     back = spark.read.parquet(out)
     assert back.count() == m["rows"]
     assert read_manifest(out)["rows"] == m["rows"]
+
+
+def test_fs_write_bytes_failed_close_still_deletes_temp(monkeypatch):
+    """A write that fails and whose close() fails too: the temp file is
+    deleted and the WRITE error is the one raised, not the close error."""
+    from types import SimpleNamespace
+
+    from tdigest_spark.sources import manifest
+
+    class Stream:
+        def write(self, data):
+            raise IOError("write failed")
+
+        def close(self):
+            raise IOError("close failed")
+
+    class FS:
+        def __init__(self):
+            self.created, self.deleted = [], []
+
+        def create(self, path, overwrite):
+            self.created.append(path)
+            return Stream()
+
+        def delete(self, path, recursive):
+            self.deleted.append(path)
+            return True
+
+    fs = FS()
+    monkeypatch.setattr(manifest, "_fs_path", lambda spark, path: (fs, path))
+    hadoop_fs = SimpleNamespace(Path=lambda p: p)
+    spark = SimpleNamespace(_jvm=SimpleNamespace(
+        org=SimpleNamespace(apache=SimpleNamespace(
+            hadoop=SimpleNamespace(fs=hadoop_fs)))))
+    with pytest.raises(IOError, match="write failed"):
+        manifest._fs_write_bytes(spark, "/out/_manifest.json", b"{}")
+    assert len(fs.created) == 1
+    assert fs.created[0].startswith("/out/_manifest.json.inprogress.")
+    assert fs.deleted == fs.created

@@ -255,6 +255,23 @@ def test_incremental_crawl_job_two_months(spark, tmp_path):
         assert open(side).read() == snap
 
 
+def test_incremental_crawl_batch_id_reuse_rule():
+    """Batch-id reuse by 48-bit suffix: a sidecar-verified candidate wins
+    wherever it sorts; an unverified (pre-sidecar) one is reused only as
+    the sole unverified candidate; two unverified give no reuse."""
+    choose = load_job("incremental_crawl_job").reusable_batch_id
+    snap = "/data/crawl_2026_01"
+    sidecars = {3: b"/data/other", 2: snap.encode(), 1: None, 5: None, 4: None}
+    read = sidecars.get
+    assert choose([], read, snap) == (None, False)
+    assert choose([1, 2, 3], read, snap) == (2, True)
+    assert choose([1], read, snap) == (1, False)
+    assert choose([1, 3], read, snap) == (1, False)   # 3 is foreign
+    assert choose([3], read, snap) == (None, False)
+    assert choose([1, 5], read, snap) == (None, False)
+    assert choose([4, 5, 3], read, snap) == (None, False)
+
+
 @pytest.mark.slow
 def test_corpus_pipeline_distill_classifier(spark, tmp_path):
     """--distill-classifier: weak labels from the within-lang NLL

@@ -129,6 +129,15 @@ def main() -> None:
                     complete = True
             except Exception:
                 complete = False
+        if not complete:
+            # rewrite the whole generation: a stale or stray part
+            # file left in place would be read back with the new ones,
+            # and a leftover marker would certify a half-rewritten cache
+            for f in part_files:
+                os.remove(os.path.join(corpus_dir, f))
+            if os.path.isfile(marker):
+                os.remove(marker)
+            os.makedirs(corpus_dir, exist_ok=True)
         parts = []
         for f in range(n_files):
             lo, hi = f * CHUNK, min((f + 1) * CHUNK, args.rows)
@@ -136,7 +145,6 @@ def main() -> None:
             parts.append(Xc)
             path = os.path.join(corpus_dir, f"part{f:04d}.parquet")
             if not complete:
-                os.makedirs(corpus_dir, exist_ok=True)
                 t = pa.table({
                     "vec_id": pa.array(np.arange(lo, hi, dtype=np.int64)),
                     "embedding": pa.FixedSizeListArray.from_arrays(
