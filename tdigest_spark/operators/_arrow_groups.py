@@ -62,10 +62,10 @@ def _key_codes(col: pa.Array) -> tuple[np.ndarray, list]:
 
 
 def split_groups(
-    batch: pa.RecordBatch, keys: Sequence[str]
+    keys: Sequence[pa.Array], n: int
 ) -> Iterator[tuple[tuple, np.ndarray]]:
-    """(key tuple, ascending row indices) for each group in `batch`."""
-    n = batch.num_rows
+    """(key tuple, ascending row indices) for each group of `n` rows keyed
+    by the arrays `keys`."""
     if not keys:
         yield (), np.arange(n)
         return
@@ -73,7 +73,7 @@ def split_groups(
     radix = 1
     cols = []
     for k in keys:
-        idx, vals = _key_codes(batch.column(k))
+        idx, vals = _key_codes(k)
         if radix * len(vals) >= 1 << 62:  # re-densify before overflow
             _, codes = np.unique(codes, return_inverse=True)
             radix = int(codes.max()) + 1
@@ -124,7 +124,8 @@ def map_groups(
             if not batch.num_rows:
                 continue
             data = prepare(batch)
-            for key, rows in split_groups(batch, keys):
+            key_cols = [batch.column(k) for k in keys]
+            for key, rows in split_groups(key_cols, batch.num_rows):
                 states[key] = feed(states.get(key), data, rows)
         pid = TaskContext.get().partitionId()
         out = [(*k, *row) for k, s in states.items() for row in emit(s, pid)]

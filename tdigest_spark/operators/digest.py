@@ -21,7 +21,10 @@ compress + quantile/cdf.  Spark-first mapping:
                        shuffle moves KBs per group regardless of input
                        size
     evaluate:          scalar pandas UDFs over the digest column
-                       (tdigest_quantile / tdigest_cdf / ...)
+                       (tdigest_quantile / tdigest_cdf / ...); per-row
+                       scoring (percentile_enrich) is one scalar Arrow
+                       UDF over the key and value columns only — the rest
+                       of the row stays in the JVM
 
 Scale notes (100 TB / 1000 executors):
 - The DEFAULT grouped path (`digest_by(combine="map")`) shuffles ZERO raw
@@ -46,7 +49,7 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Sequence
+from typing import Iterable, Iterator, Sequence, Tuple
 
 import numpy as np
 import pyarrow as pa
@@ -512,35 +515,46 @@ def percentile_enrich(
     Plan shape (the 100 TB path): one map-side-combining digest build
     (KB partials, zero raw-row shuffle), then the digest table — KB per
     group — travels to workers as an `sc.broadcast` SIDE CHANNEL into a
-    single mapInArrow over the corpus.  The corpus is scanned exactly
-    twice and shuffled ZERO times, and the digest bytes are materialized
-    once per executor, NOT copied per row — deliberately not a broadcast
-    join, which would clone the KB digest blob onto every joined row
-    (the pq_topk lesson: join-output row-copy moved ~100 GB through a
-    6.4M-row join).  Each Arrow batch splits by key in Arrow
-    (`_arrow_groups.split_groups`), scores through the vectorized
-    `cdf_batch` lane (bit-identical to scalar `cdf`, tests/test_core.py)
-    and leaves with `out_col` appended: the incoming columns pass
-    through untouched, never through pandas.
+    single scalar Arrow UDF over the corpus.  The corpus is scanned
+    exactly twice and shuffled ZERO times, and the digest bytes are
+    materialized once per executor, NOT copied per row — deliberately
+    not a broadcast join, which would clone the KB digest blob onto
+    every joined row (the pq_topk lesson: join-output row-copy moved
+    ~100 GB through a 6.4M-row join).  Only the `by` and `value_col`
+    columns cross to Python (ArrowEvalPython holds the rest of each row
+    in the JVM) and one double per row comes back as `out_col`.  Each
+    Arrow batch splits by key in Arrow (`_arrow_groups.split_groups`)
+    and scores through the vectorized `cdf_batch` lane (bit-identical to
+    scalar `cdf`, tests/test_core.py); no column passes through pandas.
 
     Pass `digests` (a `digest_by`/`merge_partials` table with columns
-    (*by, digest)) to score against a FROZEN snapshot — e.g. last
+    (*by, digest), one row per group — a duplicated group raises
+    ValueError) to score against a FROZEN snapshot — e.g. last
     crawl's checkpointed sketches — instead of rebuilding; rows whose
     group is absent from it get NULL.  In frozen mode the operator is a
-    STATELESS mapInArrow, so it runs unchanged on a streaming
+    STATELESS scalar UDF, so it runs unchanged on a streaming
     DataFrame (the monitoring face: score arriving rows against last
     crawl's distribution; chunking-invariant — tests/test_streaming.py).
     NULL group keys are groups like any other (groupBy semantics), and
     a NaN key is a group distinct from NULL.  NULL / non-finite values
-    yield NULL.
+    yield NULL.  An `out_col` already in `df` raises ValueError (in any
+    letter case unless spark.sql.caseSensitive is true, as Spark
+    resolves names).
 
     Reference parity: cdf semantics per TDigest.jl:430-544
     (defect-corrected, SURVEY §2.3); the enrichment shape itself is the
     distribution layer feeding the pipeline, no reference counterpart.
     """
-    from pyspark.sql import types as T
-
     by = list(by)
+    name_key = (
+        str if df.sparkSession.conf.get("spark.sql.caseSensitive").lower() == "true"
+        else str.lower
+    )
+    if name_key(out_col) in {name_key(c) for c in df.columns}:
+        raise ValueError(
+            f"percentile_enrich: out_col {out_col!r} is already a column of "
+            "df; a second column of that name would make it ambiguous"
+        )
     if digests is None:
         digests = digest_by(df, value_col, by=by, delta=delta, scale=scale)
     # cardinality-explosive `by` guard (the heavy_hitters philosophy):
@@ -556,23 +570,29 @@ def percentile_enrich(
             "a digest side channel this large should not broadcast — "
             "reduce the key cardinality or raise max_groups deliberately"
         )
-    table = {
-        tuple(r[c] for c in by): r["digest"] for r in rows if r["digest"] is not None
-    }
+    table = {}
+    for r in rows:
+        # NaN keys fold first, so two NaN rows are one key here too
+        key = key_tuple(r[c] for c in by)
+        if key in table:
+            raise ValueError(
+                f"percentile_enrich: digests has more than one row for group "
+                f"{key!r}; merge partials to one digest per group first"
+            )
+        table[key] = r["digest"]
     bc = df.sparkSession.sparkContext.broadcast(table)
     _BROADCASTS.append(bc)
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.DoubleType(), True)]
-    )
 
-    def enrich(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    def enrich(batches: Iterator[Tuple[pa.Array, ...]]) -> Iterator[pa.Array]:
         # NaN keys match by identity: fold them to split_groups' NaN
         tbl = {key_tuple(key): blob for key, blob in bc.value.items()}
         cache: dict[tuple, MergingDigest] = {}
-        for batch in batches:
-            vals = floats(batch.column(value_col))
-            out = np.full(batch.num_rows, np.nan)
-            for key, idx in split_groups(batch, by):
+        for arrays in batches:
+            # by=() arrives as the bare value array, not a 1-tuple
+            *keys, value = arrays if by else (arrays,)
+            vals = floats(value)
+            out = np.full(len(vals), np.nan)
+            for key, idx in split_groups(keys, len(vals)):
                 if key not in cache:
                     blob = tbl.get(key)
                     cache[key] = None if blob is None else MergingDigest.from_bytes(blob)
@@ -580,6 +600,7 @@ def percentile_enrich(
                 if cache[key] is not None and idx.size:
                     out[idx] = cache[key].cdf_batch(vals[idx])
             # NaN (missing group or value) -> NULL on the wire
-            yield batch.append_column(out_col, pa.array(out, from_pandas=True))
+            yield pa.array(out, from_pandas=True)
 
-    return df.mapInArrow(enrich, out_schema)
+    score = F.arrow_udf(enrich, "double")
+    return df.select("*", score(*by, value_col).alias(out_col))

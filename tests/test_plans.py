@@ -709,12 +709,12 @@ def test_shuffle_totals_measures_exchange_volume(spark, docs):
 
 
 def test_percentile_enrich_no_corpus_shuffle(docs):
-    """percentile_enrich's scoring stage is ONE mapInArrow directly over
-    the scan: the digest table travels as an sc.broadcast side channel,
-    so the returned plan has no Exchange and no Join at all (the corpus
-    never shuffles and no KB digest blob is copied per row).  The Python
-    input is the frame's own columns: a bigint key ships as itself, with
-    no string-helper copy."""
+    """percentile_enrich's scoring stage is ONE scalar Arrow UDF directly
+    over the scan: the digest table travels as an sc.broadcast side
+    channel, so the returned plan has no Exchange and no Join at all (the
+    corpus never shuffles and no KB digest blob is copied per row).  Only
+    the key and value columns cross to Python: the rest of the row waits
+    in the JVM, so no MapInArrow carries it."""
     from tdigest_spark.operators import digest_by, percentile_enrich
 
     d = digest_by(docs, "n_chars", by=["lang"], delta=24000.0)
@@ -722,16 +722,16 @@ def test_percentile_enrich_no_corpus_shuffle(docs):
     simple = explain_str(out, "simple")
     assert "Exchange" not in simple
     assert "Join" not in simple
-    assert simple.count("MapInArrow") == 1
+    assert "MapInArrow" not in simple
+    assert simple.count("ArrowEvalPython") == 1
     keyed = percentile_enrich(docs, "n_chars", by=["lang", "doc_id"], delta=24000.0)
     enrich = [
         line for line in explain_str(keyed, "simple").splitlines()
-        if "MapInArrow" in line and "enrich" in line
+        if "ArrowEvalPython" in line
     ]
     assert len(enrich) == 1
-    arg = enrich[0].split("(", 1)[1].split(")#")[0]
-    assert "__pe_key_" not in arg
-    assert sorted(a.split("#")[0] for a in arg.split(", ")) == sorted(docs.columns)
+    arg = enrich[0].split("enrich(", 1)[1].split(")#")[0]
+    assert [a.split("#")[0] for a in arg.split(", ")] == ["lang", "doc_id", "n_chars"]
 
 
 def test_bm25_score_scan_stage_no_explode_no_python(docs):

@@ -304,3 +304,22 @@ SELECT max(c) FROM (
         f"EVENTS_DAY_DELTA={Q.EVENTS_DAY_DELTA} vs max sliding-window "
         f"group {max_win} at {sf_dir}"
     )
+
+
+@pytest.mark.parametrize("sf_dir", SF_DIRS)
+def test_events_stream_columns_have_no_nulls(sf_dir):
+    """The streaming oracles (windowed_digest_events/sliding,
+    windowed_hll_events) take n_rows as count(*) and index the sorted
+    value list with it, and put a NULL ts in a NULL window; the Spark
+    digest skips NULL values and a NULL ts falls in no window.  A NULL
+    value, ts or user_id would make the two sides disagree only on
+    regenerated data, so pin zero NULLs in every sf dir."""
+    con = duckdb.connect()
+    nulls = con.sql(
+        f"SELECT count(*) - count(value), count(*) - count(ts), "
+        f"count(*) - count(user_id) FROM '{sf_dir}/events.parquet'"
+    ).fetchone()
+    assert nulls == (0, 0, 0), (
+        f"NULL (value, ts, user_id) counts {nulls} at {sf_dir} — the "
+        "streaming oracles assume none"
+    )

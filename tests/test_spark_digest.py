@@ -493,6 +493,57 @@ def test_percentile_enrich_max_groups_guard(spark):
     assert len(out) == 50 and all(r["percentile"] == 0.5 for r in out)
 
 
+def test_percentile_enrich_rejects_duplicate_digest_keys(spark):
+    """Unmerged partials hold several digests per group: scoring against
+    whichever came last would be silently wrong, so it raises and names
+    the group.  Two NaN keys are one group, so they are duplicates too."""
+    from tdigest_spark.operators import percentile_enrich
+
+    df = spark.createDataFrame(
+        [("en", float(i)) for i in range(40)], "lang string, v double"
+    ).repartition(4)
+    partials = build_partials_grouped(df, "v", by=["lang"])
+    assert partials.filter("lang = 'en'").count() > 1
+    with pytest.raises(ValueError, match=r"more than one row for group \('en',\)"):
+        percentile_enrich(df, "v", by=["lang"], digests=partials)
+    nan = spark.createDataFrame([(float("nan"), 1.0)], "g double, v double")
+    d = digest_by(nan, "v", by=["g"])
+    with pytest.raises(ValueError, match=r"more than one row for group \(nan,\)"):
+        percentile_enrich(nan, "v", by=["g"], digests=d.unionAll(d))
+    # one merged row per group is accepted and scores every row
+    # (collect the scores: count() would prune the unread UDF column)
+    out = percentile_enrich(df, "v", by=["lang"], digests=merge_partials(partials, by=["lang"]))
+    scores = sorted(r["percentile"] for r in out.collect())
+    assert scores == [(i + 0.5) / 40 for i in range(40)]
+
+
+def test_percentile_enrich_rejects_existing_out_col(spark):
+    """An out_col that is already a column of df raises instead of
+    appending an ambiguous second column of the same name.  Names match
+    as Spark resolves them: in any letter case, unless
+    spark.sql.caseSensitive is true."""
+    from tdigest_spark.operators import percentile_enrich
+
+    df = spark.createDataFrame(
+        [("en", 1.0, 0.3)], "lang string, v double, percentile double"
+    )
+    for out_col in ("percentile", "Percentile", "v", "lang"):
+        with pytest.raises(ValueError, match="already a column"):
+            percentile_enrich(df, "v", by=["lang"], out_col=out_col)
+    out = percentile_enrich(df, "v", by=["lang"], out_col="pct")
+    assert out.columns == ["lang", "v", "percentile", "pct"]
+    assert out.collect()[0]["pct"] == 0.5
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try:
+        out = percentile_enrich(df, "v", by=["lang"], out_col="Percentile")
+        assert out.columns == ["lang", "v", "percentile", "Percentile"]
+        assert out.collect()[0]["Percentile"] == 0.5
+        with pytest.raises(ValueError, match="already a column"):
+            percentile_enrich(df, "v", by=["lang"], out_col="percentile")
+    finally:
+        spark.conf.unset("spark.sql.caseSensitive")
+
+
 def test_percentile_enrich_nan_group_key(spark):
     """A NaN double group key is a group like any other: both sides of
     the broadcast channel fold NaN to the same lookup key (nan != nan
