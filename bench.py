@@ -137,10 +137,10 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     # 1. global t-digest over lineitem: shuffle-free partial build
-    #    (mapInArrow per partition) + canonical merge + quantiles.
+    #    (JVM kernel per partition) + canonical merge + quantiles.
     #    min_parallelism rescues the LOCAL run only: the sf parquet is one
-    #    unsplittable row group, which would pin the build to one Python
-    #    worker; at real scale splits >> cores and this is a no-op.
+    #    unsplittable row group, which would pin the build to one task;
+    #    at real scale splits >> cores and this is a no-op.
     def global_digest():
         partials = digest.build_partials_per_partition(
             li, "l_extendedprice", delta=100.0, min_parallelism=cpus
@@ -168,7 +168,7 @@ def main() -> None:
     bench("tdigest_profile_3col", profile_digest)
 
     # 2a. grouped digest, DEFAULT map-side-combine path (zero raw-row
-    #     shuffle: stage 1 is mapInArrow partials per input partition)
+    #     shuffle: stage 1 is JVM partials per input partition)
     def grouped_digest_map():
         partials = digest.build_partials_grouped(
             docs, "n_chars", by=["lang"], delta=200.0, min_parallelism=cpus

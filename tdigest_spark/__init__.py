@@ -3,8 +3,9 @@ analytics library.
 
 Built from scratch against the behavioral spec of tdunning/TDigest (the
 merging t-digest with K_0..K_3 scale functions, plus log-spaced histograms),
-re-expressed Spark-first: digests are built per partition/group over
-Arrow batches (mapInArrow), merged associatively, and queried through
+re-expressed Spark-first: digests are built per partition/group inside
+the executor JVM (a Janino-compiled kernel, byte-identical to
+core.MergingDigest), merged associatively, and queried through
 registered SQL functions — no per-row Python anywhere.
 
 Public surface:

@@ -1,0 +1,599 @@
+"""The JVM map-side t-digest build: one ``MapPartitionsFunction`` per
+input partition, compiled on the driver by Janino.
+
+Stage 1 of every digest build is ingest-only: unit-weight samples go
+into a buffer, the buffer compacts when it overflows, and each partial
+is compressed and serialized once.  Running that in a Python worker
+costs the JVM -> Python Arrow transfer of every input row, which is
+most of the build.  This module runs the ingest half of
+``core.MergingDigest`` (the buffer, ``_compact``, ``compress`` and the
+VERBOSE ``to_bytes``) inside the task's JVM instead, so only the
+KB-sized partial rows leave it.
+
+Parity: a partial is byte-identical to a driver ``MergingDigest`` fed
+each group's non-NULL, non-NaN values one 10,000-input-row chunk
+(``core._CHUNK``) at a time, in row order.  The Java mirrors NumPy's
+IEEE operation order: a stable sort with NaN last, sequential cumsum,
+the segment sums of ``np.add.reduceat`` (first element plus NumPy's
+pairwise sum of the rest), ``np.clip``'s tie rules on signed zeros, and
+``scale.limit``'s closed forms term by term.  The only scalars it
+cannot reproduce bit for bit are the transcendental ones: K_1's
+sin/cos are computed here in NumPy and passed in, while K_2/K_3 use two
+``StrictMath`` calls where the core uses NumPy's libm, because both
+depend on the weight at each compaction: ``log(total/delta)`` in the
+normalizer and ``exp(1/norm)`` in the limit.  A last-ulp difference in
+either moves a cluster boundary only when a limit lands within an ulp
+of an integer cumulative weight.  So K_2/K_3 parity is verified, not
+proven: tests/test_jvm_kernel.py checks it on its corpora across every
+scale and regime.
+
+Keys fold as ``_arrow_groups.split_groups`` folds them: NULL is a group,
+all NaNs are one group, -0.0 is 0.0, and binary keys compare by value.
+
+Loading: the source is a string in this module, so a ``--py-files`` zip
+of ``*.py`` carries it.  The driver JVM compiles it with Janino (shipped
+with Spark), the class files go into a jar cached under the source's
+sha256, and the jar is added once per SparkContext with ``ADD JAR`` (so
+executors fetch it too).  This needs a classic (py4j) session: the build
+goes through ``DataFrame._jdf``.  Janino compiles a Java subset: no
+lambdas, and generics are erased, so the source names raw types and
+casts explicitly.
+"""
+
+from __future__ import annotations
+
+import hashlib
+import io
+import os
+import stat
+import tempfile
+import threading
+import zipfile
+from typing import Sequence
+
+import numpy as np
+from pyspark.sql import DataFrame
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+from ..core import MergingDigest
+from ..scale import SCALE_CODES, get_scale
+from ._arrow_groups import _out_schema
+
+CLASS_NAME = "tdigest_spark.jvm.DigestPartials"
+
+JAVA_SOURCE = r"""
+package tdigest_spark.jvm;
+
+import java.nio.ByteBuffer;
+import java.nio.ByteOrder;
+import java.util.ArrayList;
+import java.util.Arrays;
+import java.util.Iterator;
+import java.util.LinkedHashMap;
+import org.apache.spark.TaskContext;
+import org.apache.spark.api.java.function.MapPartitionsFunction;
+import org.apache.spark.sql.Row;
+import org.apache.spark.sql.RowFactory;
+
+/** Per input partition: one t-digest per (group, value column), fed one
+ *  CHUNK-input-row chunk at a time; emits (*keys, [col,] partition id,
+ *  digest, n_rows) per digest. */
+public class DigestPartials implements MapPartitionsFunction {
+    static final int CHUNK = 10000;
+
+    final int nKeys, nValues;
+    final String[] cols;     // per-column build: the col field; else null
+    final double publicDelta, privateDelta;
+    final int maxSize, scale;
+    final double[] sinCos;   // K_1: sin, cos of 1/norm at private, public
+
+    public DigestPartials(Integer nKeys, Integer nValues, String[] cols,
+                          Double publicDelta, Double privateDelta,
+                          Integer maxSize, Integer scale, double[] sinCos) {
+        this.nKeys = nKeys.intValue();
+        this.nValues = nValues.intValue();
+        this.cols = cols;
+        this.publicDelta = publicDelta.doubleValue();
+        this.privateDelta = privateDelta.doubleValue();
+        this.maxSize = maxSize.intValue();
+        this.scale = scale.intValue();
+        this.sinCos = sinCos;
+    }
+
+    public Iterator call(Iterator rows) throws Exception {
+        LinkedHashMap groups = new LinkedHashMap();
+        Work work = new Work();
+        ArrayList dirty = new ArrayList();
+        int inChunk = 0;
+        while (rows.hasNext()) {
+            Row r = (Row) rows.next();
+            Object gk;
+            if (nKeys == 1) {
+                gk = groupKey(r.get(0));
+            } else {
+                Object[] kv = new Object[nKeys];
+                for (int i = 0; i < nKeys; i++) kv[i] = groupKey(r.get(i));
+                gk = Arrays.asList(kv);
+            }
+            Group g = (Group) groups.get(gk);
+            if (g == null) {
+                g = new Group(r, this, work);
+                groups.put(gk, g);
+            }
+            for (int j = 0; j < nValues; j++) {
+                int c = nKeys + j;
+                if (r.isNullAt(c)) continue;
+                double x = r.getDouble(c);
+                if (x != x) continue;
+                Sink s = g.sinks[j];
+                if (s == null) s = g.sinks[j] = new Sink(new Digest(this, work));
+                if (s.len == 0) dirty.add(s);
+                s.append(x);
+            }
+            if (++inChunk == CHUNK) {
+                flush(dirty);
+                inChunk = 0;
+            }
+        }
+        flush(dirty);
+
+        Integer pid = Integer.valueOf(TaskContext.getPartitionId());
+        ArrayList out = new ArrayList();
+        Iterator it = groups.values().iterator();
+        while (it.hasNext()) {
+            Group g = (Group) it.next();
+            for (int j = 0; j < nValues; j++) {
+                Sink s = g.sinks[j];
+                if (s == null) continue;
+                Object[] row = new Object[nKeys + (cols == null ? 3 : 4)];
+                System.arraycopy(g.key, 0, row, 0, nKeys);
+                int p = nKeys;
+                if (cols != null) row[p++] = cols[j];
+                row[p++] = pid;
+                row[p++] = s.digest.toBytes();
+                row[p] = Long.valueOf((long) s.digest.total);
+                out.add(RowFactory.create(row));
+            }
+        }
+        return out.iterator();
+    }
+
+    static void flush(ArrayList dirty) {
+        for (int i = 0; i < dirty.size(); i++) {
+            Sink s = (Sink) dirty.get(i);
+            s.digest.addChunk(s.buf, s.len);
+            s.len = 0;
+        }
+        dirty.clear();
+    }
+
+    /** A float key folded as GROUP BY folds it: every NaN is one value
+     *  and -0.0 is 0.0. */
+    static Object fold(Object v) {
+        if (v instanceof Double) {
+            double d = ((Double) v).doubleValue();
+            if (d != d) return Double.valueOf(Double.NaN);
+            return d == 0.0 ? Double.valueOf(0.0) : v;
+        }
+        if (v instanceof Float) {
+            float f = ((Float) v).floatValue();
+            if (f != f) return Float.valueOf(Float.NaN);
+            return f == 0.0f ? Float.valueOf(0.0f) : v;
+        }
+        return v;
+    }
+
+    /** The group identity of a key value: folded, binary by content. */
+    static Object groupKey(Object v) {
+        return v instanceof byte[] ? ByteBuffer.wrap((byte[]) v) : fold(v);
+    }
+
+    static final class Group {
+        final Object[] key;
+        final Sink[] sinks;
+
+        Group(Row r, DigestPartials k, Work work) {
+            key = new Object[k.nKeys];
+            for (int i = 0; i < k.nKeys; i++) key[i] = fold(r.get(i));
+            sinks = new Sink[k.nValues];
+            // one value column: every group seen emits a partial, even one
+            // with no values; per-column builds emit only fed digests
+            if (k.cols == null) sinks[0] = new Sink(new Digest(k, work));
+        }
+    }
+
+    /** A digest and the values of the current chunk not yet added to it. */
+    static final class Sink {
+        final Digest digest;
+        double[] buf = new double[16];
+        int len;
+
+        Sink(Digest d) { digest = d; }
+
+        void append(double x) {
+            if (len == buf.length) buf = Arrays.copyOf(buf, 2 * len);
+            buf[len++] = x;
+        }
+    }
+
+    /** compact()'s work arrays, shared by the digests of one task (they
+     *  compact one at a time), so a group costs only its own buffer. */
+    static final class Work {
+        double[] key = new double[0], cw;
+        int[] perm, tmp, bounds;
+
+        void ensure(int c) {
+            if (c <= key.length) return;
+            key = new double[c];
+            cw = new double[c];
+            perm = new int[c];
+            tmp = new int[c];
+            bounds = new int[c + 1];
+        }
+    }
+
+    /** The ingest half of core.MergingDigest. */
+    static final class Digest {
+        final DigestPartials k;
+        final Work work;
+        double[] mean = new double[8], count = new double[8];
+        int n, mergeCount, watermark;
+        double total;
+        boolean isReversed;
+
+        Digest(DigestPartials k, Work work) {
+            this.k = k;
+            this.work = work;
+        }
+
+        void addChunk(double[] vals, int b) {
+            if (n + b > mean.length) {
+                int c = mean.length;
+                while (c < n + b) c *= 2;
+                mean = Arrays.copyOf(mean, c);
+                count = Arrays.copyOf(count, c);
+            }
+            total += b;
+            System.arraycopy(vals, 0, mean, n, b);
+            Arrays.fill(count, n, n + b, 1.0);
+            n += b;
+            if (n > k.maxSize) compact(false, k.privateDelta);
+        }
+
+        /** NumPy's float order: a < b, NaN after every number. */
+        static boolean lt(double a, double b) {
+            return a < b || (b != b && a == a);
+        }
+
+        /** Stable sort of (mean, count) by key = mean, or -mean reversed
+         *  (np.argsort(kind="stable")). */
+        void stableSort(boolean reverse) {
+            double[] key = work.key;
+            for (int i = 0; i < n; i++) key[i] = reverse ? -mean[i] : mean[i];
+            mergeSort(key);
+        }
+
+        /** Stable merge sort of (mean, count) by `key` (NumPy order). */
+        void mergeSort(double[] key) {
+            int[] a = work.perm, b = work.tmp;
+            for (int i = 0; i < n; i++) a[i] = i;
+            for (int w = 1; w < n; w *= 2) {
+                for (int lo = 0; lo < n; lo += 2 * w) {
+                    int mid = Math.min(lo + w, n), hi = Math.min(lo + 2 * w, n);
+                    int i = lo, j = mid, o = lo;
+                    while (i < mid && j < hi) {
+                        // take the right run only when strictly smaller
+                        if (lt(key[a[j]], key[a[i]])) b[o++] = a[j++];
+                        else b[o++] = a[i++];
+                    }
+                    while (i < mid) b[o++] = a[i++];
+                    while (j < hi) b[o++] = a[j++];
+                }
+                int[] t = a; a = b; b = t;
+            }
+            for (int i = 0; i < n; i++) key[i] = mean[a[i]];
+            System.arraycopy(key, 0, mean, 0, n);
+            for (int i = 0; i < n; i++) key[i] = count[a[i]];
+            System.arraycopy(key, 0, count, 0, n);
+        }
+
+        double normalizer(double delta) {
+            switch (k.scale) {
+                case 0: return delta / 2.0;
+                case 1: return delta / (2.0 * Math.PI);
+                case 2: return delta / (4.0 * Math.max(StrictMath.log(total / delta), 0.0) + 24.0);
+                default: return delta / (4.0 * Math.max(StrictMath.log(total / delta), 0.0) + 21.0);
+            }
+        }
+
+        static double clipQ(double q) {
+            return clip(q, 1e-15, 1.0 - 1e-15);
+        }
+
+        /** np.clip: max then min, NaN-propagating, ties to the bound. */
+        static double clip(double x, double lo, double hi) {
+            double t = (x != x || x > lo) ? x : lo;
+            return (t != t || t < hi) ? t : hi;
+        }
+
+        void compact(boolean force, double compression) {
+            if (n <= 1) return;
+            if (!(force || n > k.maxSize)) return;
+            work.ensure(n);
+            boolean reverse = !force && mergeCount % 2 == 1;
+            if (isReversed != reverse && watermark > 0) {
+                for (int i = 0, j = watermark - 1; i < j; i++, j--) {
+                    double m = mean[i]; mean[i] = mean[j]; mean[j] = m;
+                    double c = count[i]; count[i] = count[j]; count[j] = c;
+                }
+            }
+            stableSort(reverse);
+            isReversed = reverse;
+            if (!reverse && n < compression) {
+                watermark = n;
+                return;
+            }
+            mergeCount++;
+
+            double norm = normalizer(compression);
+            double e = 0.0, sinC = 0.0, cosC = 0.0;
+            if (k.scale == 1) {
+                int o = compression == k.privateDelta ? 0 : 2;
+                sinC = k.sinCos[o];
+                cosC = k.sinCos[o + 1];
+            } else if (k.scale >= 2) {
+                e = StrictMath.exp(1.0 / norm);
+            }
+            double[] cw = work.cw;
+            double acc = 0.0;
+            for (int i = 0; i < n; i++) {
+                acc += count[i];
+                cw[i] = acc;
+            }
+
+            // greedy boundary walk (core._compact): cluster 0 is the first
+            // centroid alone; the last centroid stays its own cluster
+            int[] b = work.bounds;
+            b[0] = 0;
+            b[1] = 1;
+            int nb = 2, s = 1, nm1 = n - 1;
+            while (s < nm1) {
+                double limitW = total * limit(cw[s - 1] / total, norm, e, sinC, cosC);
+                int lo = 0, hi = nm1;               // searchsorted(cw[:n-1], limitW, "right")
+                while (lo < hi) {
+                    int m = (lo + hi) >>> 1;
+                    if (cw[m] <= limitW) lo = m + 1; else hi = m;
+                }
+                int end = lo - 1;
+                if (end < s) end = s;
+                b[nb++] = end + 1;
+                s = end + 1;
+            }
+            if (s == nm1) b[nb++] = n;
+
+            int to = nb - 1;
+            double[] mw = work.key;
+            for (int i = 0; i < n; i++) mw[i] = mean[i] * count[i];
+            for (int c = 0; c < to; c++) {
+                int lo = b[c], hi = b[c + 1];
+                double w = segmentSum(count, lo, hi);
+                double m = segmentSum(mw, lo, hi) / w;
+                double first = mean[lo], last = mean[hi - 1];
+                m = reverse ? clip(m, last, first) : clip(m, first, last);
+                mean[c] = m;
+                count[c] = w;
+            }
+            n = to;
+            watermark = to;
+            if (!(to < compression)) {
+                throw new IllegalStateException(
+                    "Merging was ineffective: " + to + " clusters at compression " + compression);
+            }
+        }
+
+        /** scale.limit(q0, norm) for one ascending-walk quantile. */
+        double limit(double q0, double norm, double e, double sinC, double cosC) {
+            switch (k.scale) {
+                case 0:
+                    return q0 + 1.0 / norm;
+                case 1: {
+                    double q = clipQ(q0);
+                    if (!(q <= (cosC + 1.0) / 2.0)) return 1.0;
+                    double s = 2.0 * q - 1.0;
+                    return (s * cosC + Math.sqrt((1.0 - s) * (1.0 + s)) * sinC + 1.0) / 2.0;
+                }
+                case 2: {
+                    double q = clipQ(q0);
+                    double w = (q / (1.0 - q)) * e;
+                    return w / (1.0 + w);
+                }
+                default: {
+                    double q = clipQ(q0);
+                    if (q <= 0.5 / e) return q * e;
+                    if (q <= 0.5) return 1.0 - 1.0 / (4.0 * e * q);
+                    return 1.0 - (1.0 - q) / e;
+                }
+            }
+        }
+
+        /** np.add.reduceat's sum of a[lo:hi]: the first element, plus
+         *  NumPy's pairwise sum of the rest. */
+        static double segmentSum(double[] a, int lo, int hi) {
+            return hi - lo == 1 ? a[lo] : a[lo] + pairwise(a, lo + 1, hi - lo - 1);
+        }
+
+        static double pairwise(double[] a, int off, int n) {
+            if (n < 8) {
+                double res = -0.0;
+                for (int i = 0; i < n; i++) res += a[off + i];
+                return res;
+            }
+            if (n <= 128) {
+                double r0 = a[off], r1 = a[off + 1], r2 = a[off + 2], r3 = a[off + 3];
+                double r4 = a[off + 4], r5 = a[off + 5], r6 = a[off + 6], r7 = a[off + 7];
+                int i;
+                for (i = 8; i < n - (n % 8); i += 8) {
+                    int p = off + i;
+                    r0 += a[p]; r1 += a[p + 1]; r2 += a[p + 2]; r3 += a[p + 3];
+                    r4 += a[p + 4]; r5 += a[p + 5]; r6 += a[p + 6]; r7 += a[p + 7];
+                }
+                double res = ((r0 + r1) + (r2 + r3)) + ((r4 + r5) + (r6 + r7));
+                for (; i < n; i++) res += a[off + i];
+                return res;
+            }
+            int n2 = n / 2;
+            n2 -= n2 % 8;
+            return pairwise(a, off, n2) + pairwise(a, off + n2, n - n2);
+        }
+
+        /** compress(), then the VERBOSE layout of core.MergingDigest.to_bytes. */
+        byte[] toBytes() {
+            compact(true, k.publicDelta);
+            ByteBuffer out = ByteBuffer.allocate(41 + 16 * n).order(ByteOrder.LITTLE_ENDIAN);
+            out.putInt(1);
+            out.put((byte) k.scale);
+            out.putDouble(n > 0 ? mean[0] : Double.NaN);
+            out.putDouble(n > 0 ? mean[n - 1] : Double.NaN);
+            out.putDouble(k.publicDelta);
+            out.putInt(n);
+            out.putLong((long) total);
+            for (int i = 0; i < n; i++) {
+                out.putDouble(count[i]);
+                out.putDouble(mean[i]);
+            }
+            return out.array();
+        }
+    }
+}
+"""
+
+_LOCK = threading.Lock()
+#: (applicationId, startTime) of a SparkContext -> the kernel class loaded
+#: into it
+_LOADED: dict[tuple, object] = {}
+
+
+def cache_dir() -> str:
+    """Where compiled kernels are kept, one jar per source hash: a
+    directory of the system temp dir private to the current user."""
+    return os.path.join(tempfile.gettempdir(), f"tdigest_spark-jvm-{os.getuid()}")
+
+
+def _trusted(root: str) -> bool:
+    """Whether `root` is a real directory (not a symlink) that the current
+    user owns and no other user can write.  A jar found there is code the
+    driver will run; in a sticky shared temp dir such a directory cannot
+    be renamed or re-pointed by anyone else."""
+    st = os.lstat(root)
+    return (
+        stat.S_ISDIR(st.st_mode)
+        and st.st_uid == os.getuid()
+        and not st.st_mode & 0o022
+    )
+
+
+def _compile(spark, source: str) -> bytes:
+    """The jar bytes of `source`, compiled by Janino in the driver JVM."""
+    jvm = spark.sparkContext._jvm
+    compiler = jvm.org.codehaus.janino.SimpleCompiler()
+    compiler.cook(source)
+    classes = compiler.getBytecodes()
+    buf = io.BytesIO()
+    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as jar:
+        for name in sorted(classes.keySet()):
+            jar.writestr(name.replace(".", "/") + ".class", bytes(classes.get(name)))
+    return buf.getvalue()
+
+
+def kernel_jar(spark, source: str = JAVA_SOURCE) -> str:
+    """Path of the jar holding `source` compiled, compiling it on a cache
+    miss.  The file name carries the source's sha256, so a changed source
+    never reuses a stale jar.  When the shared cache directory is not
+    trusted (see `_trusted`), the jar is compiled into a fresh private
+    directory instead."""
+    sha = hashlib.sha256(source.encode()).hexdigest()
+    root = cache_dir()
+    try:
+        os.makedirs(root, mode=0o700, exist_ok=True)
+        trusted = _trusted(root)
+    except OSError:
+        trusted = False
+    if not trusted:
+        root = tempfile.mkdtemp(prefix="tdigest_spark-jvm-")
+    path = os.path.join(root, f"tdigest-kernel-{sha[:32]}.jar")
+    if not os.path.exists(path):
+        data = _compile(spark, source)
+        part = f"{path}.{os.getpid()}.{threading.get_ident()}.part"
+        with open(part, "wb") as f:
+            f.write(data)
+        os.replace(part, path)  # atomic: concurrent drivers never see half a jar
+    return path
+
+
+def kernel_class(spark):
+    """The kernel class, loaded through the session's jar class loader.
+    The jar is added (``ADD JAR``) once per SparkContext: a new context,
+    as after ``spark.stop()``, adds it again before first use."""
+    sc = spark.sparkContext
+    ctx = (sc.applicationId, sc.startTime)
+    with _LOCK:
+        cls = _LOADED.get(ctx)
+        if cls is None:
+            spark.sql(f"ADD JAR '{kernel_jar(spark)}'")
+            loader = spark._jsparkSession.sharedState().jarClassLoader()
+            cls = _LOADED[ctx] = loader.loadClass(CLASS_NAME)
+    return cls
+
+
+def _k1_sin_cos(compression: float) -> list[float]:
+    scale = get_scale("K_1")
+    c = 1.0 / scale.normalizer(compression, 0.0)
+    assert c < np.pi / 2  # compression >= 10 keeps K_1's angle algebra valid
+    return [float(np.sin(c)), float(np.cos(c))]
+
+
+def digest_partials(
+    sdf: DataFrame,
+    keys: Sequence[str],
+    value_cols: Sequence[str],
+    fields: str,
+    delta: float,
+    scale: str,
+    per_column: bool,
+) -> DataFrame:
+    """Run the kernel over `sdf`, whose columns are `keys` then the double
+    columns `value_cols`.  Output rows, per group of each partition:
+    (*keys, [col,] partition id, digest, n_rows): the `keys` columns as
+    typed in `sdf`, then `fields` (DDL).
+
+    `per_column=False` (one value column): every group seen emits a row,
+    even one whose values were all NULL/NaN.  `per_column=True`: one row
+    per (group, column) that received a value, named in the col field."""
+    spark = sdf.sparkSession
+    sc = spark.sparkContext
+    proto = MergingDigest(delta, scale=get_scale(scale))
+    code = SCALE_CODES[proto.scale.name]
+    sin_cos = (
+        _k1_sin_cos(proto.private_compression) + _k1_sin_cos(proto.public_compression)
+        if code == 1 else [0.0] * 4
+    )
+    gw, jvm = sc._gateway, sc._jvm
+
+    def array(jtype, values):
+        out = gw.new_array(jtype, len(values))
+        for i, v in enumerate(values):
+            out[i] = v
+        return out
+
+    args = [
+        len(keys), len(value_cols),
+        array(jvm.java.lang.String, value_cols) if per_column else None,
+        proto.public_compression, proto.private_compression, proto.max_size,
+        code, array(jvm.double, sin_cos),
+    ]
+    jargs = array(jvm.java.lang.Object, args)
+    fn = kernel_class(spark).getConstructors()[0].newInstance(jargs)
+    schema, _ = _out_schema(sdf, list(keys), fields)
+    jschema = jvm.org.apache.spark.sql.types.DataType.fromJson(schema.json())
+    jdf = sdf._jdf.mapPartitions(fn, jvm.org.apache.spark.sql.Encoders.row(jschema))
+    return ClassicDataFrame(jdf, spark)

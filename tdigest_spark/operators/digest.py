@@ -4,14 +4,16 @@ The reference library IS a partial+final aggregation (SURVEY.md §2.2):
 update = vectorized fit over a batch, merge = digest ⊕ digest, evaluate =
 compress + quantile/cdf.  Spark-first mapping:
 
-    stage 1 (update):  one mapInArrow builds a digest per (group, input
-                       partition) — *map-side combine*: no raw row ever
-                       shuffles.  Each 10k-row Arrow batch (the reference's
-                       ingestion-chunk granularity) splits by key in Arrow
-                       (dictionary_encode + stable argsort,
-                       `_arrow_groups`), so keys never become pandas
-                       objects and each group's values reach `add` in row
-                       order (build_partials_grouped; `by=()` is the
+    stage 1 (update):  one JVM mapPartitions builds a digest per (group,
+                       input partition) — *map-side combine*: no raw row
+                       ever shuffles, and no input row crosses to Python.
+                       The kernel (`_jvm_kernel`, Janino-compiled Java)
+                       is the ingest half of `core.MergingDigest`; it
+                       feeds each group's values in row order, one
+                       10k-input-row chunk (the reference's ingestion
+                       chunk) at a time, so every partial is
+                       byte-identical to a driver digest fed the same
+                       chunks (build_partials_grouped; `by=()` is the
                        per-partition build)
     stage 2 (merge):   groupBy(keys).applyInArrow (`reduce_groups`):
                        each group's partials arrive as one Arrow table and
@@ -28,7 +30,7 @@ compress + quantile/cdf.  Spark-first mapping:
 
 Scale notes (100 TB / 1000 executors):
 - The DEFAULT grouped path (`digest_by(combine="map")`) shuffles ZERO raw
-  rows: stage 1 is mapInArrow keeping a dict group→digest per input
+  rows: stage 1 is the JVM kernel keeping a map group→digest per input
   partition, so the only shuffle carries (group, KB-digest) partials —
   splits × groups rows, independent of input size.  A hot group (e.g.
   lang='en' at 60% of a trillion rows) is automatically spread over every
@@ -59,9 +61,9 @@ from pyspark.sql import DataFrame, functions as F
 from ..core import MergingDigest
 from ..scale import get_scale
 from ._arrow_groups import (
-    Counted, floats, key_tuple, map_groups, map_sketches, merged,
-    reduce_groups, reduce_sketches, split_groups,
+    floats, key_tuple, merged, reduce_groups, reduce_sketches, split_groups,
 )
+from ._jvm_kernel import digest_partials
 
 _VALUE = "__td_value"
 _SALT = "__td_salt"
@@ -131,17 +133,6 @@ def build_partials(
     )
 
 
-def _digest_partials(sdf: DataFrame, keys, values, delta: float, scale: str):
-    """Stage-1 digests of `sdf` per (group, partition) through the Arrow
-    kernel; `values(batch)` gives each batch's float64 values."""
-    return map_sketches(
-        sdf, keys, values,
-        new=lambda: MergingDigest(delta, scale=get_scale(scale)),
-        fields=f"{_SALT} int, {DIGEST_FIELDS}",
-        emit=lambda d, n, pid: (pid, d.to_bytes(), n),
-    )
-
-
 def _min_parallel(sdf: DataFrame, min_parallelism: int | None) -> DataFrame:
     if min_parallelism and sdf.rdd.getNumPartitions() < min_parallelism:
         return sdf.repartition(min_parallelism)
@@ -156,10 +147,14 @@ def build_partials_grouped(
     scale: str = "K_3",
     min_parallelism: int | None = None,
 ) -> DataFrame:
-    """Map-side-combining stage 1 for GROUPED digests: one mapInArrow keeps
-    a dict group→digest per input partition and emits one digest row per
-    (group, partition).  The raw data NEVER shuffles — only (group,
-    KB-digest) partials do, exactly like `histogram_ops.histogram_by`.
+    """Map-side-combining stage 1 for GROUPED digests: one JVM
+    mapPartitions (`_jvm_kernel`) keeps a map group→digest per input
+    partition and emits one digest row per (group, partition).  The raw
+    data NEVER shuffles — only (group, KB-digest) partials do — and never
+    crosses to Python: each partial is byte-identical to a driver
+    `MergingDigest` fed the group's non-NULL, non-NaN values one
+    10k-input-row chunk at a time, in row order.  Keys group as in
+    GROUP BY: NULL is a group, all NaNs are one, -0.0 joins 0.0.
 
     State per task is bounded by (#groups seen in this partition) × digest
     size; a hot group is spread across every input split, so skew needs no
@@ -172,7 +167,7 @@ def build_partials_grouped(
 
     `min_parallelism` (opt-in): repartition iff the input has fewer
     partitions than this — rescues local runs over few/unsplittable files
-    (single-row-group parquet pins the whole build to one Python worker).
+    (single-row-group parquet pins the whole build to one task).
     At real scale input splits outnumber cores, so leave it None: the plan
     stays exchange-free.
     """
@@ -180,8 +175,9 @@ def build_partials_grouped(
     value = F.col(value_col) if isinstance(value_col, str) else value_col
     sdf = df.select(*keys, value.cast("double").alias(_VALUE))
     sdf = _min_parallel(sdf, min_parallelism)
-    return _digest_partials(
-        sdf, keys, lambda b: floats(b.column(_VALUE)), delta, scale
+    return digest_partials(
+        sdf, keys, [_VALUE], f"{_SALT} int, {DIGEST_FIELDS}", delta, scale,
+        per_column=False,
     )
 
 
@@ -216,9 +212,10 @@ def build_partials_multi(
 
     The 100 TB profiling shape: a data-quality report over k numeric
     columns (optionally per group) costs one pass over the table instead
-    of k — the scan and Arrow transfer are shared, each batch feeds k
-    digests per group in place, and only (groups x k x n_partitions)
-    KB-sized rows leave the executors.  Merge with
+    of k — the scan is shared, each row feeds k digests of its group in
+    the JVM kernel, and only (groups x k x n_partitions) KB-sized rows
+    leave the executors.  A (group, column) with no non-NULL value emits
+    no row.  Merge with
     `merge_partials(by=[*by, "col"])`.  Per-task state is
     (#groups seen) x k digests — same bound discipline as
     `build_partials_grouped`."""
@@ -226,25 +223,9 @@ def build_partials_multi(
     keys = list(by)
     sdf = df.select(*keys, *[F.col(c).cast("double").alias(c) for c in cols])
     sdf = _min_parallel(sdf, min_parallelism)
-
-    def feed(ds: dict | None, vals: list, rows: np.ndarray) -> dict:
-        ds = {} if ds is None else ds
-        for c, arr in zip(cols, vals):
-            v = arr[rows]
-            v = v[~np.isnan(v)]
-            if v.size:
-                if c not in ds:
-                    ds[c] = Counted(MergingDigest(delta, scale=get_scale(scale)))
-                ds[c].add(v)
-        return ds
-
-    return map_groups(
-        sdf, keys, f"col string, {_SALT} int, {DIGEST_FIELDS}",
-        prepare=lambda b: [floats(b.column(c)) for c in cols],
-        feed=feed,
-        emit=lambda ds, pid: [
-            (c, pid, s.sketch.to_bytes(), s.n) for c, s in ds.items()
-        ],
+    return digest_partials(
+        sdf, keys, cols, f"col string, {_SALT} int, {DIGEST_FIELDS}", delta,
+        scale, per_column=True,
     )
 
 

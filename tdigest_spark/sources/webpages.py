@@ -261,7 +261,10 @@ def extract_digest_partials(
     Output matches operators.digest.build_partials_grouped, so
     merge_partials consumes it unchanged.
     """
-    from ..operators.digest import _digest_partials
+    from ..core import MergingDigest
+    from ..operators._arrow_groups import map_sketches
+    from ..operators.digest import _SALT, DIGEST_FIELDS
+    from ..scale import get_scale
 
     keys = list(by)
     sdf = df.select(*keys, F.col(html_col).alias("__html"))
@@ -275,7 +278,12 @@ def extract_digest_partials(
             dtype=np.float64,
         )
 
-    return _digest_partials(sdf, keys, lengths, delta, scale)
+    return map_sketches(
+        sdf, keys, lengths,
+        new=lambda: MergingDigest(delta, scale=get_scale(scale)),
+        fields=f"{_SALT} int, {DIGEST_FIELDS}",
+        emit=lambda d, n, pid: (pid, d.to_bytes(), n),
+    )
 
 
 WRAPPER_SUFFIX = "</p></body></html>"  # fixed tail emitted by the generator

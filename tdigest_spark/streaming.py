@@ -280,7 +280,7 @@ def digest_sink(
 
         from .operators.digest import _SALT, build_partials_per_partition
 
-        # executor-side partial build (mapInArrow, no shuffle): the driver
+        # executor-side partial build (JVM kernel, no shuffle): the driver
         # only ever merges KB-sized digest rows, never the batch itself —
         # large triggers stay distributed
         partials = build_partials_per_partition(

@@ -1,0 +1,269 @@
+"""The JVM map-side digest build (`operators/_jvm_kernel.py`).
+
+Parity: every partial the JVM kernel emits equals, byte for byte, a
+driver `MergingDigest` fed the same group's non-NULL, non-NaN values one
+10,000-input-row chunk at a time, in row order, partition by partition.
+The corpora cover the singleton and compaction regimes (delta 10, 100,
+1000) under every scale K_0..K_3, values with heavy duplicates, signed
+zeros, infinities, NaN and NULL, and keys of every folding class.
+
+Jar cache: one jar per source hash, reused across calls and sessions of
+the process, and added to each new SparkContext before use.
+"""
+
+from __future__ import annotations
+
+import math
+import os
+import shutil
+import stat
+import subprocess
+import sys
+import textwrap
+
+import numpy as np
+import pytest
+from pyspark.sql import functions as F
+
+from tdigest_spark.core import MergingDigest, _CHUNK
+from tdigest_spark.operators import _jvm_kernel
+from tdigest_spark.operators._arrow_groups import key_tuple
+from tdigest_spark.operators.digest import (
+    build_partials_grouped, build_partials_multi,
+)
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+ROWS_PER_PART = 36_000
+PARTS = 3
+
+
+def _pick(idx, choices):
+    """CASE idx WHEN i THEN choices[i] ... END."""
+    out = F.lit(choices[-1])
+    for i in range(len(choices) - 2, -1, -1):
+        out = F.when(idx == i, F.lit(choices[i])).otherwise(out)
+    return out
+
+
+@pytest.fixture(scope="module")
+def corpus(spark):
+    """PARTS partitions of id-derived rows: a value column mixing heavy
+    duplicates, continuous values, +-0.0, +-inf, NaN and NULL, a second
+    value column with its own NULL pattern, and one key column per
+    folding class (each with NULL)."""
+    i = F.col("id")
+    h = F.abs(F.xxhash64(i))
+    dup = (h % 50).cast("double") / 4.0
+    cont = (h % 1_000_003).cast("double") / 7.0
+    v = (
+        F.when(i % 11 == 0, F.lit(None).cast("double"))
+        .when(i % 11 == 1, F.lit(float("nan")))
+        .when(i % 11 == 2, F.lit(-0.0))
+        .when(i % 11 == 3, F.lit(0.0))
+        .when(i % 17 == 4, F.lit(float("inf")))
+        .when(i % 19 == 5, F.lit(float("-inf")))
+        .when(i % 2 == 0, dup)
+        .otherwise(cont)
+    )
+    big = 1 << 53
+    return spark.range(0, ROWS_PER_PART * PARTS, numPartitions=PARTS).select(
+        _pick(i % 4, ["a", "b", "c", None]).alias("k_str"),
+        _pick(F.floor(i / 3) % 3, [big + 1, big + 2, None]).cast("bigint").alias("k_big"),
+        _pick(i % 5, [float("nan"), -0.0, 0.0, 1.5, None]).cast("double").alias("k_dbl"),
+        _pick(F.floor(i / 7) % 3, [bytearray(b"\x00"), bytearray(b"\x00\x01"), None])
+        .cast("binary").alias("k_bin"),
+        v.alias("v"),
+        F.when(i % 7 == 0, F.lit(None).cast("double")).otherwise(cont).alias("w"),
+    )
+
+
+@pytest.fixture(scope="module")
+def rows(corpus):
+    """The corpus as (partition id, row) in each partition's row order."""
+    out = corpus.withColumn("__pid", F.spark_partition_id()).collect()
+    assert len({r["__pid"] for r in out}) == PARTS
+    return out
+
+
+def _key(values) -> tuple:
+    """A hashable key tuple, folded like the build folds it."""
+    return key_tuple(bytes(v) if isinstance(v, bytearray) else v for v in values)
+
+
+def _driver_feed(rows, by, cols, delta, scale, per_column):
+    """{(key, [col,] pid): (bytes, n_rows)} of driver digests fed one
+    _CHUNK-row chunk of each partition at a time, in row order.  Raises
+    the core's AssertionError where a digest cannot compact."""
+    digests: dict[tuple, MergingDigest] = {}
+    parts: dict[int, list] = {}
+    for r in rows:
+        parts.setdefault(r["__pid"], []).append(r)
+    for pid, prow in parts.items():
+        for lo in range(0, len(prow), _CHUNK):
+            chunk: dict[tuple, list] = {}
+            for r in prow[lo : lo + _CHUNK]:
+                key = _key(r[k] for k in by)
+                for c in cols:
+                    x = r[c]
+                    vals = chunk.setdefault(key + ((c,) if per_column else ()), [])
+                    if x is not None and not math.isnan(x):
+                        vals.append(x)
+            for g, vals in chunk.items():
+                if per_column and not vals:
+                    continue
+                d = digests.setdefault(g + (pid,), MergingDigest(delta, scale=scale))
+                if vals:
+                    d.add(np.asarray(vals))
+    return {g: (d.to_bytes(), int(d.total_weight)) for g, d in digests.items()}
+
+
+def _jvm_out(parts, by, per_column):
+    return {
+        _key(r[k] for k in by) + ((r["col"],) if per_column else ())
+        + (r["__td_salt"],): (bytes(r["digest"]), r["n_rows"])
+        for r in parts
+    }
+
+
+def _assert_parity(got, expect):
+    assert got.keys() == expect.keys()
+    bad = [g for g in expect if got[g] != expect[g]]
+    assert not bad, f"{len(bad)}/{len(expect)} partials differ, e.g. {bad[:3]}"
+
+
+@pytest.mark.parametrize("scale", ["K_0", "K_1", "K_2", "K_3"])
+@pytest.mark.parametrize("delta", [10.0, 100.0, 1000.0])
+def test_partials_byte_identical_across_regimes(corpus, rows, delta, scale):
+    """Every (group, partition) partial equals the driver feed's bytes
+    under every scale, in the compaction regime (delta 10 and 100 on
+    ~9k values per partial; delta 1000 compacts past max_size=7000) and
+    with the singleton NULL group's empty digest.  Where the core itself
+    cannot compact (K_0 and K_1 at delta=10 leave as many clusters as
+    the compression), the JVM build fails with the core's error."""
+    build = build_partials_grouped(corpus, "v", by=["k_str"], delta=delta, scale=scale)
+    try:
+        expect = _driver_feed(rows, ["k_str"], ["v"], delta, scale, per_column=False)
+    except AssertionError as e:
+        assert str(e).startswith("Merging was ineffective")
+        with pytest.raises(Exception, match="Merging was ineffective"):
+            build.collect()
+        assert delta == 10.0 and scale in ("K_0", "K_1")
+        return
+    parts = build.collect()
+    _assert_parity(_jvm_out(parts, ["k_str"], per_column=False), expect)
+    assert len(expect) == 4 * PARTS
+    assert max(n for _, n in expect.values()) > 7000  # past delta=1000's buffer
+
+
+@pytest.mark.parametrize(
+    "by", [["k_str"], ["k_big"], ["k_dbl"], ["k_bin"], ["k_str", "k_big", "k_dbl", "k_bin"], []]
+)
+def test_partials_byte_identical_for_every_key_type(corpus, rows, by):
+    """Keys fold as split_groups folds them: NULL is its own group in
+    every type, bigints above 2^53 stay exact, NaN keys are one group and
+    -0.0 joins 0.0, and binary keys compare by value."""
+    parts = build_partials_grouped(corpus, "v", by=by, delta=100.0).collect()
+    expect = _driver_feed(rows, by, ["v"], 100.0, "K_3", per_column=False)
+    _assert_parity(_jvm_out(parts, by, per_column=False), expect)
+    if by == ["k_dbl"]:
+        keys = [r["k_dbl"] for r in parts]
+        assert sum(k is None for k in keys) == PARTS
+        assert sum(k is not None and math.isnan(k) for k in keys) == PARTS
+        zeros = [k for k in keys if k == 0.0]
+        assert len(zeros) == PARTS and not any(math.copysign(1, z) < 0 for z in zeros)
+    if by == ["k_big"]:
+        assert {r["k_big"] for r in parts} == {(1 << 53) + 1, (1 << 53) + 2, None}
+
+
+@pytest.mark.parametrize("delta, scale", [(100.0, "K_3"), (10.0, "K_2")])
+def test_multi_partials_byte_identical(corpus, rows, delta, scale):
+    """build_partials_multi: one partial per (group, column, partition)
+    that received a value, each equal to the driver feed of that column."""
+    by = ["k_str", "k_dbl"]
+    parts = build_partials_multi(
+        corpus, ["v", "w"], by=by, delta=delta, scale=scale
+    ).collect()
+    expect = _driver_feed(rows, by, ["v", "w"], delta, scale, per_column=True)
+    _assert_parity(_jvm_out(parts, by, per_column=True), expect)
+
+
+def test_kernel_jar_cached_by_source_hash(spark, tmp_path, monkeypatch):
+    """The same source reuses its jar without compiling again; a changed
+    source compiles its own jar next to it.  A cache directory another
+    user could swap or write (a symlink, a group- or world-writable
+    directory) is not used: the jar is compiled into a private one."""
+    cache = tmp_path / "cache"
+    monkeypatch.setattr(_jvm_kernel, "cache_dir", lambda: str(cache))
+    compiled = []
+    real = _jvm_kernel._compile
+
+    def counting(spark, source):
+        compiled.append(source)
+        return real(spark, source)
+
+    monkeypatch.setattr(_jvm_kernel, "_compile", counting)
+    src = _jvm_kernel.JAVA_SOURCE
+    first = _jvm_kernel.kernel_jar(spark, src)
+    assert os.path.dirname(first) == str(cache)
+    stamp = os.stat(first).st_mtime_ns
+    assert _jvm_kernel.kernel_jar(spark, src) == first
+    assert len(compiled) == 1 and os.stat(first).st_mtime_ns == stamp
+    changed = _jvm_kernel.kernel_jar(spark, src + "\n// changed\n")
+    assert changed != first and len(compiled) == 2
+    assert sorted(os.listdir(cache)) == sorted(
+        os.path.basename(p) for p in (first, changed)
+    )
+
+    def private_jar():
+        jar = _jvm_kernel.kernel_jar(spark, src)
+        root = os.path.dirname(jar)
+        assert root != str(cache) and os.path.realpath(root) != str(cache)
+        st = os.lstat(root)
+        assert stat.S_ISDIR(st.st_mode) and not st.st_mode & 0o077
+        assert os.listdir(root) == [os.path.basename(first)]
+        shutil.rmtree(root)
+
+    # a jar is code the driver runs: a cache others can write is not used
+    os.chmod(cache, 0o777)
+    private_jar()
+    os.chmod(cache, 0o700)
+    # nor one reached through a symlink, though its target is private
+    link = tmp_path / "link"
+    os.symlink(cache, link)
+    monkeypatch.setattr(_jvm_kernel, "cache_dir", lambda: str(link))
+    private_jar()
+    assert len(compiled) == 4
+
+
+def test_new_session_adds_jar_before_use(tmp_path):
+    """A second SparkContext in the same process (after spark.stop())
+    gets the jar added again before the kernel runs on it, and the
+    compiled jar is reused rather than rebuilt."""
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from tdigest_spark.operators import _jvm_kernel
+        from tdigest_spark.operators.digest import build_partials_grouped
+        from tdigest_spark.plans import get_spark
+
+        _jvm_kernel.cache_dir = lambda: {str(tmp_path)!r}
+        compiled = []
+        real = _jvm_kernel._compile
+        _jvm_kernel._compile = lambda s, src: compiled.append(1) or real(s, src)
+        for _ in range(2):
+            spark = get_spark("local[1]", extra_conf={{"spark.ui.enabled": "false"}})
+            df = spark.range(100).selectExpr("id % 3 AS k", "id AS v")
+            assert build_partials_grouped(df, "v", by=["k"]).count() == 3
+            jars = spark.sparkContext._jsc.sc().listJars()
+            names = [jars.apply(i) for i in range(jars.size())]
+            assert any("tdigest-kernel-" in n for n in names), names
+            spark.stop()
+        assert len(compiled) == 1, compiled
+        print("OK")
+        """
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script], capture_output=True, text=True, timeout=300
+    )
+    assert out.stdout.strip().endswith("OK"), out.stderr[-3000:]

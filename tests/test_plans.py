@@ -48,37 +48,37 @@ def test_grouped_digest_single_exchange(docs):
 
 def test_grouped_digest_map_combine_no_raw_shuffle(docs):
     """The DEFAULT grouped digest path (digest_by combine='map') never
-    shuffles raw rows: stage 1 is mapInArrow with zero upstream
-    exchanges; the single exchange in the full plan carries only
-    (group, digest) partial rows into the merge."""
+    shuffles raw rows: stage 1 is the JVM kernel's MapPartitions with
+    zero upstream exchanges; the single exchange in the full plan
+    carries only (group, digest) partial rows into the merge."""
     merged = digest.digest_by(docs, "n_chars", by=["lang"], delta=500.0)
     simple = explain_str(merged, "simple")
-    assert simple.count("MapInArrow") == 1
+    assert simple.count("MapPartitions") == 1
+    assert "MapInArrow" not in simple
     # exactly one exchange in the WHOLE plan: the KB-row merge groupBy
     assert simple.count("Exchange") == 1
-    # nothing between the scan and the python build stage shuffles
-    before_python = simple.split("MapInArrow")[1]
-    assert "Exchange" not in before_python
+    # nothing between the scan and the build stage shuffles
+    before_build = simple.split("MapPartitions")[1]
+    assert "Exchange" not in before_build
     read = explain_str(merged).split("ReadSchema")[1][:200]
     assert "lang" in read and "n_chars" in read and "text" not in read
 
 
 @pytest.mark.parametrize("by", [["lang"], ["lang", "doc_id"], []])
 def test_map_build_input_is_keys_and_value_only(docs, by):
-    """The Arrow build ships only the key columns and the value: no
+    """The JVM build reads only the key columns and the value: no
     partition-id column (the partition id comes from the task) and no
     string-helper copies of integer keys."""
     partials = digest.build_partials_grouped(docs, "n_chars", by=by)
+    simple = explain_str(partials, "simple")
+    assert simple.count("MapPartitions") == 1
     build = [
-        line for line in explain_str(partials, "simple").splitlines()
-        if "MapInArrow" in line
+        line for line in simple.splitlines() if "DeserializeToObject" in line
     ]
     assert len(build) == 1
-    arg = build[0].split("(", 1)[1].split(")#")[0]
-    assert "__pid" not in arg and "__gk_" not in arg
-    assert sorted(a.split("#")[0] for a in arg.split(", ")) == sorted(
-        [*by, "__td_value"]
-    )
+    assert "__pid" not in build[0] and "__gk_" not in build[0]
+    fields = [f.split(",")[0] for f in build[0].split("StructField(")[1:]]
+    assert sorted(fields) == sorted([*by, "__td_value"])
 
 
 def test_grouped_kll_map_combine_no_raw_shuffle(lineitem):
@@ -94,12 +94,12 @@ def test_grouped_kll_map_combine_no_raw_shuffle(lineitem):
 
 
 def test_partition_digest_no_shuffle(lineitem):
-    """The mapInArrow fast path builds partials with NO exchange at all —
-    only digest rows ever shuffle (in the separate merge stage)."""
+    """The per-partition JVM build makes partials with NO exchange at all
+    — only digest rows ever shuffle (in the separate merge stage)."""
     partials = digest.build_partials_per_partition(lineitem, "l_extendedprice")
     plan = explain_str(partials)
     assert "Exchange" not in plan
-    assert "MapInArrow" in plan
+    assert "MapPartitions" in plan
 
 
 def test_merge_shuffles_digest_rows_only(lineitem):

@@ -595,7 +595,7 @@ def test_session_stats_stream_equals_batch(spark, tmp_path):
 
 def test_percentile_enrich_streams_against_frozen_digests(spark, tmp_path):
     """percentile_enrich with a frozen `digests=` snapshot is a stateless
-    mapInArrow — it runs UNCHANGED on a streaming DataFrame (the
+    scalar Arrow UDF — it runs UNCHANGED on a streaming DataFrame (the
     monitoring face: score arriving rows against last crawl's
     distribution).  Chunked triggers must equal the batch operator row
     for row."""
