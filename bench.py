@@ -142,8 +142,8 @@ def main() -> None:
     #    unsplittable row group, which would pin the build to one task;
     #    at real scale splits >> cores and this is a no-op.
     def global_digest():
-        partials = digest.build_partials_per_partition(
-            li, "l_extendedprice", delta=100.0, min_parallelism=cpus
+        partials = digest.build_partials_grouped(
+            li, "l_extendedprice", (), delta=100.0, min_parallelism=cpus
         )
         merged = digest.merge_partials(partials, by=())
         digest.quantiles_of(merged, (0.001, 0.01, 0.5, 0.99, 0.999), by=()).collect()
@@ -167,8 +167,8 @@ def main() -> None:
 
     bench("tdigest_profile_3col", profile_digest)
 
-    # 2a. grouped digest, DEFAULT map-side-combine path (zero raw-row
-    #     shuffle: stage 1 is JVM partials per input partition)
+    # 2. grouped digest, map-side-combine path (zero raw-row shuffle:
+    #    stage 1 is JVM partials per input partition)
     def grouped_digest_map():
         partials = digest.build_partials_grouped(
             docs, "n_chars", by=["lang"], delta=200.0, min_parallelism=cpus
@@ -177,17 +177,6 @@ def main() -> None:
         digest.quantiles_of(d, (0.5, 0.9, 0.99), by=["lang"]).collect()
 
     bench("tdigest_by_lang_mapcombine", grouped_digest_map)
-
-    # 2b. the salted-shuffle fallback on the same data (shuffles every raw
-    #     row) — kept in the suite so the stage-1 shuffle elimination is
-    #     visible as mapcombine <= salted across rounds
-    def grouped_digest_salted():
-        d = digest.digest_by(
-            docs, "n_chars", by=["lang"], delta=200.0, salt=8, combine="shuffle"
-        )
-        digest.quantiles_of(d, (0.5, 0.9, 0.99), by=["lang"]).collect()
-
-    bench("tdigest_by_lang_salted", grouped_digest_salted)
 
     # 3. grouped digest over events (bigger groups, same δ regime)
     bench(

@@ -34,8 +34,8 @@ def make_tdigest_agg(delta: float = 100.0, scale: str = "K_3"):
 
     Convenience surface ONLY: Spark grouped-agg Python UDFs do no map-side
     combine, so the raw rows shuffle to the reducer.  The 100 TB path is
-    operators.digest.build_partials/merge_partials (salted two-stage,
-    KB-sized shuffle) or build_partials_per_partition (no shuffle).
+    operators.digest.digest_by: build_partials_grouped (no raw-row
+    shuffle) then merge_partials (KB-sized shuffle).
     """
     from pyspark.sql.types import BinaryType
 

@@ -237,47 +237,31 @@ def kll_by(
     value_col,
     by: Sequence[str] = (),
     k: int = 200,
-    salt: int = 0,
-    combine: str = "map",
 ):
     """Grouped KLL build+merge over a DataFrame (same two-stage shape as
     operators.digest.digest_by).  Returns (by..., kll binary, n_rows long).
 
-    `combine="map"` (default): stage 1 is one mapInArrow keeping a dict
-    group→sketch per input partition — the raw rows NEVER shuffle, only
-    (group, KB-sketch) partials do.  `combine="shuffle"`: salted
-    groupBy build, the fallback for cardinality-explosive group keys
-    (per-partition dict state would exceed memory).  `salt` only applies
-    to the shuffle path (partitioning, not value hashing, spreads hot
-    groups on the map path): `salt > 1` with `combine="map"` raises
-    ValueError.  Both stages group in Arrow (`_arrow_groups`), so keys
-    stay typed.
+    Stage 1 is one mapInArrow keeping a dict group→sketch per input
+    partition — the raw rows NEVER shuffle, only (group, KB-sketch)
+    partials do, and a hot group is spread over every input split.
+    Stage 2 merges each group's partials in split order.  Both stages
+    group in Arrow (`_arrow_groups`), so keys stay typed.
     """
     import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
-    from .operators._arrow_groups import (
-        floats, map_sketches, merged, reduce_groups, reduce_sketches,
-    )
+    from .operators._arrow_groups import floats, map_sketches, merged, reduce_groups
 
-    if combine == "map" and salt > 1:
-        raise ValueError('salt applies only to combine="shuffle"')
     keys = list(by)
     value = F.col(value_col) if isinstance(value_col, str) else value_col
     sdf = df.select(*[F.col(c) for c in keys], value.cast("double").alias("__v"))
     fields = "kll binary, n_rows long"
-
-    if combine == "map":
-        partials = map_sketches(
-            sdf, keys, lambda b: floats(b.column("__v")),
-            new=lambda: KLL(k),
-            fields=f"__s int, {fields}",
-            emit=lambda sk, n, pid: (pid, sk.to_bytes(), n),
-        )
-    else:
-        salt_col = F.pmod(F.xxhash64("__v"), F.lit(salt)).cast("int") if salt > 1 else F.lit(0)
-        sdf = sdf.withColumn("__s", salt_col)
-        partials = reduce_sketches(sdf, [*keys, "__s"], "__v", lambda: KLL(k), fields)
+    partials = map_sketches(
+        sdf, keys, lambda b: floats(b.column("__v")),
+        new=lambda: KLL(k),
+        fields=f"__s int, {fields}",
+        emit=lambda sk, n, pid: (pid, sk.to_bytes(), n),
+    )
 
     def merge(t) -> tuple:
         sk = merged(t, "kll", "__s", KLL.from_bytes)

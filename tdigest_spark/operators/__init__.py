@@ -2,8 +2,6 @@
 similarity search, text analysis, multimodal plumbing."""
 
 from .digest import (
-    build_partials,
-    build_partials_per_partition,
     cdfs_of,
     digest_by,
     digest_drift,
@@ -15,8 +13,6 @@ from .digest import (
 from .histogram_ops import histogram_by
 
 __all__ = [
-    "build_partials",
-    "build_partials_per_partition",
     "cdfs_of",
     "digest_by",
     "digest_drift",

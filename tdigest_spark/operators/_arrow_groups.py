@@ -17,11 +17,10 @@ output: an int64 key above 2**53 next to a NULL never passes through
 float64 (pandas would round it), and the partition id comes from
 ``TaskContext`` rather than a shipped column.
 
-Stage 2 (and the salted shuffle build) is a keyed reduce:
-`reduce_groups` hands each group's rows to a function as one Arrow table
-and slices the output row's key values from that table, so a reduced key
-never passes through a Python or pandas value either (NaN stays NaN,
-NULL stays NULL).
+Stage 2 is a keyed reduce: `reduce_groups` hands each group's rows to a
+function as one Arrow table and slices the output row's key values from
+that table, so a reduced key never passes through a Python or pandas
+value either (NaN stays NaN, NULL stays NULL).
 """
 
 from __future__ import annotations
@@ -206,25 +205,6 @@ def reduce_groups(
         return pa.Table.from_arrays(cols, schema=arrow_schema)
 
     return sdf.groupBy(*keys).applyInArrow(group_reduce, schema)
-
-
-def reduce_sketches(
-    sdf: DataFrame,
-    keys: Sequence[str],
-    value: str,
-    new: Callable[[], Any],
-    fields: str,
-) -> DataFrame:
-    """`reduce_groups` building one sketch per group from the float
-    column `value`: `new()` is fed the group's non-NaN values in row
-    order, and the row is (serialized sketch, number of values)."""
-
-    def build(table: pa.Table) -> tuple:
-        v = floats(table.column(value))
-        s = Counted(new()).add(v[~np.isnan(v)])
-        return s.sketch.to_bytes(), s.n
-
-    return reduce_groups(sdf, keys, fields, build)
 
 
 def merged(table: pa.Table, blob: str, order: str, load: Callable[[bytes], Any]):

@@ -29,22 +29,16 @@ compress + quantile/cdf.  Spark-first mapping:
                        of the row stays in the JVM
 
 Scale notes (100 TB / 1000 executors):
-- The DEFAULT grouped path (`digest_by(combine="map")`) shuffles ZERO raw
-  rows: stage 1 is the JVM kernel keeping a map group→digest per input
-  partition, so the only shuffle carries (group, KB-digest) partials —
-  splits × groups rows, independent of input size.  A hot group (e.g.
-  lang='en' at 60% of a trillion rows) is automatically spread over every
-  input split, so there is no skewed reducer to salt away.
-- The salted groupBy path (`combine="shuffle"`: `reduce_groups` over
-  (keys, salt)) remains for cardinality-explosive keys (e.g.
-  group-by-user_id with 10^9 groups), where the per-partition dict would
-  exceed executor memory and partials would outnumber raw rows.  With
-  `salt=S` a skewed group splits into S reducers; merge cost is S tiny
-  digests.
-- `build_partials_per_partition` is the ungrouped variant (`by=()`):
-  each input split emits one digest row. This is the 100 TB fast path for
-  global digests.
-- Merge order is canonicalized (sort by salt/split id) so re-runs are
+- Stage 1 shuffles ZERO raw rows: the JVM kernel keeps a map
+  group→digest per input partition, so the only shuffle carries
+  (group, KB-digest) partials — splits × groups rows, independent of
+  input size.  The salt is explicit: `_SALT` is the input-split id, so
+  a hot group (e.g. lang='en' at 60% of a trillion rows) is spread over
+  every input split, and its partials merge in split order.  There is
+  no skewed reducer to salt away.
+- `by=()` is the ungrouped build: each input split emits one digest
+  row — the 100 TB fast path for global digests.
+- Merge order is canonicalized (sort by split id) so re-runs are
   byte-identical; within the singleton regime ANY order is byte-identical
   (tests/test_determinism.py).
 """
@@ -61,7 +55,7 @@ from pyspark.sql import DataFrame, functions as F
 from ..core import MergingDigest
 from ..scale import get_scale
 from ._arrow_groups import (
-    floats, key_tuple, merged, reduce_groups, reduce_sketches, split_groups,
+    floats, key_tuple, merged, reduce_groups, split_groups,
 )
 from ._jvm_kernel import digest_partials
 
@@ -89,50 +83,6 @@ def release_broadcasts() -> None:
             pass  # context already stopped
 
 
-def build_partials(
-    df: DataFrame,
-    value_col,
-    by: Sequence[str] = (),
-    delta: float = 100.0,
-    scale: str = "K_3",
-    salt: int = 0,
-    salt_cols: Sequence[str] = (),
-) -> DataFrame:
-    """Stage-1 digest build: one digest row per (group, salt bucket).
-
-    `value_col` may be a column name or a Column expression. `salt > 1`
-    splits each group into `salt` sub-digests keyed by a hash of the value
-    (deterministic w.r.t. data, independent of input partitioning), which
-    un-skews hot groups like Zipf-heavy `lang` at the cost of `salt` extra
-    KB-sized rows in stage 2.
-
-    Salt degeneracy: hashing the value alone means a group dominated by ONE
-    repeated value stays in one salt bucket (fine for continuous values,
-    degenerate for discrete ones).  Pass `salt_cols` (e.g. a row-unique id
-    column) to mix extra entropy into the salt hash — the digest result is
-    unchanged (salting only partitions work), but constant-valued hot
-    groups then split evenly.
-    """
-    keys = list(by)
-    value = F.col(value_col) if isinstance(value_col, str) else value_col
-    proj = [F.col(k) for k in keys] + [value.cast("double").alias(_VALUE)]
-    proj += [F.col(c) for c in salt_cols if c not in keys]
-    sdf = df.select(*proj)
-    if salt and salt > 1:
-        salt_inputs = [F.col(_VALUE)] + [F.col(c) for c in salt_cols]
-        sdf = sdf.withColumn(
-            _SALT, F.pmod(F.xxhash64(*salt_inputs), F.lit(salt)).cast("int")
-        )
-    else:
-        sdf = sdf.withColumn(_SALT, F.lit(0))
-    sdf = sdf.drop(*[c for c in salt_cols if c not in keys])
-    return reduce_sketches(
-        sdf, [*keys, _SALT], _VALUE,
-        new=lambda: MergingDigest(delta, scale=get_scale(scale)),
-        fields=DIGEST_FIELDS,
-    )
-
-
 def _min_parallel(sdf: DataFrame, min_parallelism: int | None) -> DataFrame:
     if min_parallelism and sdf.rdd.getNumPartitions() < min_parallelism:
         return sdf.repartition(min_parallelism)
@@ -158,12 +108,13 @@ def build_partials_grouped(
 
     State per task is bounded by (#groups seen in this partition) × digest
     size; a hot group is spread across every input split, so skew needs no
-    salting.  For cardinality-explosive keys (millions of groups) prefer
-    `build_partials` (salted shuffle), where reducer state is one group.
+    salting.  This is the one stage 1 for every key cardinality: a salted
+    raw-row shuffle build lost to it at 12, 23, ~200k and ~1.26M groups
+    (BENCH/BASELINE.md).
 
-    Output schema matches `build_partials` (`_SALT` carries the input
-    partition id) so `merge_partials` consumes either interchangeably.
-    `by=()` is the ungrouped build: one digest row per input partition.
+    Output schema: (*by, `_SALT` = input partition id, digest, n_rows),
+    what `merge_partials` consumes.  `by=()` is the ungrouped build: one
+    digest row per input partition.
 
     `min_parallelism` (opt-in): repartition iff the input has fewer
     partitions than this — rescues local runs over few/unsplittable files
@@ -178,23 +129,6 @@ def build_partials_grouped(
     return digest_partials(
         sdf, keys, [_VALUE], f"{_SALT} int, {DIGEST_FIELDS}", delta, scale,
         per_column=False,
-    )
-
-
-def build_partials_per_partition(
-    df: DataFrame,
-    value_col,
-    delta: float = 100.0,
-    scale: str = "K_3",
-    min_parallelism: int | None = None,
-) -> DataFrame:
-    """Shuffle-free stage 1 for ungrouped digests: ONE digest row per input
-    partition (the 100 TB fast path — the raw data never crosses the
-    network; only ~KB digest rows do).  `build_partials_grouped` with
-    `by=()`."""
-    return build_partials_grouped(
-        df, value_col, (), delta=delta, scale=scale,
-        min_parallelism=min_parallelism,
     )
 
 
@@ -282,27 +216,12 @@ def digest_by(
     by: Sequence[str] = (),
     delta: float = 100.0,
     scale: str = "K_3",
-    salt: int = 0,
-    combine: str = "map",
 ) -> DataFrame:
     """Convenience: grouped digest build+merge. Returns (by..., digest, n_rows).
 
-    `combine="map"` (default): map-side-combining build — zero raw-row
-    shuffle, the 100 TB path.  `combine="shuffle"`: salted groupBy build —
-    the fallback for cardinality-explosive group keys (see module doc).
-    `salt` splits groups only on the shuffle path; `salt > 1` with
-    `combine="map"` raises ValueError.
-    """
-    if combine == "map" and salt > 1:
-        raise ValueError('salt applies only to combine="shuffle"')
-    if combine == "map" and by:
-        partials = build_partials_grouped(df, value_col, by=by, delta=delta, scale=scale)
-    elif combine == "map":
-        partials = build_partials_per_partition(df, value_col, delta=delta, scale=scale)
-    else:
-        partials = build_partials(
-            df, value_col, by=by, delta=delta, scale=scale, salt=salt
-        )
+    `build_partials_grouped` (zero raw-row shuffle, the 100 TB path), then
+    `merge_partials`; `by=()` gives one global digest row."""
+    partials = build_partials_grouped(df, value_col, by, delta=delta, scale=scale)
     return merge_partials(partials, by=by)
 
 
@@ -316,7 +235,7 @@ def digest_of(
 ) -> MergingDigest:
     """Whole-column digest, driver-side result. Map-side build per partition
     (no data shuffle), tree merge of KB-sized digest rows."""
-    partials = build_partials_per_partition(df, value_col, delta=delta, scale=scale)
+    partials = build_partials_grouped(df, value_col, (), delta=delta, scale=scale)
     merged = merge_partials(partials, by=(), fanin=fanin, stages=stages)
     rows = merged.collect()
     if not rows:
@@ -440,9 +359,9 @@ def quantile_filter(
     feeding a pipeline decision, not just a report.
 
     Plan shape (the 100 TB path): one map-side-combining digest build
-    (`digest_by(combine="map")` — raw rows never shuffle, partials are
-    KB), a cutoff table of |groups| rows, then a BROADCAST join of the
-    cutoffs back onto the corpus with a scan-stage comparison.  The big
+    (`digest_by` — raw rows never shuffle, partials are KB), a cutoff
+    table of |groups| rows, then a BROADCAST join of the cutoffs back
+    onto the corpus with a scan-stage comparison.  The big
     side is scanned exactly twice (build + filter) and shuffled zero
     times.
 

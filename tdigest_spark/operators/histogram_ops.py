@@ -17,7 +17,6 @@ from __future__ import annotations
 
 from typing import Sequence
 
-import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..histogram import LogHistogram
@@ -76,11 +75,3 @@ def histogram_by(
         F.sum("nr").cast("bigint").alias("n_rows"),
     )
     return out
-
-
-def histogram_quantile(counts: list, min_value: float, max_value: float,
-                       q: float, epsilon: float = 0.1) -> float:
-    """Driver-side quantile from a counts row."""
-    h = LogHistogram(min_value, max_value, epsilon)
-    h.counts = np.asarray(counts, dtype=np.int64)
-    return h.quantile(q)

@@ -6,7 +6,7 @@ planning. The knobs below are the ones that matter for the digest workload:
 
 - Arrow execution on (the UDF boundary is Arrow batches; the 10k default
   batch size equals the reference's ingestion chunk, TDigest.jl:134-138)
-- AQE on (runtime coalescing + skew splitting for the salted build stage)
+- AQE on (runtime coalescing + skew splitting as a backstop)
 - UTC session timezone (duckdb-oracle comparability)
 - shuffle partitions sized to cores for local runs (the driver overrides
   per-cluster in production via spark-submit --conf)
@@ -94,11 +94,3 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
         df._jdf.queryExecution(), mode
     )
 
-
-def assert_pushdown(df: DataFrame, expect_filters: bool = False) -> str:
-    """Sanity helper for tests: the scan must show a pruned ReadSchema
-    (and PushedFilters when a filter precedes it)."""
-    plan = explain_str(df)
-    if expect_filters and "PushedFilters: []" in plan:
-        raise AssertionError(f"expected pushed filters, got none:\n{plan}")
-    return plan

@@ -522,7 +522,7 @@ def q_tdigest_lineitem_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions import tdigest_total_weight_udf
 
     li = load_table(spark, sf_dir, "lineitem")
-    partials = digest.build_partials_per_partition(li, "l_extendedprice", delta=100.0)
+    partials = digest.build_partials_grouped(li, "l_extendedprice", (), delta=100.0)
     merged = digest.merge_partials(partials, by=())
     est = digest.quantiles_of(merged, QUANTILES, by=()).select(
         F.col("q").cast("double").alias("q"), "quantile"

@@ -9,8 +9,8 @@ per-row invariant: byte-identical extracted text per url, verified by
 sha256 in tests).  Generation is vectorized: spark.range drives ids and
 mapInPandas emits Arrow batches; the only per-row Python is string slicing.
 
-`lang` is Zipf-skewed (en-heavy) on purpose: it exercises the salted
-digest build path.  `html` is a deterministic wrapper around `text` and
+`lang` is Zipf-skewed (en-heavy) on purpose: it exercises the map-side
+digest build's skew split (a hot group spread over every input split).  `html` is a deterministic wrapper around `text` and
 `extract_text(html)` inverts it exactly.
 
 The table is written as a partitioned parquet layout (hive-style

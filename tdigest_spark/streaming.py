@@ -278,13 +278,13 @@ def digest_sink(
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         import pandas as pd
 
-        from .operators.digest import _SALT, build_partials_per_partition
+        from .operators.digest import _SALT, build_partials_grouped
 
         # executor-side partial build (JVM kernel, no shuffle): the driver
         # only ever merges KB-sized digest rows, never the batch itself —
         # large triggers stay distributed
-        partials = build_partials_per_partition(
-            batch_df, value_col, delta=delta, scale=scale
+        partials = build_partials_grouped(
+            batch_df, value_col, (), delta=delta, scale=scale
         ).collect()
         d = MergingDigest(delta, scale=get_scale(scale))
         n = 0

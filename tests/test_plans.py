@@ -35,22 +35,11 @@ def test_filter_pushdown_and_column_pruning(docs):
     assert "text" not in plan.split("ReadSchema")[1][:200]
 
 
-def test_grouped_digest_single_exchange(docs):
-    """Stage-1 digest build (shuffle fallback path) shuffles exactly once
-    (on group+salt); the value column is pruned at the scan."""
-    partials = digest.build_partials(docs, "n_chars", by=["lang"], salt=4)
-    simple = explain_str(partials, "simple")
-    assert simple.count("Exchange") == 1
-    assert "FlatMapGroupsInArrow" in simple
-    read = explain_str(partials).split("ReadSchema")[1][:200]
-    assert "lang" in read and "n_chars" in read and "text" not in read
-
-
 def test_grouped_digest_map_combine_no_raw_shuffle(docs):
-    """The DEFAULT grouped digest path (digest_by combine='map') never
-    shuffles raw rows: stage 1 is the JVM kernel's MapPartitions with
-    zero upstream exchanges; the single exchange in the full plan
-    carries only (group, digest) partial rows into the merge."""
+    """The grouped digest path (digest_by) never shuffles raw rows:
+    stage 1 is the JVM kernel's MapPartitions with zero upstream
+    exchanges; the single exchange in the full plan carries only (group,
+    digest) partial rows into the merge."""
     merged = digest.digest_by(docs, "n_chars", by=["lang"], delta=500.0)
     simple = explain_str(merged, "simple")
     assert simple.count("MapPartitions") == 1
@@ -82,7 +71,7 @@ def test_map_build_input_is_keys_and_value_only(docs, by):
 
 
 def test_grouped_kll_map_combine_no_raw_shuffle(lineitem):
-    """kll_by's default map-side-combine path: same zero-raw-shuffle shape
+    """kll_by's map-side-combine build: same zero-raw-shuffle shape
     as the digest build."""
     from tdigest_spark.kll import kll_by
 
@@ -96,14 +85,14 @@ def test_grouped_kll_map_combine_no_raw_shuffle(lineitem):
 def test_partition_digest_no_shuffle(lineitem):
     """The per-partition JVM build makes partials with NO exchange at all
     — only digest rows ever shuffle (in the separate merge stage)."""
-    partials = digest.build_partials_per_partition(lineitem, "l_extendedprice")
+    partials = digest.build_partials_grouped(lineitem, "l_extendedprice", ())
     plan = explain_str(partials)
     assert "Exchange" not in plan
     assert "MapPartitions" in plan
 
 
 def test_merge_shuffles_digest_rows_only(lineitem):
-    partials = digest.build_partials_per_partition(lineitem, "l_extendedprice")
+    partials = digest.build_partials_grouped(lineitem, "l_extendedprice", ())
     merged = digest.merge_partials(partials, by=())
     # one exchange for the merge groupBy; its input is the partials
     # projection (digest binary + bookkeeping), not the data columns

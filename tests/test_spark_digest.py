@@ -10,8 +10,6 @@ from pyspark.sql import functions as F
 
 from tdigest_spark.core import MergingDigest
 from tdigest_spark.operators import (
-    build_partials,
-    build_partials_per_partition,
     digest_by,
     digest_of,
     merge_partials,
@@ -55,30 +53,6 @@ def test_grouped_digest_singleton_exact(spark):
             assert d.quantile(q) == quantile_ref(vals, q), (lang, q)
 
 
-def test_salted_build_same_result_in_singleton_regime(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    plain = digest_by(docs, "n_chars", by=["lang"], delta=500, salt=0, combine="shuffle")
-    salted = digest_by(docs, "n_chars", by=["lang"], delta=500, salt=8, combine="shuffle")
-    a = {r["lang"]: bytes(r["digest"]) for r in plain.collect()}
-    b = {r["lang"]: bytes(r["digest"]) for r in salted.collect()}
-    # singleton regime: pure multiset union -> byte-identical however split
-    assert a == b
-
-
-def test_map_combine_equals_shuffle_build_in_singleton_regime(spark):
-    """The default map-side-combine grouped build and the salted-shuffle
-    fallback are the same multiset union -> byte-identical digests while
-    in the singleton regime."""
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    mapped = digest_by(docs, "n_chars", by=["lang"], delta=500, combine="map")
-    shuffled = digest_by(
-        docs, "n_chars", by=["lang"], delta=500, salt=8, combine="shuffle"
-    )
-    a = {r["lang"]: (bytes(r["digest"]), r["n_rows"]) for r in mapped.collect()}
-    b = {r["lang"]: (bytes(r["digest"]), r["n_rows"]) for r in shuffled.collect()}
-    assert a == b
-
-
 def test_map_combine_multi_key_with_date(spark):
     """Map-combine grouping over a (string, date) composite key round-trips
     key types through Arrow and matches per-group exact quantiles."""
@@ -94,29 +68,6 @@ def test_map_combine_multi_key_with_date(spark):
         d = MergingDigest.from_bytes(bytes(r["digest"]))
         assert d.total_weight == len(vals)
         assert d.quantile(0.5) == quantile_ref(vals, 0.5)
-
-
-def test_salt_cols_split_constant_hot_group(spark):
-    """A group whose value is one repeated constant degenerates to a single
-    salt bucket when salting on the value alone; mixing a row-unique column
-    via salt_cols splits it across buckets (same final digest)."""
-    rows = [(i, "hot", 42.0) for i in range(400)] + [(1000 + i, "cold", float(i)) for i in range(40)]
-    df = spark.createDataFrame(rows, "row_id long, k string, v double").repartition(8)
-
-    value_only = build_partials(df, "v", by=["k"], salt=8)
-    n_value = value_only.filter(F.col("k") == "hot").count()
-    assert n_value == 1  # degenerate: one bucket holds all 400 rows
-
-    entropic = build_partials(df, "v", by=["k"], salt=8, salt_cols=["row_id"])
-    n_entropic = entropic.filter(F.col("k") == "hot").count()
-    assert n_entropic == 8  # spread across every salt bucket
-
-    # the final digest is identical either way (multiset union, singleton regime)
-    a = merge_partials(value_only, by=["k"]).collect()
-    b = merge_partials(entropic, by=["k"]).collect()
-    da = {r["k"]: bytes(r["digest"]) for r in a}
-    db = {r["k"]: bytes(r["digest"]) for r in b}
-    assert da == db
 
 
 def test_quantiles_of_table(spark):
@@ -154,7 +105,7 @@ def test_sql_registration(spark):
 
 
 def test_two_stage_merge_equals_single_stage(spark, lineitem):
-    partials = build_partials_per_partition(lineitem, "l_extendedprice", delta=100)
+    partials = build_partials_grouped(lineitem, "l_extendedprice", (), delta=100)
     partials = partials.cache()
     one = merge_partials(partials, by=(), stages=1).collect()[0]
     two = merge_partials(partials, by=(), fanin=4, stages=2).collect()[0]
@@ -587,9 +538,10 @@ def test_percentile_enrich_bigint_keys_with_null_in_batch(spark):
 
 def test_nan_and_null_keys_stay_distinct_groups(spark):
     """A double key with NaN rows and NULL rows in one batch: every
-    grouped build+merge lane returns a NaN group and a NULL group with
-    their own row counts, and percentile_enrich scores the NULL rows
-    against the NULL group's digest."""
+    grouped build+merge lane (one- and two-stage digest merges, KLL)
+    returns a NaN group and a NULL group with their own row counts, and
+    percentile_enrich scores the NULL rows against the NULL group's
+    digest."""
     from tdigest_spark.kll import kll_by
     from tdigest_spark.operators import percentile_enrich
 
@@ -606,14 +558,17 @@ def test_nan_and_null_keys_stay_distinct_groups(spark):
             out["nan" if g is not None and math.isnan(g) else g] = r["n_rows"]
         return out
 
+    # three input partitions (ids 1-2, 3-4, 5-6): the NULL group's two
+    # partials fall in different fanin=2 buckets, so the first merge
+    # stage sees two buckets and the second stage merges them
+    split = build_partials_grouped(spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, 3), df.schema), "v", by=["g"])
+    assert sorted(r["__td_salt"] for r in split.collect() if r["g"] is None) == [1, 2]
+
     expect = {"nan": 2, None: 3, 1.0: 1}
     lanes = {
         "map": merge_partials(build_partials_grouped(df, "v", by=["g"]), by=["g"]),
-        "salted": merge_partials(build_partials(df, "v", by=["g"], salt=4), by=["g"]),
-        "two-stage": merge_partials(
-            build_partials(df, "v", by=["g"], salt=4), by=["g"], fanin=2, stages=2
-        ),
-        "kll": kll_by(df, "v", by=["g"], combine="shuffle", salt=4),
+        "two-stage": merge_partials(split, by=["g"], fanin=2, stages=2),
         "kll-map": kll_by(df, "v", by=["g"]),
     }
     for lane, frame in lanes.items():
@@ -691,7 +646,7 @@ def test_map_builders_one_partial_per_group_and_partition(spark):
         (build_partials_multi(df, ["v", "id"], by=["lang", "k"]),
          ("lang", "k", "col"), 32, n_v + 40_000),
         (extract_digest_partials(html, by=["lang"]), ("lang",), 4, n_v),
-        (build_partials_per_partition(df, "v"), (), 1, n_v),
+        (build_partials_grouped(df, "v", ()), (), 1, n_v),
         # float keys: NaN is one group, -0.0 and 0.0 are one group
         (build_partials_grouped(df.withColumn("f", F.when(
             F.col("id") % 3 == 0, F.lit(float("nan"))
