@@ -484,11 +484,11 @@ def main() -> None:
 
     # 10. KLL grouped quantiles (second quantile sketch family)
     def kll():
-        from tdigest_spark.kll import kll_by, kll_quantile_udf
+        from tdigest_spark.functions import kll_quantile_udf
+        from tdigest_spark.kll import kll_by
 
         sk = kll_by(li, "l_extendedprice", by=["l_returnflag"], k=200)
-        qudf = kll_quantile_udf()
-        sk.select("l_returnflag", qudf(F.col("kll"), F.lit(0.99))).collect()
+        sk.select("l_returnflag", kll_quantile_udf(F.col("kll"), F.lit(0.99))).collect()
 
     bench("kll_by_returnflag", kll)
 

@@ -145,7 +145,8 @@ def run(spark, args) -> dict:
     from pyspark import StorageLevel
 
     from tdigest_spark import sketches as SK
-    from tdigest_spark.kll import kll_by, kll_quantile_udf
+    from tdigest_spark.functions import kll_quantile_udf
+    from tdigest_spark.kll import kll_by
     from tdigest_spark.operators import digest
     from tdigest_spark.operators.dedup import (
         apply_dedup,
@@ -516,8 +517,9 @@ def run(spark, args) -> dict:
         hll.select(SK.hll_estimate_col("registers", 12)).collect()[0][0], 1
     )
     kll = kll_by(curated, F.col("n_tokens").cast("double"), by=(), k=200)
-    qudf = kll_quantile_udf()
-    report["token_p99"] = kll.select(qudf(F.col("kll"), F.lit(0.99))).collect()[0][0]
+    report["token_p99"] = kll.select(
+        kll_quantile_udf(F.col("kll"), F.lit(0.99))
+    ).collect()[0][0]
     _mark("profile")
 
     # 5. write curated output (plus the model-score columns when enabled)

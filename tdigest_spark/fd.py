@@ -222,19 +222,17 @@ def fd_sketch_by(
     """Distributed FD build, digest_by's map-side-combine shape:
     stage 1 = one mapInArrow keeps one sketch per group per partition
     (zero raw-vector shuffle — the shuffle carries ≤(groups×partitions)
-    serialized ℓ×d buffers); stage 2 = applyInPandas merge per group.
+    serialized ℓ×d buffers); stage 2 = `reduce_groups` merges each
+    group's partials in partition order, as kll_by does, with the keys
+    kept typed (NaN and NULL stay two groups).
     Returns (by…, fd binary, n_rows long)."""
-    import pandas as pd
     import pyarrow.compute as pc
     from pyspark.sql import functions as F
 
-    from .operators._arrow_groups import map_groups
+    from .operators._arrow_groups import map_groups, merged, reduce_groups
 
     by = list(by or [])
     sdf = df.select(*by, vec_col).filter(F.col(vec_col).isNotNull())
-    part_schema = ", ".join(
-        [*(f"{c} {df.schema[c].dataType.simpleString()}" for c in by), _FD_FIELDS]
-    )
 
     def matrix(batch) -> np.ndarray:
         col = batch.column(vec_col)
@@ -250,28 +248,15 @@ def fd_sketch_by(
         return sk
 
     partials = map_groups(
-        sdf, by, _FD_FIELDS, matrix, feed,
-        emit=lambda sk, pid: [(sk.serialize(), sk.n_rows)],
+        sdf, by, f"__s int, {_FD_FIELDS}", matrix, feed,
+        emit=lambda sk, pid: [(pid, sk.serialize(), sk.n_rows)],
     )
 
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc = None
-        for blob in pdf["fd"]:
-            sk = FrequentDirections.deserialize(bytes(blob))
-            acc = sk if acc is None else acc.merge(sk)
-        head = {c: [pdf[c].iloc[0]] for c in pdf.columns if c not in ("fd", "n_rows")}
-        head["fd"] = [acc.serialize()]
-        head["n_rows"] = [acc.n_rows]
-        return pd.DataFrame(head)
+    def merge(t) -> tuple:
+        sk = merged(t, "fd", "__s", FrequentDirections.deserialize)
+        return sk.serialize(), sk.n_rows
 
-    if by:
-        return partials.groupBy(*by).applyInPandas(merge, schema=part_schema)
-    return (
-        partials.withColumn("__g", F.lit(0))
-        .groupBy("__g")
-        .applyInPandas(merge, schema="__g int, " + _FD_FIELDS)
-        .drop("__g")
-    )
+    return reduce_groups(partials, by, _FD_FIELDS, merge)
 
 
 def fd_sketch(df: DataFrame, vec_col: str, ell: int = 64) -> FrequentDirections:

@@ -1,8 +1,11 @@
-"""Scalar SQL surface: vectorized pandas UDFs over serialized digest columns.
+"""SQL surface: the query side of every sketch, as Arrow UDFs over
+serialized sketch columns.
 
-Registered names (all take a BinaryType digest produced by
-operators.digest.build/merge):
+Registered by `register_sql_functions` (each `digest` is a BinaryType
+digest produced by operators.digest.digest_by / merge_partials or by
+tdigest_agg):
 
+- tdigest_agg(v)                       -> binary (aggregate)
 - tdigest_quantile(digest, q)          -> double
 - tdigest_cdf(digest, x)               -> double
 - tdigest_trimmed_mean(digest, q1, q2) -> double
@@ -10,124 +13,124 @@ operators.digest.build/merge):
 - tdigest_min(digest) / tdigest_max(digest) -> double
 - tdigest_centroid_count(digest)       -> int
 
-Digests are ~8·delta bytes, so deserialization cost per row is trivial;
-the UDFs are Arrow-batched (one Python call per ~10k digest rows).
-A per-batch cache avoids re-deserializing when the same digest appears
-with many q values (the quantiles_of explode pattern).
+Registered by `register_sketch_sql_functions`:
+
+- kll_quantile(kll, q)                 -> double
+- kll_stored_weight(kll)               -> long
+- hll_estimate(registers)              -> double
+- kmv_estimate(kmv, k)                 -> double
+
+NULL in -> NULL out: a NULL sketch or a NULL/NaN argument gives NULL,
+and so does a NaN result (the quantile of an empty digest, say).
+
+Every query function is one `_sketch_udf`: a scalar Arrow UDF (one
+Python call per ~10k-row Arrow batch) that loads each distinct sketch
+once per batch, so a digest seen with many q values (the quantiles_of
+explode pattern) is deserialized once.
 """
 
 from __future__ import annotations
 
+from typing import Any, Callable
+
 import numpy as np
-import pandas as pd
-from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import DoubleType, IntegerType
+import pyarrow as pa
+from pyspark.sql import SparkSession, functions as F
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import (
+    BinaryType, DataType, DoubleType, IntegerType, LongType,
+)
 
 from ..core import MergingDigest
+from ..kll import KLL
+from ..operators._arrow_groups import floats
 from ..scale import get_scale
+from ..sketches import hll_estimate_np, kmv_estimate_py
 
 
 def make_tdigest_agg(delta: float = 100.0, scale: str = "K_3"):
-    """Grouped-aggregate pandas UDF: `groupBy(...).agg(tdigest_agg(col))`
+    """Grouped-aggregate Arrow UDF: `groupBy(...).agg(tdigest_agg(col))`
     or, registered, a SQL aggregate: `SELECT k, tdigest_agg(v) GROUP BY k`.
+    NULL and NaN values are skipped; a group without values gets an
+    empty digest.
 
     Convenience surface ONLY: Spark grouped-agg Python UDFs do no map-side
     combine, so the raw rows shuffle to the reducer.  The 100 TB path is
     operators.digest.digest_by: build_partials_grouped (no raw-row
     shuffle) then merge_partials (KB-sized shuffle).
     """
-    from pyspark.sql.types import BinaryType
 
-    @pandas_udf(BinaryType())
-    def tdigest_agg(v: pd.Series) -> bytes:
+    def tdigest_agg(v: pa.Array) -> bytes:
         d = MergingDigest(delta, scale=get_scale(scale))
-        vals = v.to_numpy(dtype=np.float64)
+        vals = floats(v)
         vals = vals[~np.isnan(vals)]
         if vals.size:
             d.add(vals)
         return d.to_bytes()
 
-    return tdigest_agg
+    return F.arrow_udf(tdigest_agg, BinaryType())
 
 
 tdigest_agg_udf = make_tdigest_agg()
 
 
-def _digest_cache(blobs: pd.Series) -> dict:
-    cache: dict[bytes, MergingDigest] = {}
-    for b in blobs:
-        if b is not None:
-            bb = bytes(b)
-            if bb not in cache:
-                cache[bb] = MergingDigest.from_bytes(bb)
-    return cache
+def _sketch_udf(
+    load: Callable[[Any], Any],
+    query: Callable[..., Any],
+    return_type: DataType,
+):
+    """Scalar Arrow UDF over (sketch, *args): per row,
+    `query(load(sketch), *args)` with each numeric argument as a Python
+    float.  Each distinct sketch value is loaded once per Arrow batch.
+    A NULL sketch or a NULL/NaN argument gives NULL without calling
+    `query`; a NaN result goes out as NULL."""
+    arrow_type = to_arrow_type(return_type)
+
+    def run(sketches: pa.Array, *args: pa.Array) -> pa.Array:
+        cols = [floats(a).tolist() for a in args]
+        loaded: dict = {}
+        out = []
+        for i, s in enumerate(sketches.to_pylist()):
+            xs = [c[i] for c in cols]
+            if s is None or any(x != x for x in xs):
+                out.append(None)
+                continue
+            key = s if isinstance(s, bytes) else tuple(s)  # array sketches
+            if key not in loaded:
+                loaded[key] = load(s)
+            out.append(query(loaded[key], *xs))
+        return pa.array(out, type=arrow_type, from_pandas=True)
+
+    return F.arrow_udf(run, return_type)
 
 
-def _apply2(blobs: pd.Series, args: pd.Series, fn) -> pd.Series:
-    cache = _digest_cache(blobs)
-    out = np.full(len(blobs), np.nan)
-    for i, (b, a) in enumerate(zip(blobs, args)):
-        if b is not None and a == a:
-            out[i] = fn(cache[bytes(b)], float(a))
-    return pd.Series(out)
+_load_digest = MergingDigest.from_bytes
+tdigest_quantile_udf = _sketch_udf(_load_digest, MergingDigest.quantile, DoubleType())
+tdigest_cdf_udf = _sketch_udf(_load_digest, MergingDigest.cdf, DoubleType())
+tdigest_trimmed_mean_udf = _sketch_udf(
+    _load_digest, MergingDigest.trimmed_mean, DoubleType()
+)
+tdigest_total_weight_udf = _sketch_udf(
+    _load_digest, lambda d: d.total_weight, DoubleType()
+)
+tdigest_min_udf = _sketch_udf(_load_digest, MergingDigest.minimum, DoubleType())
+tdigest_max_udf = _sketch_udf(_load_digest, MergingDigest.maximum, DoubleType())
+tdigest_centroid_count_udf = _sketch_udf(_load_digest, len, IntegerType())
 
-
-@pandas_udf(DoubleType())
-def tdigest_quantile_udf(digest: pd.Series, q: pd.Series) -> pd.Series:
-    return _apply2(digest, q, lambda d, v: d.quantile(v))
-
-
-@pandas_udf(DoubleType())
-def tdigest_cdf_udf(digest: pd.Series, x: pd.Series) -> pd.Series:
-    return _apply2(digest, x, lambda d, v: d.cdf(v))
-
-
-@pandas_udf(DoubleType())
-def tdigest_trimmed_mean_udf(
-    digest: pd.Series, q1: pd.Series, q2: pd.Series
-) -> pd.Series:
-    cache = _digest_cache(digest)
-    out = np.full(len(digest), np.nan)
-    for i, (b, a, c) in enumerate(zip(digest, q1, q2)):
-        # NULL q1/q2 arrive as NaN: yield NULL like the sibling UDFs
-        # (_apply2's a == a skip) — trimmed_mean(nan, nan) would raise
-        # and abort the whole job
-        if b is not None and a == a and c == c:
-            out[i] = cache[bytes(b)].trimmed_mean(float(a), float(c))
-    return pd.Series(out)
-
-
-@pandas_udf(DoubleType())
-def tdigest_total_weight_udf(digest: pd.Series) -> pd.Series:
-    cache = _digest_cache(digest)
-    return pd.Series(
-        [cache[bytes(b)].total_weight if b is not None else np.nan for b in digest]
-    )
-
-
-@pandas_udf(DoubleType())
-def tdigest_min_udf(digest: pd.Series) -> pd.Series:
-    cache = _digest_cache(digest)
-    return pd.Series(
-        [cache[bytes(b)].minimum() if b is not None else np.nan for b in digest]
-    )
-
-
-@pandas_udf(DoubleType())
-def tdigest_max_udf(digest: pd.Series) -> pd.Series:
-    cache = _digest_cache(digest)
-    return pd.Series(
-        [cache[bytes(b)].maximum() if b is not None else np.nan for b in digest]
-    )
-
-
-@pandas_udf(IntegerType())
-def tdigest_centroid_count_udf(digest: pd.Series) -> pd.Series:
-    cache = _digest_cache(digest)
-    return pd.Series(
-        [len(cache[bytes(b)]) if b is not None else -1 for b in digest]
-    ).astype("int32")
+kll_quantile_udf = _sketch_udf(KLL.from_bytes, KLL.quantile, DoubleType())
+#: sum of level weights inside the sketch — equals n exactly (the
+#: odd-compaction leftover rule conserves weight), which makes weight
+#: conservation a driver-gateable integer
+kll_stored_weight_udf = _sketch_udf(
+    KLL.from_bytes, lambda s: int(s.stored_weight), LongType()
+)
+#: HLL estimate from a register array — SQL twin of sketches.hll_estimate_col
+hll_estimate_udf = _sketch_udf(
+    lambda r: np.asarray(r, dtype=np.uint8), hll_estimate_np, DoubleType()
+)
+#: KMV distinct estimate — SQL twin of sketches.kmv_estimate_col (no
+#: prefilter form)
+kmv_estimate_udf = _sketch_udf(tuple, kmv_estimate_py, DoubleType())
 
 
 def register_sql_functions(spark: SparkSession) -> None:
@@ -142,34 +145,6 @@ def register_sql_functions(spark: SparkSession) -> None:
     spark.udf.register("tdigest_centroid_count", tdigest_centroid_count_udf)
 
 
-@pandas_udf(DoubleType())
-def hll_estimate_udf(registers: pd.Series) -> pd.Series:
-    """HLL estimate from a register array — SQL twin of
-    sketches.hll_estimate_col (same constants/branches)."""
-    import numpy as np
-
-    from ..streaming import _hll_estimate_np
-
-    return registers.map(
-        lambda r: _hll_estimate_np(np.asarray(r, dtype=np.uint8))
-    )
-
-
-@pandas_udf(DoubleType())
-def kmv_estimate_udf(kmv: pd.Series, k: pd.Series) -> pd.Series:
-    """KMV distinct estimate — SQL twin of sketches.kmv_estimate_col
-    (no prefilter form): stored size under capacity, (k-1)/u_k at it."""
-    def est(args):
-        sketch, kk = args
-        kk = int(kk)
-        if len(sketch) < kk:
-            return float(len(sketch))
-        u_k = (int(sketch[kk - 1], 16) + 1) / float(16**15)
-        return (kk - 1) / u_k
-
-    return pd.Series([est(a) for a in zip(kmv, k)], dtype="float64")
-
-
 def register_sketch_sql_functions(spark: SparkSession) -> None:
     """Register the companion-sketch QUERY surface for SQL-first users:
     `kll_quantile(kll, 0.99d)`, `kll_stored_weight(kll)`,
@@ -179,9 +154,7 @@ def register_sketch_sql_functions(spark: SparkSession) -> None:
     with plain built-in aggregates (sketches.py / kll.py), so any SQL
     pipeline that can call those builders' column expressions already
     produces them."""
-    from ..kll import kll_quantile_udf, kll_stored_weight_udf
-
-    spark.udf.register("kll_quantile", kll_quantile_udf())
-    spark.udf.register("kll_stored_weight", kll_stored_weight_udf())
+    spark.udf.register("kll_quantile", kll_quantile_udf)
+    spark.udf.register("kll_stored_weight", kll_stored_weight_udf)
     spark.udf.register("hll_estimate", hll_estimate_udf)
     spark.udf.register("kmv_estimate", kmv_estimate_udf)

@@ -28,7 +28,6 @@ import struct
 from typing import Iterable, Sequence
 
 import numpy as np
-import pandas as pd
 
 
 _C = 2.0 / 3.0
@@ -268,43 +267,3 @@ def kll_by(
         return sk.to_bytes(), pc.sum(t["n_rows"]).as_py()
 
     return reduce_groups(partials, keys, fields, merge)
-
-
-def kll_stored_weight_udf():
-    """Sum of level weights inside the sketch — equals n exactly (the
-    odd-compaction leftover rule conserves weight), which makes weight
-    conservation a driver-gateable integer."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import LongType
-
-    @pandas_udf(LongType())
-    def _w(blob: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                int(KLL.from_bytes(bytes(b)).stored_weight) if b is not None else 0
-                for b in blob
-            ]
-        )
-
-    return _w
-
-
-def kll_quantile_udf():
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def _q(blob: pd.Series, q: pd.Series) -> pd.Series:
-        cache: dict[bytes, KLL] = {}
-        out = []
-        for b, qq in zip(blob, q):
-            if b is None:
-                out.append(float("nan"))
-                continue
-            bb = bytes(b)
-            if bb not in cache:
-                cache[bb] = KLL.from_bytes(bb)
-            out.append(cache[bb].quantile(float(qq)))
-        return pd.Series(out)
-
-    return _q

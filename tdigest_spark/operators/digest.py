@@ -22,11 +22,12 @@ compress + quantile/cdf.  Spark-first mapping:
                        groups) — digests are ~8·delta bytes, so the
                        shuffle moves KBs per group regardless of input
                        size
-    evaluate:          scalar pandas UDFs over the digest column
-                       (tdigest_quantile / tdigest_cdf / ...); per-row
-                       scoring (percentile_enrich) is one scalar Arrow
-                       UDF over the key and value columns only — the rest
-                       of the row stays in the JVM
+    evaluate:          scalar Arrow UDFs over the digest column
+                       (tdigest_quantile / tdigest_cdf / ..., the
+                       `functions` surface); per-row scoring
+                       (percentile_enrich) is one scalar Arrow UDF over
+                       the key and value columns only — the rest of the
+                       row stays in the JVM
 
 Scale notes (100 TB / 1000 executors):
 - Stage 1 shuffles ZERO raw rows: the JVM kernel keeps a map
@@ -251,9 +252,9 @@ def quantiles_of(
 ) -> DataFrame:
     """Expand a digest table to one row per (group, q) with the estimate.
 
-    Declarative shape: cross-join with a literal q array (broadcast by
-    Catalyst — it is a single-column local relation), then one scalar
-    pandas UDF evaluates the digest."""
+    Declarative shape: explode a literal q array next to each digest,
+    then one scalar Arrow UDF (`functions.tdigest_quantile_udf`)
+    evaluates the digest, loading each digest once per Arrow batch."""
     from ..functions import tdigest_quantile_udf
 
     qs = [float(q) for q in qs]

@@ -439,7 +439,7 @@ FROM g JOIN cdf ON g.lang = cdf.lang JOIN tm ON g.lang = tm.lang
 
 
 def q_tdigest_agg_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """tdigest as a true SQL AGGREGATE (grouped-agg pandas UDF): one SQL
+    """tdigest as a true SQL AGGREGATE (grouped-agg Arrow UDF): one SQL
     statement builds and queries digests. (lang, source) groups are <= 112
     rows up to sf0.1 — a query-local aggregate at AGG_SQL_DELTA keeps them
     singleton-exact (the library default tdigest_agg stays delta=100)."""
@@ -615,22 +615,21 @@ def q_kll_rank_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact mid-rank within the KLL bound?  Plus the sketch's INTERNAL
     stored weight == exact group count (the odd-compaction leftover rule
     conserves weight exactly — a driver-gateable integer)."""
-    from .kll import kll_by, kll_quantile_udf, kll_stored_weight_udf
+    from .functions import kll_quantile_udf, kll_stored_weight_udf
+    from .kll import kll_by
 
     li = load_table(spark, sf_dir, "lineitem")
     sk = kll_by(li, "l_extendedprice", by=["l_returnflag"], k=KLL_CHECK_K)
-    qudf = kll_quantile_udf()
-    wudf = kll_stored_weight_udf()
     est = sk.select(
         "l_returnflag",
         "kll",
-        wudf(F.col("kll")).alias("n_rows"),
+        kll_stored_weight_udf(F.col("kll")).alias("n_rows"),
         F.explode(F.array(*[F.lit(float(q)) for q in KLL_CHECK_QS])).alias("q"),
     ).select(
         "l_returnflag",
         "n_rows",
         F.col("q").cast("double").alias("q"),
-        qudf(F.col("kll"), F.col("q")).alias("quantile"),
+        kll_quantile_udf(F.col("kll"), F.col("q")).alias("quantile"),
     )
     checks = _rank_err_ok(
         li, "l_extendedprice", est.drop("n_rows"), by=["l_returnflag"],
@@ -655,11 +654,11 @@ def q_kll_quantiles_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KLL quantiles per lang (k=KLL_EXACT_K >= every group up to sf0.1,
     so no compaction has happened and answers equal the rank oracle
     exactly — same regime and same oracle as the t-digest query)."""
-    from .kll import kll_by, kll_quantile_udf
+    from .functions import kll_quantile_udf
+    from .kll import kll_by
 
     docs = load_table(spark, sf_dir, "documents")
     sk = kll_by(docs, "n_chars", by=["lang"], k=KLL_EXACT_K)
-    qudf = kll_quantile_udf()
     out = sk.select(
         "lang",
         "kll",
@@ -668,7 +667,7 @@ def q_kll_quantiles_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "lang",
         F.col("q").cast("double").alias("q"),
-        qudf(F.col("kll"), F.col("q")).alias("quantile"),
+        kll_quantile_udf(F.col("kll"), F.col("q")).alias("quantile"),
     )
 
 

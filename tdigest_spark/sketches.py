@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from typing import Sequence
 
+import numpy as np
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, functions as F
 
@@ -139,6 +140,18 @@ def hll_estimate_col(registers: Column | str, p: int = 12) -> Column:
     zeros = F.size(F.filter(reg, lambda r: r == 0)).cast("double")
     linear = m * F.log(m / zeros)
     return F.when((raw <= 2.5 * m) & (zeros > 0), linear).otherwise(raw)
+
+
+def hll_estimate_np(regs: np.ndarray) -> float:
+    """Bias-corrected HLL estimate from a uint8 register array — the
+    NumPy twin of hll_estimate_col (same constants/branches)."""
+    m = float(regs.size)
+    alpha = 0.7213 / (1.0 + 1.079 / m)
+    raw = alpha * m * m / float(np.sum(np.power(2.0, -regs.astype(np.float64))))
+    zeros = float(np.count_nonzero(regs == 0))
+    if raw <= 2.5 * m and zeros > 0:
+        return m * float(np.log(m / zeros))
+    return raw
 
 
 # ----------------------------------------------------------------- CountMin
@@ -347,6 +360,16 @@ def kmv_estimate_col(
         F.when(n < k, n.cast("double") * scale)
         .otherwise(F.lit(float(k - 1)) / u_k)
     )
+
+
+def kmv_estimate_py(kmv: Sequence[str], k: float) -> float:
+    """kmv_estimate_col without prefilter, on one sketch: stored size
+    under capacity, (k-1)/u_k at it."""
+    k = int(k)
+    if len(kmv) < k:
+        return float(len(kmv))
+    u_k = (int(kmv[k - 1], 16) + 1) / float(16**15)
+    return (k - 1) / u_k
 
 
 def kmv_union_col(a: Column | str, b: Column | str, k: int = 256) -> Column:

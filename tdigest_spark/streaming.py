@@ -762,18 +762,6 @@ def merge_stream_manifest(spark, manifest_dir: str) -> MergingDigest:
     return out
 
 
-def _hll_estimate_np(regs: "np.ndarray") -> float:
-    """Bias-corrected HLL estimate from a uint8 register array — the
-    NumPy twin of sketches.hll_estimate_col (same constants/branches)."""
-    m = float(regs.size)
-    alpha = 0.7213 / (1.0 + 1.079 / m)
-    raw = alpha * m * m / float(np.sum(np.power(2.0, -regs.astype(np.float64))))
-    zeros = float(np.count_nonzero(regs == 0))
-    if raw <= 2.5 * m and zeros > 0:
-        return m * float(np.log(m / zeros))
-    return raw
-
-
 def windowed_hll_by(
     sdf: DataFrame,
     ts_col: str,
@@ -797,7 +785,7 @@ def windowed_hll_by(
     removes state once the watermark passes a window's end.  Output mode
     "update": open windows re-emit with closed=false per trigger.
     """
-    from .sketches import _h128, _hex_to_long, _rho_from_hex
+    from .sketches import _h128, _hex_to_long, _rho_from_hex, hll_estimate_np
 
     if p % 4 != 0 or not 4 <= p <= 16:
         raise ValueError("p must be 4, 8, 12, or 16 (whole hex prefix)")
@@ -863,7 +851,7 @@ def windowed_hll_by(
                 out[k] = [key[i + 1]]
             out["registers"] = [regs.tobytes()]
             out["n_rows"] = [n]
-            out["distinct_est"] = [_hll_estimate_np(regs)]
+            out["distinct_est"] = [hll_estimate_np(regs)]
             out["closed"] = [closed]
             return pd.DataFrame(out)
 

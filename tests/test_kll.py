@@ -6,7 +6,8 @@ from __future__ import annotations
 import numpy as np
 import pytest
 
-from tdigest_spark.kll import KLL, kll_by, kll_quantile_udf
+from tdigest_spark.functions import kll_quantile_udf
+from tdigest_spark.kll import KLL, kll_by
 
 
 def test_exact_below_capacity():
@@ -85,11 +86,10 @@ def test_kll_by_spark(spark):
     ]
     df = spark.createDataFrame(rows, "g string, x double")
     sk = kll_by(df, "x", by=["g"], k=200)
-    qudf = kll_quantile_udf()
     got = {
         r["g"]: r
         for r in sk.select(
-            "g", "n_rows", qudf(F.col("kll"), F.lit(0.5)).alias("p50")
+            "g", "n_rows", kll_quantile_udf(F.col("kll"), F.lit(0.5)).alias("p50")
         ).collect()
     }
     assert got["a"]["n_rows"] == 3000 and got["b"]["n_rows"] == 1500

@@ -159,8 +159,90 @@ def test_histogram_by(spark, lineitem):
         assert r["n_rows"] == (grp > 0).sum()
 
 
+#: (registered name, expression over the __sql_nulls view, its argument
+#: columns) — one case per function the two register_* helpers register
+_SQL_NULL_CASES = [
+    ("tdigest_agg", "tdigest_quantile(tdigest_agg(v), 0.5d)", ["v"]),
+    ("tdigest_quantile", "tdigest_quantile(d, q1)", ["q1"]),
+    ("tdigest_cdf", "tdigest_cdf(d, v)", ["v"]),
+    ("tdigest_trimmed_mean", "tdigest_trimmed_mean(d, q1, q2)", ["q1", "q2"]),
+    ("tdigest_total_weight", "tdigest_total_weight(d)", []),
+    ("tdigest_min", "tdigest_min(d)", []),
+    ("tdigest_max", "tdigest_max(d)", []),
+    ("tdigest_centroid_count", "tdigest_centroid_count(d)", []),
+    ("kll_quantile", "kll_quantile(kll, q1)", ["q1"]),
+    ("kll_stored_weight", "kll_stored_weight(kll)", []),
+    ("hll_estimate", "hll_estimate(regs)", []),
+    ("kmv_estimate", "kmv_estimate(kmv, k)", ["k"]),
+]
+
+
+@pytest.mark.parametrize(
+    "name,expr,args", _SQL_NULL_CASES, ids=[c[0] for c in _SQL_NULL_CASES]
+)
+def test_sql_functions_null_in_null_out(spark, name, expr, args):
+    """NULL in -> NULL out for every registered SQL function: next to a
+    valid row, a NULL sketch (row 1), NULL arguments (row 2) and NaN
+    double arguments (row 3) give NULL, and the valid row gives what it
+    gives alone.  For the aggregate, NULL/NaN values are skipped, so an
+    all-NULL or all-NaN group is an empty digest, whose quantile is
+    NULL."""
+    from tdigest_spark.functions import (
+        register_sketch_sql_functions, register_sql_functions,
+    )
+    from tdigest_spark.kll import KLL
+
+    class Names:  # records what the register_* helpers register
+        def __init__(self):
+            self.udf, self.names = self, []
+
+        def register(self, fname, _f):
+            self.names.append(fname)
+
+    rec = Names()
+    register_sql_functions(rec)
+    register_sketch_sql_functions(rec)
+    assert sorted(rec.names) == sorted(c[0] for c in _SQL_NULL_CASES)
+    register_sql_functions(spark)
+    register_sketch_sql_functions(spark)
+
+    td = MergingDigest(100)
+    td.add(np.arange(1.0, 51.0))
+    kll = KLL(200)
+    kll.add(np.arange(1.0, 51.0))
+    sketches = [
+        td.to_bytes(),
+        kll.to_bytes(),
+        [i % 5 for i in range(256)],  # HLL registers, some zero
+        [f"{i:015x}" for i in (3, 70, 900, 4000, 123456)],  # KMV at k=3
+    ]
+    nan = float("nan")
+    rows = [
+        (0, *sketches, 0.25, 0.75, 20.0, 3),
+        (1, *[None] * 4, 0.25, 0.75, 20.0, 3),
+        (2, *sketches, None, None, None, None),
+        (3, *sketches, nan, nan, nan, 3),
+    ]
+    spark.createDataFrame(
+        rows,
+        "id int, d binary, kll binary, regs array<int>, kmv array<string>, "
+        "q1 double, q2 double, v double, k int",
+    ).createOrReplaceTempView("__sql_nulls")
+    group = " GROUP BY id" if name == "tdigest_agg" else ""
+    sql = f"SELECT id, {expr} AS out FROM __sql_nulls"
+    got = dict(spark.sql(sql + group).collect())
+    alone = spark.sql(f"{sql} WHERE id = 0{group}").collect()[0]["out"]
+
+    assert alone is not None
+    # the aggregate's row 1 has a valid value: it takes no sketch input
+    null_sketch = alone if name == "tdigest_agg" else None
+    null_args = None if args else alone
+    nan_args = None if set(args) - {"k"} else alone
+    assert got == {0: alone, 1: null_sketch, 2: null_args, 3: nan_args}
+
+
 def test_tdigest_agg_sql_aggregate(spark):
-    """Grouped-agg pandas UDF surface: tdigest as a SQL AGGREGATE."""
+    """Grouped-agg Arrow UDF surface: tdigest as a SQL AGGREGATE."""
     from tdigest_spark.functions import register_sql_functions
     from tdigest_spark import MergingDigest
     import numpy as np
@@ -538,10 +620,11 @@ def test_percentile_enrich_bigint_keys_with_null_in_batch(spark):
 
 def test_nan_and_null_keys_stay_distinct_groups(spark):
     """A double key with NaN rows and NULL rows in one batch: every
-    grouped build+merge lane (one- and two-stage digest merges, KLL)
-    returns a NaN group and a NULL group with their own row counts, and
-    percentile_enrich scores the NULL rows against the NULL group's
-    digest."""
+    grouped build+merge lane (one- and two-stage digest merges, KLL,
+    Frequent Directions) returns a NaN group and a NULL group with their
+    own row counts, and percentile_enrich scores the NULL rows against
+    the NULL group's digest."""
+    from tdigest_spark.fd import fd_sketch_by
     from tdigest_spark.kll import kll_by
     from tdigest_spark.operators import percentile_enrich
 
@@ -570,6 +653,7 @@ def test_nan_and_null_keys_stay_distinct_groups(spark):
         "map": merge_partials(build_partials_grouped(df, "v", by=["g"]), by=["g"]),
         "two-stage": merge_partials(split, by=["g"], fanin=2, stages=2),
         "kll-map": kll_by(df, "v", by=["g"]),
+        "fd": fd_sketch_by(df.withColumn("vec", F.array("v")), "vec", by=["g"], ell=2),
     }
     for lane, frame in lanes.items():
         assert counts(frame) == expect, lane
