@@ -23,7 +23,9 @@ Each incremental run:
    file lists are tiny even at 100 TB: ~10^6 paths),
 3. builds one digest per *pending* file only (`spark.read.parquet(paths)`
    restricted to pending paths — completed bytes are never re-read; this
-   is verifiable by deleting a completed source file and resuming),
+   is verifiable by deleting a completed source file and resuming), in
+   the JVM kernel of `operators.digest.build_partials_grouped` keyed by
+   `input_file_name()`,
 4. appends new records atomically-enough via parquet append with a
    per-batch job UUID in the filename (Spark's committer handles this),
 5. the final digest is the canonical merge (ordered by split_id) of all
@@ -32,6 +34,10 @@ Each incremental run:
 Determinism: the merge order is sorted by split_id, so the final digest
 bytes are identical regardless of how many runs/kills it took to finish
 — asserted by tests/test_checkpoint.py.
+
+This module is the one reader, writer and merge of the record:
+`streaming.digest_sink` writes one per micro-batch with
+`_write_records`, and `final_digest` merges its directory too.
 """
 
 from __future__ import annotations
@@ -40,11 +46,10 @@ import hashlib
 import os
 from dataclasses import dataclass
 
-import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .core import MergingDigest
-from .operators._arrow_groups import Counted, floats, map_groups
+from .operators.digest import build_partials_grouped
 from .scale import get_scale
 
 MANIFEST_SCHEMA = (
@@ -99,41 +104,45 @@ def _split_build_frame(
     delta: float,
     scale: str,
 ) -> DataFrame:
-    """One manifest row per pending split, built map-side: scan ->
-    `map_groups` keyed by __split, keeping one digest per split seen in
-    the partition.  With whole-file partitions (caller raises
-    maxPartitionBytes past the largest file) every split completes
+    """One manifest row per pending split, built map-side by the JVM
+    kernel: scan -> `build_partials_grouped` keyed by __split, one digest
+    per split seen in the partition.  With whole-file partitions (caller
+    raises maxPartitionBytes past the largest file) every split completes
     inside one partition, so the plan contains NO Exchange before the
     write — zero raw-row shuffle (plan-asserted in
-    tests/test_checkpoint.py)."""
-    from urllib.parse import unquote
-
+    tests/test_checkpoint.py).  The split id is `input_file_name()`
+    decoded as `_canon_path` decodes `inputFiles()`; '+' is escaped first
+    because SQL url_decode, unlike unquote, reads it as a space."""
     df = spark.read.parquet(*pending).select(
-        F.col(value_col).cast("double").alias("__v"),
-        F.input_file_name().alias("__split"),
+        value_col, F.input_file_name().alias("__split")
+    )
+    return build_partials_grouped(df, value_col, ["__split"], delta, scale).select(
+        F.url_decode(F.replace("__split", F.lit("+"), F.lit("%2B"))).alias("split_id"),
+        "digest",
+        "n_rows",
+        F.sha2("digest", 256).alias("digest_sha"),
+        F.lit(float(delta)).alias("delta"),
+        F.lit(scale).alias("scale"),
     )
 
-    def feed(state, data, rows: np.ndarray):
-        vals, splits = data
-        if state is None:
-            split_id = unquote(splits[int(rows[0])].as_py())
-            state = (split_id, Counted(MergingDigest(delta, scale=get_scale(scale))))
-        v = vals[rows]
-        state[1].add(v[~np.isnan(v)])
-        return state
 
-    def emit(state, pid: int):
-        split_id, s = state
-        blob = s.sketch.to_bytes()
-        sha = hashlib.sha256(blob).hexdigest()
-        return [(split_id, blob, s.n, sha, float(delta), scale)]
-
-    return map_groups(
-        df, ["__split"], MANIFEST_SCHEMA,
-        prepare=lambda b: (floats(b.column("__v")), b.column("__split")),
-        feed=feed,
-        emit=emit,
-    ).drop("__split")
+def _write_records(
+    spark: SparkSession,
+    path: str,
+    mode: str,
+    records: list[tuple[str, bytes, int]],
+    delta: float,
+    scale: str,
+) -> None:
+    """Write driver-side manifest rows, one per (split_id, digest bytes,
+    n_rows), as one parquet file."""
+    rows = [
+        (split_id, blob, int(n), hashlib.sha256(blob).hexdigest(), float(delta), scale)
+        for split_id, blob, n in records
+    ]
+    spark.createDataFrame(rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
+        mode
+    ).parquet(path)
 
 
 def checkpointed_build(
@@ -213,14 +222,11 @@ def checkpointed_build(
     }
     missing = [f for f in pending if f not in written]
     if missing:
-        empty_blob = MergingDigest(delta, scale=get_scale(scale)).to_bytes()
-        sha = hashlib.sha256(empty_blob).hexdigest()
-        rows = [
-            (f, empty_blob, 0, sha, float(delta), scale) for f in missing
-        ]
-        spark.createDataFrame(rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
-            "append"
-        ).parquet(checkpoint_dir)
+        empty = MergingDigest(delta, scale=get_scale(scale)).to_bytes()
+        _write_records(
+            spark, checkpoint_dir, "append", [(f, empty, 0) for f in missing],
+            delta, scale,
+        )
     return BuildReport(len(files), len(done), len(pending), [])
 
 

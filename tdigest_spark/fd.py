@@ -261,9 +261,12 @@ def fd_sketch_by(
 
 def fd_sketch(df: DataFrame, vec_col: str, ell: int = 64) -> FrequentDirections:
     """Global FD sketch, returned as the driver-side object (the
-    collect moves one ℓ×d buffer — KBs)."""
-    row = fd_sketch_by(df, vec_col, ell=ell).collect()[0]
-    return FrequentDirections.deserialize(bytes(row["fd"]))
+    collect moves one ℓ×d buffer — KBs).  Raises ValueError if the
+    column has no non-NULL row: the vector width is then unknown."""
+    rows = fd_sketch_by(df, vec_col, ell=ell).collect()
+    if not rows:
+        raise ValueError(f"fd_sketch: {vec_col} has no non-NULL rows")
+    return FrequentDirections.deserialize(bytes(rows[0]["fd"]))
 
 
 def gram_matrix(df: DataFrame, vec_col: str) -> np.ndarray:

@@ -27,11 +27,12 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 GLOBAL_SEED = np.uint64(0x5EED_CAFE_F00D_D00D)
 
-# Zipf-ish language mix: en-heavy skew (~60%) to exercise salting
+# Zipf-ish language mix: en-heavy skew (~60%): one hot digest group
 LANGS = ["en", "ru", "de", "zh", "es", "fr", "ja", "pt", "it", "nl", "pl", "tr"]
 _LANG_WEIGHTS = np.array([60, 9, 7, 6, 5, 4, 3, 2, 1.5, 1, 0.8, 0.7])
 _LANG_CUM = np.cumsum(_LANG_WEIGHTS / _LANG_WEIGHTS.sum())
@@ -226,63 +227,19 @@ def extract_text(html: bytes) -> str:
 
 
 def extract_text_column(df: DataFrame, html_col: str = "html") -> DataFrame:
-    """Vectorized extraction over the binary column (Arrow-batched).
-    Kept JVM-side where possible: the wrapper is fixed, so substring
-    arithmetic via built-ins would work for ASCII, but text is UTF-8 —
-    byte-level slicing must happen in Python to guarantee identity."""
-    import pyspark.sql.functions as F
-    from pyspark.sql.functions import pandas_udf
+    """`extract_text` over the binary column as a scalar Arrow UDF (one
+    Python call per Arrow batch): the Python reference that
+    `extract_text_jvm` matches byte for byte, and the lane for extraction
+    logic that needs Python."""
 
-    @pandas_udf("string")
-    def _extract(h: pd.Series) -> pd.Series:
-        return h.map(lambda b: extract_text(bytes(b)) if b is not None else None)
-
-    return df.withColumn("extracted_text", _extract(F.col(html_col)))
-
-
-def extract_digest_partials(
-    df: DataFrame,
-    by=("lang",),
-    delta: float = 100.0,
-    scale: str = "K_3",
-    html_col: str = "html",
-):
-    """Fused stage 1 of the flagship pipeline: extract_text(html) + text
-    length + grouped digest build in ONE mapInArrow pass.
-
-    Chaining the generic operators (extract pandas_udf -> length ->
-    build_partials_grouped) is semantically identical but runs TWO Python
-    workers per task in the fused stage, and the extracted strings cross
-    the JVM/Python boundary twice.  The fused form keeps the hot loop in a
-    single Arrow pass: one worker per task, the html bytes enter Python
-    once, and only (group, KB-digest) partial rows come back.  This is the
-    north-metric shape (docs/sec of digest build over extracted web text).
-
-    Output matches operators.digest.build_partials_grouped, so
-    merge_partials consumes it unchanged.
-    """
-    from ..core import MergingDigest
-    from ..operators._arrow_groups import map_sketches
-    from ..operators.digest import _SALT, DIGEST_FIELDS
-    from ..scale import get_scale
-
-    keys = list(by)
-    sdf = df.select(*keys, F.col(html_col).alias("__html"))
-
-    def lengths(batch) -> np.ndarray:
-        return np.array(
-            [
-                np.nan if h is None else float(len(extract_text(h)))
-                for h in batch.column("__html").to_pylist()
-            ],
-            dtype=np.float64,
+    def _extract(h: pa.Array) -> pa.Array:
+        return pa.array(
+            [None if b is None else extract_text(b) for b in h.to_pylist()],
+            type=pa.string(),
         )
 
-    return map_sketches(
-        sdf, keys, lengths,
-        new=lambda: MergingDigest(delta, scale=get_scale(scale)),
-        fields=f"{_SALT} int, {DIGEST_FIELDS}",
-        emit=lambda d, n, pid: (pid, d.to_bytes(), n),
+    return df.withColumn(
+        "extracted_text", F.arrow_udf(_extract, "string")(F.col(html_col))
     )
 
 
@@ -298,9 +255,9 @@ def extract_text_jvm(html_col="html", fixed_suffix: str | None = WRAPPER_SUFFIX)
     Why it exists: shipping html blobs into Python makes the flagship
     pipeline Arrow-bandwidth-bound (html is ~95% of the bytes).  Marker
     slicing is fixed-string arithmetic, so Catalyst runs it inside
-    whole-stage codegen and ONLY the extracted length (a double) plus the
-    group key ever reach the Python digest build.  `extract_text` /
-    `extract_digest_partials` remain for extraction logic that genuinely
+    whole-stage codegen, and with `build_partials_grouped` over its
+    length no row reaches Python at all.  `extract_text` /
+    `extract_text_column` remain for extraction logic that genuinely
     needs Python (a real HTML parser).
 
     Two paths:

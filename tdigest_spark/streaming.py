@@ -1,6 +1,6 @@
 """Structured-Streaming surface: t-digests over unbounded streams.
 
-Two composable pieces:
+The pieces:
 
 - streaming_digest_by: stateful per-group digests via
   `applyInPandasWithState` — the digest's (serialized bytes, total
@@ -9,11 +9,11 @@ Two composable pieces:
   fit!-loop lifted onto Spark's incremental execution: update = add a
   batch, state = the sketch, emit = quantiles of the current sketch.
 
-- digest_sink: `foreachBatch` sink that appends per-batch partial
-  digests to a checkpoint-style parquet manifest keyed by batch_id —
-  idempotent under retries (a batch re-run overwrites its own id), and
-  the stream's running digest is recoverable by merging the manifest
-  (tdigest_spark.checkpoint.final_digest-style canonical order).
+- digest_sink: `foreachBatch` sink that writes one checkpoint manifest
+  record per micro-batch (split_id = "batch=<id>") — idempotent under
+  retries (a batch re-run overwrites its own directory), and the
+  stream's running digest is `tdigest_spark.checkpoint.final_digest`
+  of the manifest directory.
 
 - windowed_digest_by: event-time tumbling/sliding windows with a
   watermark — late rows are dropped by Spark before they reach the
@@ -268,16 +268,15 @@ def digest_sink(
     delta: float = 100.0,
     scale: str = "K_3",
 ):
-    """foreachBatch sink: every micro-batch contributes one digest row
-    (split_id = "batch=<id>") to a checkpoint-style manifest.  Batch
-    replays overwrite their own partition directory, so the manifest
-    stays exactly-once under restarts; merge with
-    tdigest_spark.checkpoint.final_digest semantics."""
-    import hashlib
+    """foreachBatch sink: every micro-batch writes one checkpoint
+    manifest record (split_id = "batch=<id>", `checkpoint.MANIFEST_SCHEMA`)
+    into its own `manifest_dir/batch=<id>__dir` directory.  A replayed batch
+    overwrites its directory, so the manifest stays exactly-once under
+    restarts; `checkpoint.final_digest(spark, manifest_dir)` merges it in
+    batch order with the sha, conformality and duplicate checks."""
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        import pandas as pd
-
+        from .checkpoint import _write_records
         from .operators.digest import _SALT, build_partials_grouped
 
         # executor-side partial build (JVM kernel, no shuffle): the driver
@@ -287,27 +286,13 @@ def digest_sink(
             batch_df, value_col, (), delta=delta, scale=scale
         ).collect()
         d = MergingDigest(delta, scale=get_scale(scale))
-        n = 0
         for r in sorted(partials, key=lambda r: r[_SALT]):
             d.merge(MergingDigest.from_bytes(bytes(r["digest"])))
-            n += int(r["n_rows"])
-        blob = d.to_bytes()
-        row = pd.DataFrame(
-            {
-                "split_id": [f"batch={batch_id:020d}"],
-                "digest": [blob],
-                "n_rows": [n],
-                "digest_sha": [hashlib.sha256(blob).hexdigest()],
-                "delta": [float(delta)],
-                "scale": [scale],
-            }
-        )
-        spark = batch_df.sparkSession
-        (
-            spark.createDataFrame(row)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(f"{manifest_dir}/split_id=batch={batch_id:020d}__dir")
+        split_id = f"batch={batch_id:020d}"
+        n = sum(r["n_rows"] for r in partials)
+        _write_records(
+            batch_df.sparkSession, f"{manifest_dir}/{split_id}__dir", "overwrite",
+            [(split_id, d.to_bytes(), n)], delta, scale,
         )
 
     return sdf.writeStream.foreachBatch(write_batch)
@@ -745,21 +730,6 @@ def streaming_semantic_dedup(
         assigned.unpersist()
 
     return sdf.writeStream.foreachBatch(write_batch)
-
-
-def merge_stream_manifest(spark, manifest_dir: str) -> MergingDigest:
-    """Merge every per-batch digest in canonical batch order."""
-    df = spark.read.parquet(f"{manifest_dir}/*__dir")
-    rows = sorted(df.collect(), key=lambda r: r["split_id"])
-    out: MergingDigest | None = None
-    for r in rows:
-        d = MergingDigest.from_bytes(bytes(r["digest"]))
-        if out is None:
-            out = MergingDigest(r["delta"], scale=get_scale(r["scale"]))
-        out.merge(d)
-    if out is None:
-        raise ValueError(f"no batches in {manifest_dir}")
-    return out
 
 
 def windowed_hll_by(

@@ -156,8 +156,8 @@ def test_unreadable_manifest_propagates(spark, tmp_path):
 
 def test_split_build_plan_has_no_exchange(spark, tmp_path):
     """The per-split checkpoint build must not shuffle raw rows: scan ->
-    mapInArrow -> (manifest rows).  The previous groupBy(__split) shape
-    shuffled the entire input."""
+    the JVM kernel's mapPartitions -> (manifest rows).  The previous
+    groupBy(__split) shape shuffled the entire input."""
     import pyspark.sql.functions as F
 
     from tdigest_spark import checkpoint as C
@@ -174,3 +174,31 @@ def test_split_build_plan_has_no_exchange(spark, tmp_path):
     rows = frame.collect()
     assert sum(r["n_rows"] for r in rows) == 10_000
     assert {r["split_id"] for r in rows} == set(files)
+
+
+def test_split_ids_with_special_characters_resume(spark, tmp_path):
+    """Input under a directory whose name holds a space, '+', '%' and a
+    non-ASCII character: the manifest's split ids equal the listed input
+    files, a killed build resumes only the missing splits, and the final
+    digest equals a one-shot build."""
+    name = "in put+50%é"
+    src = str(tmp_path / name)
+    spark.range(0, 8_000, 1, 8).select(
+        ((F.col("id") * 7919) % 1009).cast("double").alias("v")
+    ).write.parquet(src)
+    files = C._list_input_files(spark, src)
+    assert len(files) == 8 and all(f"/{name}/" in f for f in files)
+
+    ck_once = str(tmp_path / "ck_once")
+    C.checkpointed_build(spark, src, "v", ck_once)
+    once = C.read_manifest(spark, ck_once)
+    assert sorted(r["split_id"] for r in once.collect()) == files
+
+    # a build killed after committing three splits
+    ck = str(tmp_path / "ck_killed")
+    once.filter(F.col("split_id").isin(files[:3])).write.parquet(ck)
+    rep = C.checkpointed_build(spark, src, "v", ck)
+    assert rep.completed_before == 3 and rep.built_now == 5
+    assert sorted(r["split_id"] for r in C.read_manifest(spark, ck).collect()) == files
+    assert C.checkpointed_build(spark, src, "v", ck).built_now == 0
+    assert C.final_digest(spark, ck).to_bytes() == C.final_digest(spark, ck_once).to_bytes()

@@ -181,3 +181,12 @@ def test_fd_sketch_by_rejects_ragged_vectors(spark):
     df = spark.createDataFrame(rows, "v array<double>").coalesce(1)
     with pytest.raises(Exception, match="differ in length"):
         fd_sketch_by(df, "v", ell=4).collect()
+
+
+def test_fd_sketch_all_null_column_raises_value_error(spark):
+    """A vector column with no non-NULL row has no width to sketch:
+    fd_sketch says so instead of failing on an empty collect."""
+    df = spark.createDataFrame([(None,)], "v array<double>")
+    assert fd_sketch_by(df, "v", ell=4).collect() == []
+    with pytest.raises(ValueError, match="no non-NULL rows"):
+        fd_sketch(df, "v", ell=4)

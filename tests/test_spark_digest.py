@@ -715,21 +715,15 @@ def test_map_builders_one_partial_per_group_and_partition(spark):
     is ONE group: every map-side builder emits exactly one partial row per
     (group, partition), and the salt is the partition id."""
     from tdigest_spark.operators.digest import build_partials_multi
-    from tdigest_spark.sources.webpages import extract_digest_partials
 
     df = _keyed_range(spark, 40_000, 2)  # 20k rows = 2 batches per partition
     n_v = sum(1 for i in range(40_000) if i % 97)  # rows with a value
-    html = df.select(
-        "lang", F.concat(F.lit("<p>"), F.col("v").cast("string"), F.lit("</p>"))
-        .cast("binary").alias("html"),
-    )
     # (partials, unique row key, groups, values fed): 16 = lang x k groups
     cases = [
         (build_partials_grouped(df, "v", by=["lang", "k"]),
          ("lang", "k"), 16, n_v),
         (build_partials_multi(df, ["v", "id"], by=["lang", "k"]),
          ("lang", "k", "col"), 32, n_v + 40_000),
-        (extract_digest_partials(html, by=["lang"]), ("lang",), 4, n_v),
         (build_partials_grouped(df, "v", ()), (), 1, n_v),
         # float keys: NaN is one group, -0.0 and 0.0 are one group
         (build_partials_grouped(df.withColumn("f", F.when(

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tdigest_spark import MergingDigest
+from tdigest_spark import checkpoint as C
 from tdigest_spark import streaming as ST
 
 
@@ -82,13 +83,25 @@ def test_digest_sink_foreach_batch(spark, stream_env, tmp_path):
         .start()
     )
     q.awaitTermination(120)
-    d = ST.merge_stream_manifest(spark, manifest)
+    d = C.final_digest(spark, manifest)
     all_vals = np.array([v for c in chunks for _, v in c])
     assert d.total_weight == len(all_vals)
+    assert C.metrics(spark, manifest)["rows"] == len(all_vals)
     sv = np.sort(all_vals)
     for q_ in (0.1, 0.5, 0.9):
         rank = np.searchsorted(sv, d.quantile(q_)) / len(sv)
         assert abs(rank - q_) < 0.05
+
+    # a batch record whose digest no longer matches its sha is rejected,
+    # as in a batch checkpoint
+    batch = sorted(os.listdir(manifest))[0]
+    rec = C.read_manifest(spark, f"{manifest}/{batch}").collect()
+    assert [r["split_id"] + "__dir" for r in rec] == [batch]
+    spark.createDataFrame(
+        [r.asDict() | {"digest_sha": "0" * 64} for r in rec], C.MANIFEST_SCHEMA
+    ).write.mode("overwrite").parquet(f"{manifest}/{batch}")
+    with pytest.raises(ValueError, match="corrupt"):
+        C.final_digest(spark, manifest)
 
 
 def test_streaming_exact_dedup(spark, tmp_path):

@@ -88,36 +88,6 @@ def test_schema(spark):
     }
 
 
-def test_fused_extract_digest_equals_chained(spark, tmp_path):
-    """The fused extract+build stage (one Arrow pass) produces byte-
-    identical digests to the chained generic operators (extract pandas_udf
-    -> length -> grouped map-combine build)."""
-    from pyspark.sql import functions as F
-
-    from tdigest_spark.operators import digest
-    from tdigest_spark.sources.webpages import (
-        extract_digest_partials,
-        extract_text_column,
-        write_webpages,
-    )
-
-    path = str(tmp_path / "wp_fused")
-    write_webpages(spark, 2000, path)
-    df = spark.read.parquet(path)
-
-    fused = digest.merge_partials(
-        extract_digest_partials(df, by=("lang",), delta=5000.0), by=["lang"]
-    )
-    chained_src = extract_text_column(df).select(
-        "lang", F.length("extracted_text").cast("double").alias("text_len")
-    )
-    chained = digest.digest_by(chained_src, "text_len", by=["lang"], delta=5000.0)
-
-    a = {r["lang"]: (bytes(r["digest"]), r["n_rows"]) for r in fused.collect()}
-    b = {r["lang"]: (bytes(r["digest"]), r["n_rows"]) for r in chained.collect()}
-    assert a == b
-
-
 def test_jvm_extraction_byte_identical(spark, tmp_path):
     """The whole-stage-codegen extraction column equals the Python
     extract_text byte-for-byte on every row (the per-url invariant)."""
