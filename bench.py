@@ -513,10 +513,10 @@ def main() -> None:
     )
 
     # 14. per-row percentile enrichment over the BIG table: map-combine
-    #     digest build + broadcast side channel + one scalar Arrow UDF
-    #     scoring scan through cdf_batch (zero corpus shuffle).  The sum
-    #     reads the score column, so the timed region is the full scoring
-    #     scan without collecting 600k rows: count() would let the
+    #     digest build + JVM broadcast side channel + one JVM cdf UDF
+    #     scoring scan (zero corpus shuffle, no row sent to Python).  The
+    #     sum reads the score column, so the timed region is the full
+    #     scoring scan without collecting 600k rows: count() would let the
     #     optimizer prune the unread UDF column and score nothing
     bench(
         "percentile_enrich_lineitem",

@@ -1,17 +1,19 @@
-"""The JVM map-side t-digest build: one ``MapPartitionsFunction`` per
-input partition, compiled on the driver by Janino.
+"""The t-digest's two JVM halves, compiled on the driver by Janino: the
+map-side build (``DigestPartials``, one ``MapPartitionsFunction`` per
+input partition) and the per-row cdf scorer of ``percentile_enrich``
+(``CdfScorer``, a Java UDF).
 
-Stage 1 of every digest build is ingest-only: unit-weight samples go
-into a buffer, the buffer compacts when it overflows, and each partial
-is compressed and serialized once.  Running that in a Python worker
-costs the JVM -> Python Arrow transfer of every input row, which is
-most of the build.  This module runs the ingest half of
+Build.  Stage 1 of every digest build is ingest-only: unit-weight
+samples go into a buffer, the buffer compacts when it overflows, and
+each partial is compressed and serialized once.  Running that in a
+Python worker costs the JVM -> Python Arrow transfer of every input row,
+which is most of the build.  ``DigestPartials`` runs the ingest half of
 ``core.MergingDigest`` (the buffer, ``_compact``, ``compress`` and the
 VERBOSE ``to_bytes``) inside the task's JVM instead, so only the
 KB-sized partial rows leave it.
 
-Parity: a partial is byte-identical to a driver ``MergingDigest`` fed
-each group's non-NULL, non-NaN values one 10,000-input-row chunk
+Build parity: a partial is byte-identical to a driver ``MergingDigest``
+fed each group's non-NULL, non-NaN values one 10,000-input-row chunk
 (``core._CHUNK``) at a time, in row order.  The Java mirrors NumPy's
 IEEE operation order: a stable sort with NaN last, sequential cumsum,
 the segment sums of ``np.add.reduceat`` (first element plus NumPy's
@@ -27,17 +29,33 @@ of an integer cumulative weight.  So K_2/K_3 parity is verified, not
 proven: tests/test_jvm_kernel.py checks it on its corpora across every
 scale and regime.
 
-Keys fold as ``_arrow_groups.split_groups`` folds them: NULL is a group,
-all NaNs are one group, -0.0 is 0.0, and binary keys compare by value.
+Scoring.  ``CdfScorer`` returns the cdf of a row's group digest at the
+row's value.  The digest table (key columns, then the digest) is
+collected into the driver JVM and sent to executors as a JVM broadcast;
+each executor indexes it once and parses each digest on first use.  A
+score is bit-identical to ``MergingDigest.from_bytes(blob).cdf_batch``:
+both encodings load, the centroids re-sort with the build's stable
+NaN-last merge sort, the total weight is NumPy's pairwise
+``counts.sum()``, the prefix weights a sequential cumsum, and the
+branches of ``cdf_batch`` keep their precedence and IEEE operation
+order.  Loading never compacts: a digest with at least its private
+compression in centroids (``to_bytes`` never writes one) is rejected.
+
+Keys fold in both classes as ``_arrow_groups.split_groups`` folds
+them: NULL is a group, all NaNs are one group, -0.0 is 0.0, and binary
+keys compare by value.
 
 Loading: the source is a string in this module, so a ``--py-files`` zip
 of ``*.py`` carries it.  The driver JVM compiles it with Janino (shipped
 with Spark), the class files go into a jar cached under the source's
 sha256, and the jar is added once per SparkContext with ``ADD JAR`` (so
-executors fetch it too).  This needs a classic (py4j) session: the build
-goes through ``DataFrame._jdf``.  Janino compiles a Java subset: no
+executors fetch it too).  This needs a classic (py4j) session: both
+halves go through ``DataFrame._jdf``.  Janino compiles a Java subset: no
 lambdas, and generics are erased, so the source names raw types and
-casts explicitly.
+casts explicitly.  The scorer is wrapped with the Java overload of
+``functions.udf(UDF2, DataType)``, chosen at compile time in the Java
+source: py4j would pick the untyped Scala overload, which Spark 4
+rejects (``UNTYPED_SCALA_UDF``).
 """
 
 from __future__ import annotations
@@ -52,7 +70,8 @@ import zipfile
 from typing import Sequence
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql.classic.column import Column as ClassicColumn, _to_seq
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from ..core import MergingDigest
@@ -60,6 +79,7 @@ from ..scale import SCALE_CODES, get_scale
 from ._arrow_groups import _out_schema
 
 CLASS_NAME = "tdigest_spark.jvm.DigestPartials"
+SCORER_CLASS = "tdigest_spark.jvm.CdfScorer"
 
 JAVA_SOURCE = r"""
 package tdigest_spark.jvm;
@@ -68,12 +88,20 @@ import java.nio.ByteBuffer;
 import java.nio.ByteOrder;
 import java.util.ArrayList;
 import java.util.Arrays;
+import java.util.HashMap;
 import java.util.Iterator;
 import java.util.LinkedHashMap;
+import java.util.WeakHashMap;
 import org.apache.spark.TaskContext;
 import org.apache.spark.api.java.function.MapPartitionsFunction;
+import org.apache.spark.broadcast.Broadcast;
 import org.apache.spark.sql.Row;
 import org.apache.spark.sql.RowFactory;
+import org.apache.spark.sql.api.java.UDF1;
+import org.apache.spark.sql.api.java.UDF2;
+import org.apache.spark.sql.expressions.UserDefinedFunction;
+import org.apache.spark.sql.functions;
+import org.apache.spark.sql.types.DataTypes;
 
 /** Per input partition: one t-digest per (group, value column), fed one
  *  CHUNK-input-row chunk at a time; emits (*keys, [col,] partition id,
@@ -107,14 +135,7 @@ public class DigestPartials implements MapPartitionsFunction {
         int inChunk = 0;
         while (rows.hasNext()) {
             Row r = (Row) rows.next();
-            Object gk;
-            if (nKeys == 1) {
-                gk = groupKey(r.get(0));
-            } else {
-                Object[] kv = new Object[nKeys];
-                for (int i = 0; i < nKeys; i++) kv[i] = groupKey(r.get(i));
-                gk = Arrays.asList(kv);
-            }
+            Object gk = rowKey(r, nKeys);
             Group g = (Group) groups.get(gk);
             if (g == null) {
                 g = new Group(r, this, work);
@@ -186,6 +207,14 @@ public class DigestPartials implements MapPartitionsFunction {
     /** The group identity of a key value: folded, binary by content. */
     static Object groupKey(Object v) {
         return v instanceof byte[] ? ByteBuffer.wrap((byte[]) v) : fold(v);
+    }
+
+    /** The group of the first `nKeys` fields of `r`. */
+    static Object rowKey(Row r, int nKeys) {
+        if (nKeys == 1) return groupKey(r.get(0));
+        Object[] kv = new Object[nKeys];
+        for (int i = 0; i < nKeys; i++) kv[i] = groupKey(r.get(i));
+        return Arrays.asList(kv);
     }
 
     static final class Group {
@@ -270,12 +299,13 @@ public class DigestPartials implements MapPartitionsFunction {
         void stableSort(boolean reverse) {
             double[] key = work.key;
             for (int i = 0; i < n; i++) key[i] = reverse ? -mean[i] : mean[i];
-            mergeSort(key);
+            mergeSort(key, mean, count, n, work.perm, work.tmp);
         }
 
-        /** Stable merge sort of (mean, count) by `key` (NumPy order). */
-        void mergeSort(double[] key) {
-            int[] a = work.perm, b = work.tmp;
+        /** Stable merge sort of (mean, count)[0:n] by `key` (NumPy order);
+         *  `a`, `b` are scratch of length >= n, and `key` is overwritten. */
+        static void mergeSort(double[] key, double[] mean, double[] count, int n,
+                              int[] a, int[] b) {
             for (int i = 0; i < n; i++) a[i] = i;
             for (int w = 1; w < n; w *= 2) {
                 for (int lo = 0; lo < n; lo += 2 * w) {
@@ -465,11 +495,219 @@ public class DigestPartials implements MapPartitionsFunction {
         }
     }
 }
+
+/** percentile_enrich's scorer: the cdf of a row's group digest at the
+ *  row's value, equal bit for bit to MergingDigest.from_bytes(blob)
+ *  .cdf_batch.  A UDF1 (value) for by=(), a UDF2 (key, value) otherwise,
+ *  with several key columns passed as one struct.  NULL for a NULL, NaN
+ *  or infinite value, a group the table lacks or holds a NULL digest
+ *  for, an empty digest, and a NaN result. */
+public class CdfScorer implements UDF1, UDF2 {
+    /** broadcast Row[] -> its Table: each executor indexes a table and
+     *  parses each digest once, whatever the number of tasks */
+    static final WeakHashMap TABLES = new WeakHashMap();
+
+    final Broadcast rows;    // Row[]: (*keys, digest), one per group
+    final int nKeys;
+    transient Table table;
+
+    public CdfScorer(Broadcast rows, Integer nKeys) {
+        this.rows = rows;
+        this.nKeys = nKeys.intValue();
+    }
+
+    /** This scorer as a Spark UDF returning double. */
+    public UserDefinedFunction udf() {
+        UserDefinedFunction f = nKeys == 0
+            ? functions.udf((UDF1) this, DataTypes.DoubleType)
+            : functions.udf((UDF2) this, DataTypes.DoubleType);
+        return f.withName("percentile_enrich");
+    }
+
+    /** The first table row whose group repeats an earlier row's, or -1. */
+    public int duplicate() {
+        return table().duplicate;
+    }
+
+    public Object call(Object value) {
+        return score(null, value);
+    }
+
+    public Object call(Object key, Object value) {
+        return score(key, value);
+    }
+
+    Object score(Object key, Object value) {
+        Object gk = nKeys == 1
+            ? DigestPartials.groupKey(key) : DigestPartials.rowKey((Row) key, nKeys);
+        Cdf d = table().get(gk);
+        if (d == null || value == null) return null;
+        double x = ((Double) value).doubleValue();
+        if (x != x || Double.isInfinite(x)) return null;
+        double p = d.at(x);
+        return p != p ? null : Double.valueOf(p);
+    }
+
+    Table table() {
+        if (table == null) {
+            Object v = rows.value();
+            synchronized (TABLES) {
+                table = (Table) TABLES.get(v);
+                if (table == null) {
+                    table = new Table((Row[]) v, nKeys);
+                    TABLES.put(v, table);
+                }
+            }
+        }
+        return table;
+    }
+
+    /** Group key -> digest, the digests parsed on first use.  Holds no
+     *  reference to the Row[] it indexes, so TABLES lets go of both once
+     *  the broadcast value is dropped. */
+    static final class Table {
+        final HashMap index = new HashMap();
+        final byte[][] blobs;
+        final Cdf[] parsed;
+        int duplicate = -1;
+
+        Table(Row[] rows, int nKeys) {
+            blobs = new byte[rows.length][];
+            parsed = new Cdf[rows.length];
+            for (int i = 0; i < rows.length; i++) {
+                Object gk = DigestPartials.rowKey(rows[i], nKeys);
+                if (index.containsKey(gk)) {
+                    if (duplicate < 0) duplicate = i;
+                    continue;
+                }
+                index.put(gk, Integer.valueOf(i));
+                blobs[i] = (byte[]) rows[i].get(nKeys);
+            }
+        }
+
+        Cdf get(Object gk) {
+            Integer i = (Integer) index.get(gk);
+            if (i == null || blobs[i.intValue()] == null) return null;
+            int j = i.intValue();
+            Cdf d = parsed[j];
+            // a racing task parses the same bytes; final fields publish safely
+            if (d == null) parsed[j] = d = Cdf.parse(blobs[j]);
+            return d;
+        }
+    }
+
+    /** A digest as from_bytes loads it and cdf_batch's forced compaction
+     *  sorts it: the centroids stably re-sorted by mean, NaN last. */
+    static final class Cdf {
+        final int n;
+        final double[] mean, count, cum;   // cum = concatenate(([0], cumsum(count)))
+        final double total;
+
+        Cdf(int n, double[] mean, double[] count) {
+            if (n > 1) DigestPartials.Digest.mergeSort(
+                Arrays.copyOf(mean, n), mean, count, n, new int[n], new int[n]);
+            this.n = n;
+            this.mean = mean;
+            this.count = count;
+            cum = new double[n + 1];
+            if (n > 0) cum[1] = count[0];
+            for (int i = 1; i < n; i++) cum[i + 1] = cum[i] + count[i];
+            // total_weight = 0.0 + counts.sum(): NumPy's pairwise sum, one
+            // 8192-element buffer block after another
+            double s = 0.0;
+            for (int lo = 0; lo < n; lo += 8192) {
+                s += DigestPartials.Digest.pairwise(count, lo, Math.min(8192, n - lo));
+            }
+            total = s;
+        }
+
+        /** MergingDigest.from_bytes, VERBOSE or SMALL.  A digest at or
+         *  above its private compression would compact on load, which
+         *  this scorer does not reproduce: it is rejected. */
+        static Cdf parse(byte[] blob) {
+            ByteBuffer b = ByteBuffer.wrap(blob).order(ByteOrder.LITTLE_ENDIAN);
+            int code = b.getInt();
+            if (code != 1 && code != 2) {
+                throw new IllegalArgumentException(
+                    "Invalid format for serialized t-digest: code=" + code);
+            }
+            boolean small = code == 2;
+            int scale = b.get() & 0xff;
+            b.getDouble();   // min
+            b.getDouble();   // max
+            double delta = small ? (double) b.getFloat() : b.getDouble();
+            long n = small ? (long) (b.getShort() & 0xffff) : (long) b.getInt() & 0xffffffffL;
+            if (small) b.getShort(); else b.getLong();   // unused, as in from_bytes
+            if (scale > 3) throw new IllegalArgumentException("Unknown scale code " + scale);
+            // MergingDigest(delta): clamp, max_size, private compression
+            double c = delta < 10 ? 10.0 : delta;
+            if (Double.isNaN(c) || Double.isInfinite(c)) {
+                throw new IllegalArgumentException("Invalid t-digest compression " + delta);
+            }
+            long maxSize = (long) (2 * c + Math.max(50.0, 5 * c));
+            double priv = Math.sqrt(maxSize / (2 * c)) * c;
+            if (!(n < priv)) {
+                throw new IllegalArgumentException(
+                    "percentile_enrich: a digest holds " + n + " centroids, not fewer than "
+                    + "its private compression " + priv + ", so loading it would compact it; "
+                    + "serialize digests with MergingDigest.to_bytes");
+            }
+            int m = (int) n;
+            double[] mean = new double[m], count = new double[m];
+            for (int i = 0; i < m; i++) {
+                count[i] = small ? (double) b.getFloat() : b.getDouble();
+                mean[i] = small ? (double) b.getFloat() : b.getDouble();
+            }
+            return new Cdf(m, mean, count);
+        }
+
+        /** cdf_batch at one finite x, same branch precedence and IEEE
+         *  operation order. */
+        double at(double x) {
+            if (n == 0) return Double.NaN;
+            if (n == 1) {
+                double v = mean[0];
+                return x < v ? 0.0 : (x > v ? 1.0 : 0.5);
+            }
+            double mn = mean[0], mx = mean[n - 1];
+            if (x < mn) return 0.0;
+            int il = search(x, false), ir = search(x, true);
+            double wLt = cum[il], wLe = cum[ir];
+            if (x == mn) return wLe / 2.0 / total;
+            if (x > mx) return 1.0;
+            if (x == mx) return 1.0 - 0.5 / total;
+            if (ir > il) return (wLt + (wLe - wLt) / 2.0) / total;
+            // interpolation between c_i < x < c_{i+1}
+            int i = Math.min(Math.max(il - 1, 0), n - 2);
+            double c1m = mean[i], c1c = count[i], c2m = mean[i + 1], c2c = count[i + 1];
+            double wsf = wLt - c1c;
+            if (c1c == 1 && c2c == 1) return (wsf + 1.0) / total;
+            double leftExcl = c1c == 1 && c2c != 1 ? 0.5 : 0.0;
+            double rightExcl = c2c == 1 && c1c != 1 ? 0.5 : 0.0;
+            double dwNo = (c1c + c2c) / 2.0 - leftExcl - rightExcl;
+            double base = wsf + c1c / 2.0 + leftExcl;
+            return (base + dwNo * (x - c1m) / (c2m - c1m)) / total;
+        }
+
+        /** np.searchsorted(mean, x, "right" if right else "left"), NaN last. */
+        int search(double x, boolean right) {
+            int lo = 0, hi = n;
+            while (lo < hi) {
+                int m = (lo + hi) >>> 1;
+                boolean before = right
+                    ? !DigestPartials.Digest.lt(x, mean[m])
+                    : DigestPartials.Digest.lt(mean[m], x);
+                if (before) lo = m + 1; else hi = m;
+            }
+            return lo;
+        }
+    }
+}
 """
 
 _LOCK = threading.Lock()
-#: (applicationId, startTime) of a SparkContext -> the kernel class loaded
-#: into it
+#: (applicationId, startTime) of a SparkContext -> the class loader that
+#: holds the compiled source in it
 _LOADED: dict[tuple, object] = {}
 
 
@@ -530,19 +768,26 @@ def kernel_jar(spark, source: str = JAVA_SOURCE) -> str:
     return path
 
 
-def kernel_class(spark):
-    """The kernel class, loaded through the session's jar class loader.
-    The jar is added (``ADD JAR``) once per SparkContext: a new context,
-    as after ``spark.stop()``, adds it again before first use."""
+def kernel_class(spark, name: str = CLASS_NAME):
+    """The class `name` of the compiled source, loaded through the
+    session's jar class loader.  The jar is added (``ADD JAR``) once per
+    SparkContext: a new context, as after ``spark.stop()``, adds it again
+    before first use."""
     sc = spark.sparkContext
     ctx = (sc.applicationId, sc.startTime)
     with _LOCK:
-        cls = _LOADED.get(ctx)
-        if cls is None:
+        loader = _LOADED.get(ctx)
+        if loader is None:
             spark.sql(f"ADD JAR '{kernel_jar(spark)}'")
-            loader = spark._jsparkSession.sharedState().jarClassLoader()
-            cls = _LOADED[ctx] = loader.loadClass(CLASS_NAME)
-    return cls
+            loader = _LOADED[ctx] = spark._jsparkSession.sharedState().jarClassLoader()
+    return loader.loadClass(name)
+
+
+def _jarray(sc, jtype, values):
+    out = sc._gateway.new_array(jtype, len(values))
+    for i, v in enumerate(values):
+        out[i] = v
+    return out
 
 
 def _k1_sin_cos(compression: float) -> list[float]:
@@ -577,23 +822,41 @@ def digest_partials(
         _k1_sin_cos(proto.private_compression) + _k1_sin_cos(proto.public_compression)
         if code == 1 else [0.0] * 4
     )
-    gw, jvm = sc._gateway, sc._jvm
-
-    def array(jtype, values):
-        out = gw.new_array(jtype, len(values))
-        for i, v in enumerate(values):
-            out[i] = v
-        return out
-
+    jvm = sc._jvm
     args = [
         len(keys), len(value_cols),
-        array(jvm.java.lang.String, value_cols) if per_column else None,
+        _jarray(sc, jvm.java.lang.String, value_cols) if per_column else None,
         proto.public_compression, proto.private_compression, proto.max_size,
-        code, array(jvm.double, sin_cos),
+        code, _jarray(sc, jvm.double, sin_cos),
     ]
-    jargs = array(jvm.java.lang.Object, args)
-    fn = kernel_class(spark).getConstructors()[0].newInstance(jargs)
+    fn = kernel_class(spark).getConstructors()[0].newInstance(
+        _jarray(sc, jvm.java.lang.Object, args)
+    )
     schema, _ = _out_schema(sdf, list(keys), fields)
     jschema = jvm.org.apache.spark.sql.types.DataType.fromJson(schema.json())
     jdf = sdf._jdf.mapPartitions(fn, jvm.org.apache.spark.sql.Encoders.row(jschema))
     return ClassicDataFrame(jdf, spark)
+
+
+def collect_rows(sdf: DataFrame, limit: int):
+    """The first `limit` rows of `sdf`, collected into the driver JVM: a
+    py4j proxy of a ``Row[]``, whose rows never cross to Python."""
+    return sdf.limit(limit)._jdf.collect()
+
+
+def cdf_scorer(spark, rows, n_keys: int):
+    """(scorer, broadcast): a `CdfScorer` over `rows` (a ``Row[]`` of
+    `n_keys` key columns, then a digest column), which travel to the
+    executors as the JVM broadcast returned next to it, not inside the
+    UDF.  The caller releases the broadcast."""
+    sc = spark.sparkContext
+    bc = sc._jsc.broadcast(rows)
+    scorer = kernel_class(spark, SCORER_CLASS).getConstructors()[0].newInstance(
+        _jarray(sc, sc._jvm.java.lang.Object, [bc, n_keys])
+    )
+    return scorer, bc
+
+
+def apply_udf(spark, judf, cols: Sequence[Column]) -> Column:
+    """The JVM ``UserDefinedFunction`` `judf` applied to `cols`."""
+    return ClassicColumn(judf.apply(_to_seq(spark.sparkContext, [c._jc for c in cols])))

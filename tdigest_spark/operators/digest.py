@@ -25,9 +25,9 @@ compress + quantile/cdf.  Spark-first mapping:
     evaluate:          scalar Arrow UDFs over the digest column
                        (tdigest_quantile / tdigest_cdf / ..., the
                        `functions` surface); per-row scoring
-                       (percentile_enrich) is one scalar Arrow UDF over
-                       the key and value columns only — the rest of the
-                       row stays in the JVM
+                       (percentile_enrich) is one JVM UDF (the
+                       `_jvm_kernel` cdf scorer) over the key and value
+                       columns — no row crosses to Python
 
 Scale notes (100 TB / 1000 executors):
 - Stage 1 shuffles ZERO raw rows: the JVM kernel keeps a map
@@ -46,40 +46,38 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator, Sequence, Tuple
+from typing import Iterable, Sequence
 
-import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from ..core import MergingDigest
 from ..scale import get_scale
-from ._arrow_groups import (
-    floats, key_tuple, merged, reduce_groups, split_groups,
-)
-from ._jvm_kernel import digest_partials
+from ._arrow_groups import key_tuple, merged, reduce_groups
+from ._jvm_kernel import apply_udf, cdf_scorer, collect_rows, digest_partials
 
 _VALUE = "__td_value"
 _SALT = "__td_salt"
 DIGEST_FIELDS = "digest binary, n_rows long"
 
-#: sc.broadcast handles created by percentile_enrich — the dedup._CACHED
+#: broadcast handles of side channels: percentile_enrich's JVM
+#: broadcasts and similarity's sc.broadcast ones — the dedup._CACHED
 #: pattern: broadcast blocks outlive the returned DataFrame's use and
 #: accumulate over a long session unless released at stage boundaries.
 _BROADCASTS: list = []
 
 
 def release_broadcasts() -> None:
-    """Unpersist every digest side channel percentile_enrich has
-    broadcast this session.  Safe once the returned frames are
-    materialized; a frame still holding a released broadcast would fail
-    its next action, so release at stage boundaries only (bench.py does
-    this per query, like dedup.release_cached)."""
+    """Unpersist every side channel broadcast this session.  Safe once
+    the returned frames are materialized: an executor re-fetches a
+    released broadcast from the driver on its next use.  Release at
+    stage boundaries (bench.py does this per query, like
+    dedup.release_cached)."""
     while _BROADCASTS:
         b = _BROADCASTS.pop()
         try:
-            b.unpersist(blocking=True)
+            b.unpersist(True)  # positional: a JVM broadcast takes no keywords
         except Exception:
             pass  # context already stopped
 
@@ -415,40 +413,47 @@ def percentile_enrich(
 
     Plan shape (the 100 TB path): one map-side-combining digest build
     (KB partials, zero raw-row shuffle), then the digest table — KB per
-    group — travels to workers as an `sc.broadcast` SIDE CHANNEL into a
-    single scalar Arrow UDF over the corpus.  The corpus is scanned
+    group — is collected in the driver JVM and travels to executors as
+    a JVM broadcast SIDE CHANNEL into a single JVM UDF over the corpus
+    (`_jvm_kernel`'s Janino-compiled cdf scorer).  The corpus is scanned
     exactly twice and shuffled ZERO times, and the digest bytes are
     materialized once per executor, NOT copied per row — deliberately
     not a broadcast join, which would clone the KB digest blob onto
     every joined row (the pq_topk lesson: join-output row-copy moved
-    ~100 GB through a 6.4M-row join).  Only the `by` and `value_col`
-    columns cross to Python (ArrowEvalPython holds the rest of each row
-    in the JVM) and one double per row comes back as `out_col`.  Each
-    Arrow batch splits by key in Arrow (`_arrow_groups.split_groups`)
-    and scores through the vectorized `cdf_batch` lane (bit-identical to
-    scalar `cdf`, tests/test_core.py); no column passes through pandas.
+    ~100 GB through a 6.4M-row join).  The scorer reads the `by` and
+    `value_col` columns (several keys as one struct, the value cast to
+    double) and no row crosses to Python.  Each executor parses each
+    digest once, on first use, and its scores are bit-identical to
+    `MergingDigest.from_bytes(blob).cdf_batch` (tests/test_jvm_kernel.py),
+    itself bit-identical to scalar `cdf` (tests/test_core.py).
 
     Pass `digests` (a `digest_by`/`merge_partials` table with columns
     (*by, digest), one row per group — a duplicated group raises
     ValueError) to score against a FROZEN snapshot — e.g. last
     crawl's checkpointed sketches — instead of rebuilding; rows whose
-    group is absent from it get NULL.  In frozen mode the operator is a
-    STATELESS scalar UDF, so it runs unchanged on a streaming
-    DataFrame (the monitoring face: score arriving rows against last
-    crawl's distribution; chunking-invariant — tests/test_streaming.py).
-    NULL group keys are groups like any other (groupBy semantics), and
-    a NaN key is a group distinct from NULL.  NULL / non-finite values
-    yield NULL.  An `out_col` already in `df` raises ValueError (in any
-    letter case unless spark.sql.caseSensitive is true, as Spark
-    resolves names).
+    group is absent from it get NULL.  Its keys are compared in `df`'s
+    key types: an int-keyed table scores a bigint-keyed frame, and a
+    table key that the cast would change (1.5 as a bigint) matches no
+    row.  In frozen mode the operator is a STATELESS UDF, so it runs
+    unchanged on a streaming DataFrame (the monitoring face: score
+    arriving rows against last crawl's distribution;
+    chunking-invariant — tests/test_streaming.py).
+    NULL group keys are groups like any other (groupBy semantics), a
+    NaN key is a group distinct from NULL, -0.0 is 0.0 and binary keys
+    compare by content.  NULL / non-finite values, and an empty or NULL
+    digest, yield NULL.  A digest that would compact on load (more
+    centroids than `MergingDigest.to_bytes` ever writes) fails the job.
+    An `out_col` already in `df` raises ValueError (in any letter case
+    unless spark.sql.caseSensitive is true, as Spark resolves names).
 
     Reference parity: cdf semantics per TDigest.jl:430-544
     (defect-corrected, SURVEY §2.3); the enrichment shape itself is the
     distribution layer feeding the pipeline, no reference counterpart.
     """
     by = list(by)
+    spark = df.sparkSession
     name_key = (
-        str if df.sparkSession.conf.get("spark.sql.caseSensitive").lower() == "true"
+        str if spark.conf.get("spark.sql.caseSensitive").lower() == "true"
         else str.lower
     )
     if name_key(out_col) in {name_key(c) for c in df.columns}:
@@ -462,46 +467,42 @@ def percentile_enrich(
     # the side channel is for distribution-like keys (lang, source,
     # day — up to ~10^5 KB-sized digests); limit() caps what the driver
     # ever pulls, so a groupBy-user_id mistake raises instead of OOMing.
-    # Arrow on both sides of the channel: the table's keys are the same
-    # Python values split_groups derives from a batch.
-    rows = digests.select(*by, "digest").limit(max_groups + 1).toArrow().to_pylist()
+    # The rows stay in the driver JVM: the scorer reads them there.
+    rows = collect_rows(_keys_typed_as(digests, df, by), max_groups + 1)
     if len(rows) > max_groups:
         raise ValueError(
             f"percentile_enrich: more than max_groups={max_groups} groups; "
             "a digest side channel this large should not broadcast — "
             "reduce the key cardinality or raise max_groups deliberately"
         )
-    table = {}
-    for r in rows:
-        # NaN keys fold first, so two NaN rows are one key here too
-        key = key_tuple(r[c] for c in by)
-        if key in table:
-            raise ValueError(
-                f"percentile_enrich: digests has more than one row for group "
-                f"{key!r}; merge partials to one digest per group first"
-            )
-        table[key] = r["digest"]
-    bc = df.sparkSession.sparkContext.broadcast(table)
+    scorer, bc = cdf_scorer(spark, rows, len(by))
     _BROADCASTS.append(bc)
+    dup = scorer.duplicate()
+    if dup >= 0:
+        # NaN keys fold first, so two NaN rows are one key here too
+        key = key_tuple(
+            bytes(v) if isinstance(v, bytearray) else v
+            for v in (rows[dup].get(i) for i in range(len(by)))
+        )
+        raise ValueError(
+            f"percentile_enrich: digests has more than one row for group "
+            f"{key!r}; merge partials to one digest per group first"
+        )
+    keys = [F.struct(*by)] if len(by) > 1 else [F.col(k) for k in by]
+    score = apply_udf(spark, scorer.udf(), [*keys, F.col(value_col).cast("double")])
+    return df.select("*", score.alias(out_col))
 
-    def enrich(batches: Iterator[Tuple[pa.Array, ...]]) -> Iterator[pa.Array]:
-        # NaN keys match by identity: fold them to split_groups' NaN
-        tbl = {key_tuple(key): blob for key, blob in bc.value.items()}
-        cache: dict[tuple, MergingDigest] = {}
-        for arrays in batches:
-            # by=() arrives as the bare value array, not a 1-tuple
-            *keys, value = arrays if by else (arrays,)
-            vals = floats(value)
-            out = np.full(len(vals), np.nan)
-            for key, idx in split_groups(keys, len(vals)):
-                if key not in cache:
-                    blob = tbl.get(key)
-                    cache[key] = None if blob is None else MergingDigest.from_bytes(blob)
-                idx = idx[np.isfinite(vals[idx])]
-                if cache[key] is not None and idx.size:
-                    out[idx] = cache[key].cdf_batch(vals[idx])
-            # NaN (missing group or value) -> NULL on the wire
-            yield pa.array(out, from_pandas=True)
 
-    score = F.arrow_udf(enrich, "double")
-    return df.select("*", score(*by, value_col).alias(out_col))
+def _keys_typed_as(digests: DataFrame, df: DataFrame, by: list) -> DataFrame:
+    """(*by, digest) of `digests`, each key cast to its type in `df`, so
+    the scorer compares keys as `df` holds them.  A row whose key does not
+    survive the cast (1.5 as a bigint) names no group of `df`: dropped."""
+    cols = []
+    for want, have in zip(df.select(*by).schema, digests.select(*by).schema):
+        c = F.col(have.name)
+        if want.dataType != have.dataType:
+            cast = c.try_cast(want.dataType)
+            digests = digests.filter(cast.try_cast(have.dataType).eqNullSafe(c))
+            c = cast
+        cols.append(c.alias(want.name))
+    return digests.select(*cols, "digest")

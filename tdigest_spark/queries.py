@@ -191,9 +191,9 @@ GROUP BY ca.lang
 def q_percentile_enrich_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row within-group percentile (operators/digest.py:
     percentile_enrich): every document scored with the cdf of its own
-    n_chars in its language's digest — broadcast side-channel + one
-    scalar Arrow UDF over (lang, n_chars), zero corpus shuffle
-    (test_plans.py).  Singleton regime
+    n_chars in its language's digest — JVM broadcast side channel + one
+    JVM cdf UDF over (lang, n_chars), zero corpus shuffle and no Python
+    worker (test_plans.py).  Singleton regime
     -> bit-exact against the windowed SQL: generic (below + eq/2)/n with
     the reference's ==max precedence (1 - 0.5/n even when the max is
     tied; cdf branch order, core.py:520-537)."""

@@ -53,11 +53,29 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import DoubleType, FloatType
 
 from .core import MergingDigest
 from .scale import get_scale
 
 _STATE_SCHEMA = "digest binary, n_rows long"
+
+
+def _state_keys(sdf: DataFrame, keys: Sequence[str]) -> list:
+    """The `keys` columns of `sdf` for a pandas state lane, whose output
+    rows pass through pandas: it masks a NaN key as NULL, which would
+    merge the NaN group into the NULL group.  A NaN float key fails the
+    query instead (NULL keys and other types pass unchanged)."""
+    out = []
+    for k, f in zip(keys, sdf.select(*keys).schema):
+        c = F.col(k)
+        if isinstance(f.dataType, (DoubleType, FloatType)):
+            c = F.when(F.isnan(c), F.raise_error(F.lit(
+                f"NaN group key in column {k!r}: the streaming state lanes "
+                "would emit it as NULL; map NaN keys to a value first"
+            ))).otherwise(c)
+        out.append(c.alias(k))
+    return out
 
 
 def streaming_digest_by(
@@ -73,6 +91,7 @@ def streaming_digest_by(
     Emits, per trigger and updated group: (by..., digest binary,
     n_rows long, q50/q90/... double).  Output mode must be "update".
     State size is O(delta) bytes per group — thousands of groups cost MBs.
+    A NaN float key fails the query (`_state_keys`).
     """
     keys = list(by)
     key_fields = ", ".join(
@@ -83,7 +102,7 @@ def streaming_digest_by(
     q_fields = ", ".join(f"q{int(q * 1000):03d} double" for q in qs)
     out_schema = ", ".join(x for x in (key_fields, _STATE_SCHEMA, q_fields) if x)
 
-    proj = sdf.select(*keys, F.col(value_col).cast("double").alias("__v"))
+    proj = sdf.select(*_state_keys(sdf, keys), F.col(value_col).cast("double").alias("__v"))
 
     def update(
         key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
@@ -149,7 +168,8 @@ def windowed_digest_by(
       with the current digest + quantiles; output mode "update".
 
     The digest state is the serialized sketch itself, exactly like
-    streaming_digest_by; window membership is the only addition.
+    streaming_digest_by; window membership is the only addition.  A NaN
+    float key fails the query (`_state_keys`).
     """
     keys = list(by)
     win_sec = _interval_seconds(window)
@@ -189,7 +209,7 @@ def windowed_digest_by(
         sdf.withWatermark(ts_col, watermark)
         .select(
             F.col(ts_col),
-            *keys,
+            *_state_keys(sdf, keys),
             F.col(value_col).cast("double").alias("__v"),
             F.explode(starts).alias("window_start"),
         )
@@ -753,7 +773,8 @@ def windowed_hll_by(
     (tested).  Late rows are dropped by the watermark;
     GroupStateTimeout.EventTimeTimeout emits a final closed=true row and
     removes state once the watermark passes a window's end.  Output mode
-    "update": open windows re-emit with closed=false per trigger.
+    "update": open windows re-emit with closed=false per trigger.  A NaN
+    float key fails the query (`_state_keys`).
     """
     from .sketches import _h128, _hex_to_long, _rho_from_hex, hll_estimate_np
 
@@ -798,7 +819,7 @@ def windowed_hll_by(
         .filter(F.col(value_col).isNotNull())
         .select(
             F.col(ts_col),
-            *keys,
+            *_state_keys(sdf, keys),
             _hex_to_long(F.substring(h, 1, p // 4)).cast("int").alias("__bucket"),
             _rho_from_hex(F.substring(h, p // 4 + 1, 13)).alias("__rho"),
             F.explode(starts).alias("window_start"),

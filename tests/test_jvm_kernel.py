@@ -17,6 +17,7 @@ import math
 import os
 import shutil
 import stat
+import struct
 import subprocess
 import sys
 import textwrap
@@ -267,3 +268,180 @@ def test_new_session_adds_jar_before_use(tmp_path):
         [sys.executable, "-c", script], capture_output=True, text=True, timeout=300
     )
     assert out.stdout.strip().endswith("OK"), out.stderr[-3000:]
+
+
+# ----------------------------------------------------------- the cdf scorer
+
+
+def _expect_scores(blobs, probes):
+    """The shipped Python scorer's answer per probe (key, x): the group's
+    `MergingDigest.from_bytes(blob).cdf_batch`, NULL for a missing group or
+    digest, a NULL or non-finite x, and a NaN result."""
+    xs: dict = {}
+    for key, x in probes:
+        if blobs.get(key) is not None and x is not None and math.isfinite(x):
+            xs.setdefault(key, {})[_bits(x)] = x  # +-0.0 are two probes
+    table = {}
+    for key, by_bits in xs.items():
+        vals = list(by_bits.values())
+        got = MergingDigest.from_bytes(blobs[key]).cdf_batch(np.array(vals))
+        for v, p in zip(vals, got):
+            table[key, _bits(v)] = None if math.isnan(p) else float(p)
+    return [
+        None if x is None or not math.isfinite(x) else table.get((key, _bits(x)))
+        for key, x in probes
+    ]
+
+
+def _bits(x):
+    return None if x is None else struct.pack("<d", x)
+
+
+def _assert_scores(got, expect, probes):
+    bad = [
+        (p, g, e) for p, g, e in zip(probes, got, expect)
+        if _bits(g) != _bits(e)
+    ]
+    assert not bad, f"{len(bad)}/{len(probes)} scores differ, e.g. {bad[:3]}"
+
+
+def _corpus_values(rng, n):
+    """Heavy duplicates (equal-centroid runs once compacted), continuous
+    values and signed zeros."""
+    dup = rng.integers(0, 40, size=n) / 4.0
+    cont = rng.normal(0.0, 50.0, size=n)
+    v = np.where(rng.random(n) < 0.5, dup, cont)
+    v[::97] = -0.0
+    v[1::89] = 0.0
+    return v
+
+
+def _probes_for(d: MergingDigest, rng) -> list:
+    """Every branch of cdf: below/at min, at max, above max, on each
+    centroid (equal runs included), between neighbours, +-0.0, +-inf,
+    NaN and NULL."""
+    d.compress()
+    m = np.asarray(d.means)
+    xs = [0.0, -0.0, math.inf, -math.inf, math.nan, None]
+    if m.size:
+        mids = (m[:-1] + m[1:]) / 2.0
+        xs += [float(m[0]) - 1.0, float(m[-1]) + 1.0, *map(float, m), *map(float, mids)]
+        xs += list(map(float, rng.uniform(m[0], m[-1], size=50)))
+    return xs
+
+
+@pytest.mark.parametrize("scale", ["K_0", "K_1", "K_2", "K_3"])
+def test_scorer_bit_identical_to_cdf_batch(spark, scale):
+    """The JVM scorer equals `from_bytes(blob).cdf_batch` bit for bit at
+    delta 10, 100 and 1000, on singleton-regime and compacted digests, in
+    VERBOSE and SMALL encodings, on empty and one-value digests, and at
+    probes on every cdf branch."""
+    from tdigest_spark.operators import percentile_enrich
+
+    rng = np.random.default_rng(7)
+    blobs = {}
+    for delta in (10.0, 100.0, 1000.0):
+        for n in (0, 1, 2, 40, 20_000):
+            d = MergingDigest(delta, scale=scale)
+            if n:
+                try:
+                    d.add(_corpus_values(rng, n))
+                    d.compress()
+                except AssertionError:  # K_0/K_1 at delta=10 cannot compact
+                    continue
+            for small in (False, True):
+                blobs[f"{delta}/{n}/{small}"] = d.to_bytes(small=small)
+    probes = []
+    for key, blob in blobs.items():
+        probes += [(key, x) for x in _probes_for(MergingDigest.from_bytes(blob), rng)]
+    probes.append(("absent", 1.0))
+    table = spark.createDataFrame(list(blobs.items()), "g string, digest binary")
+    frame = spark.createDataFrame(
+        [(i, k, x) for i, (k, x) in enumerate(probes)], "id long, g string, x double"
+    ).repartition(4)
+    got = {
+        r["id"]: r["percentile"]
+        for r in percentile_enrich(frame, "x", by=["g"], digests=table).collect()
+    }
+    _assert_scores([got[i] for i in range(len(probes))], _expect_scores(blobs, probes), probes)
+    assert sum(g is not None for g in got.values()) > len(probes) // 2
+
+
+@pytest.mark.parametrize(
+    "by", [["k_str"], ["k_big"], ["k_dbl"], ["k_bin"], ["k_str", "k_dbl"], []]
+)
+def test_scorer_key_folding(spark, corpus, rows, by):
+    """Keys match as the build groups them: NULL is a group, bigints above
+    2^53 stay exact, NaN is one group, -0.0 is 0.0 (the table holds the
+    zero group under -0.0), binary keys compare by content; by=() scores
+    every row against the one digest."""
+    from tdigest_spark.operators import percentile_enrich
+
+    vals: dict = {}
+    keys: dict = {}
+    for r in rows:
+        key = _key(r[k] for k in by)
+        keys.setdefault(key, tuple(r[k] for k in by))
+        if r["v"] is not None and not math.isnan(r["v"]):
+            vals.setdefault(key, []).append(r["v"])
+    blobs = {}
+    for key in keys:
+        d = MergingDigest(100.0)
+        d.add(np.asarray(vals.get(key, [])))
+        blobs[key] = d.to_bytes()
+    table_rows = [
+        tuple(-0.0 if k == 0.0 and isinstance(k, float) else k for k in keys[key])
+        + (blobs[key],)
+        for key in keys
+    ]
+    schema = ", ".join(
+        [f"{f.name} {f.dataType.simpleString()}" for f in corpus.select(*by).schema]
+        + ["digest binary"]
+    )
+    table = spark.createDataFrame(table_rows, schema)
+    out = percentile_enrich(
+        corpus.withColumn("id", F.monotonically_increasing_id()), "v",
+        by=by, digests=table,
+    ).orderBy("id").collect()
+    probes = [(_key(r[k] for k in by), r["v"]) for r in out]
+    _assert_scores([r["percentile"] for r in out], _expect_scores(blobs, probes), probes)
+    assert sum(r["percentile"] is not None for r in out) > len(out) // 2
+
+
+def test_scorer_casts_table_keys_to_frame_types(spark):
+    """An int-keyed digest table scores a bigint-keyed frame; a table key
+    that does not survive the cast to the frame's type (1.5 as a bigint)
+    names no group of the frame, so its rows score NULL, not the digest
+    of the group it would round to."""
+    from tdigest_spark.operators import percentile_enrich
+
+    d = MergingDigest(100.0)
+    d.add(np.arange(1.0, 11.0))
+    blob = d.to_bytes()
+    frame = spark.createDataFrame(
+        [(7, 3.0), (None, 3.0), (8, 3.0)], "g bigint, v double"
+    )
+    ints = spark.createDataFrame([(7, blob), (None, blob)], "g int, digest binary")
+    got = [r["percentile"] for r in percentile_enrich(frame, "v", by=["g"], digests=ints).collect()]
+    assert got == [0.25, 0.25, None]
+    doubles = spark.createDataFrame([(7.5, blob), (8.0, blob)], "g double, digest binary")
+    got = [r["percentile"] for r in percentile_enrich(frame, "v", by=["g"], digests=doubles).collect()]
+    assert got == [None, None, 0.25]
+
+
+def test_scorer_rejects_digest_that_would_compact_on_load(spark):
+    """A digest whose load would compact (at least its private compression
+    in centroids; MergingDigest.to_bytes never writes one) cannot be
+    scored as from_bytes would: scoring it fails loudly."""
+    from tdigest_spark.operators import percentile_enrich
+
+    # delta 10: max_size 70, private compression sqrt(70/20)*10 = 18.7
+    n = 19
+    body = np.empty(2 * n, dtype="<f8")
+    body[0::2] = 1.0
+    body[1::2] = np.arange(n)
+    blob = struct.pack("<IBdddIQ", 1, 3, 0.0, n - 1.0, 10.0, n, n) + body.tobytes()
+    table = spark.createDataFrame([("a", blob)], "g string, digest binary")
+    frame = spark.createDataFrame([("a", 1.0)], "g string, v double")
+    with pytest.raises(Exception, match="private compression"):
+        percentile_enrich(frame, "v", by=["g"], digests=table).collect()

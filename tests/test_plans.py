@@ -7,6 +7,8 @@ a regression that adds a shuffle or drops pushdown should fail loudly.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -698,29 +700,29 @@ def test_shuffle_totals_measures_exchange_volume(spark, docs):
 
 
 def test_percentile_enrich_no_corpus_shuffle(docs):
-    """percentile_enrich's scoring stage is ONE scalar Arrow UDF directly
-    over the scan: the digest table travels as an sc.broadcast side
-    channel, so the returned plan has no Exchange and no Join at all (the
-    corpus never shuffles and no KB digest blob is copied per row).  Only
-    the key and value columns cross to Python: the rest of the row waits
-    in the JVM, so no MapInArrow carries it."""
+    """percentile_enrich's scoring stage is ONE JVM UDF (the Janino
+    `CdfScorer`) directly over the scan: the digest table travels as a
+    JVM broadcast, so the returned plan has no Exchange, no Join (the
+    corpus never shuffles and no KB digest blob is copied per row) and no
+    Python node at all (no row crosses to Python).  The scorer's inputs
+    are exactly the key and value columns."""
     from tdigest_spark.operators import digest_by, percentile_enrich
+
+    def assert_jvm_only(plan):
+        for node in ("Exchange", "Join", "ArrowEvalPython", "BatchEvalPython",
+                     "MapInArrow", "MapInPandas", "Python"):
+            assert node not in plan, node
 
     d = digest_by(docs, "n_chars", by=["lang"], delta=24000.0)
     out = percentile_enrich(docs, "n_chars", by=["lang"], digests=d)
-    simple = explain_str(out, "simple")
-    assert "Exchange" not in simple
-    assert "Join" not in simple
-    assert "MapInArrow" not in simple
-    assert simple.count("ArrowEvalPython") == 1
-    keyed = percentile_enrich(docs, "n_chars", by=["lang", "doc_id"], delta=24000.0)
-    enrich = [
-        line for line in explain_str(keyed, "simple").splitlines()
-        if "ArrowEvalPython" in line
-    ]
-    assert len(enrich) == 1
-    arg = enrich[0].split("enrich(", 1)[1].split(")#")[0]
-    assert [a.split("#")[0] for a in arg.split(", ")] == ["lang", "doc_id", "n_chars"]
+    assert_jvm_only(explain_str(out, "simple"))
+    for by in (["lang"], ["lang", "doc_id"], []):
+        keyed = percentile_enrich(docs, "n_chars", by=by, delta=24000.0)
+        plan = explain_str(keyed, "simple")
+        assert_jvm_only(plan)
+        calls = re.findall(r"percentile_enrich\((.*)\) AS percentile#", plan)
+        assert len(calls) == 1, plan
+        assert re.findall(r"(\w+)#\d+", calls[0]) == [*by, "n_chars"]
 
 
 def test_bm25_score_scan_stage_no_explode_no_python(docs):

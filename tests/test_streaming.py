@@ -608,7 +608,8 @@ def test_session_stats_stream_equals_batch(spark, tmp_path):
 
 def test_percentile_enrich_streams_against_frozen_digests(spark, tmp_path):
     """percentile_enrich with a frozen `digests=` snapshot is a stateless
-    scalar Arrow UDF — it runs UNCHANGED on a streaming DataFrame (the
+    JVM UDF over a broadcast digest table — it runs UNCHANGED on a
+    streaming DataFrame (the
     monitoring face: score arriving rows against last crawl's
     distribution).  Chunked triggers must equal the batch operator row
     for row."""
@@ -660,6 +661,52 @@ def test_percentile_enrich_streams_against_frozen_digests(spark, tmp_path):
     }
     assert len(streamed) == 60
     assert streamed == batch  # exact float equality, chunking-invariant
+
+
+@pytest.mark.parametrize("lane", ["digest", "windowed_digest", "windowed_hll"])
+def test_state_lanes_nan_null_and_bigint_keys(spark, tmp_path, lane):
+    """The three pandas state lanes emit their keys through pandas, which
+    masks a NaN key as NULL: the NaN group would come back as a second
+    NULL row.  A NaN key fails the query loudly instead, while NULL keys
+    and bigint keys above 2^53 next to a NULL come through exact."""
+    import datetime as dt
+
+    big = (1 << 53) + 1  # not representable in float64
+    t = dt.datetime(2024, 1, 1)
+    schema = "ts timestamp, k double, b bigint, v double"
+
+    def run(rows, name):
+        src = str(tmp_path / f"{name}_src")
+        spark.createDataFrame(rows, schema).coalesce(1).write.parquet(src)
+        sdf = spark.readStream.schema(schema).parquet(src)
+        out = {
+            "digest": lambda: ST.streaming_digest_by(sdf, "v", ["k", "b"], qs=(0.5,)),
+            "windowed_digest": lambda: ST.windowed_digest_by(
+                sdf, "ts", "v", ["k", "b"], qs=(0.5,)),
+            "windowed_hll": lambda: ST.windowed_hll_by(sdf, "ts", "v", ["k", "b"], p=8),
+        }[lane]()
+        q = (
+            out.writeStream.format("memory").queryName(f"{lane}_{name}")
+            .outputMode("update")
+            .option("checkpointLocation", str(tmp_path / f"{name}_ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            q.awaitTermination(120)
+        finally:
+            q.stop()
+        return spark.sql(f"select k, b, n_rows from {lane}_{name}").collect()
+
+    rows = [(t, None, None, 1.0), (t, None, big, 2.0), (t, None, big, 3.0),
+            (t, 1.0, big, 4.0), (t, 1.0, None, 5.0)]
+    got = sorted(map(tuple, run(rows, "keys")), key=repr)
+    assert got == sorted(
+        [(None, None, 1), (None, big, 2), (1.0, big, 1), (1.0, None, 1)], key=repr
+    )
+    nan = rows + [(t, float("nan"), None, 6.0), (t, float("nan"), big, 7.0)]
+    with pytest.raises(Exception, match="NaN group key in column 'k'"):
+        run(nan, "nan_keys")
 
 
 def test_streaming_semantic_dedup_zero_vector_in_index(spark, tmp_path):

@@ -156,8 +156,8 @@ def worker(
             return int(r[0]["n"])
     elif jobname == "enrich":
         # per-row percentile scoring against a FROZEN per-lang digest
-        # table (percentile_enrich: broadcast side channel + one
-        # mapInPandas through cdf_batch) — the QUERY side of the north
+        # table (percentile_enrich: JVM broadcast side channel + one
+        # JVM cdf UDF, no Python worker) — the QUERY side of the north
         # metric, where the digest rows cover the BUILD side.  The
         # frozen digests are rebuilt identically per executor from the
         # one globally-fixed file in $ENRICH_DIGEST_FILE (per-executor
