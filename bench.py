@@ -210,27 +210,10 @@ def main() -> None:
         lambda: Q.q_lsh_est_jaccard_pairs(spark, SF_DIR).collect(),
     )
 
-    # 5c. same full pipeline on the xxhash64 PRODUCTION hash lane (JVM
-    #     long lanes + xxhash64 band keys, zero md5 string machinery).
-    #     md5 is kept only for oracle neutrality; this entry measures
-    #     what that neutrality costs (5 vs 5c) — the real-pipeline lane.
-    def dedup_xx():
-        from tdigest_spark.operators.dedup import ngram_jaccard_dedup
-        from tdigest_spark.queries import (
-            LSH_BANDS, LSH_MAX_BUCKET, MINHASH_K, SHINGLE_K, _docs_with_twins,
-        )
-
-        ngram_jaccard_dedup(
-            _docs_with_twins(docs), "text", "doc_id", threshold=0.5,
-            shingle_k=SHINGLE_K, n_hashes=MINHASH_K, bands=LSH_BANDS,
-            max_bucket=LSH_MAX_BUCKET, hash_fn="xxhash64",
-        ).collect()
-
-    bench("minhash_lsh_dedup_xx", dedup_xx)
-
-    # 5c'. same full pipeline on the O(n) NumPy rolling signature lane —
-    #      no shingle string is ever materialized (5.8x the xxhash lane's
-    #      signature throughput on 500k docs; see BENCH/BASELINE.md)
+    # 5c. same full pipeline on the O(n) NumPy rolling signature lane —
+    #     the production lane: no shingle string is ever materialized
+    #     (112k docs/s signature build on 500k docs; BENCH/BASELINE.md).
+    #     md5 (5) is kept for oracle neutrality; 5 vs 5c is its cost.
     def dedup_roll():
         from tdigest_spark.operators.dedup import ngram_jaccard_dedup
         from tdigest_spark.queries import (
@@ -313,25 +296,10 @@ def main() -> None:
     bench("line_dedup_corpus", line_dedup)
 
     # 5g. corpus-global duplicate-SPAN removal (ExactSubstr k-gram
-    #     windows) on the production xxhash64 lane; the agg forces the
-    #     full token rewrite without collecting 5k texts.
-    def span_dedup():
-        from tdigest_spark.operators.dedup import dedup_spans_corpus
-
-        dedup_spans_corpus(
-            docs.select("doc_id", "text"),
-            k=Q.SPAN_K,
-            min_count=Q.SPAN_MIN_COUNT,
-            hash_fn="xxhash64",
-        ).agg(F.sum("n_tokens_kept"), F.sum(F.length("clean_text"))).collect()
-
-    bench("span_dedup_corpus", span_dedup)
-
-    # 5g'. same job on the O(n) NumPy Rabin-Karp lane — the production
-    #      path at corpus scale (345s vs JVM-lane timeout on 4M docs);
-    #      at bench SF the Python-worker round trip costs more than the
-    #      O(n*k) JVM work it saves, so expect parity or slightly worse
-    #      here and the win only at scale.
+    #     windows) on the O(n) NumPy Rabin-Karp production lane (345 s vs
+    #     a JVM-lane timeout on 4M docs; the md5 lane runs as the driver
+    #     face span_dedup_corpus in queries.py).  The agg forces the full token rewrite
+    #     without collecting 5k texts.
     def span_dedup_roll():
         from tdigest_spark.operators.dedup import dedup_spans_corpus
 

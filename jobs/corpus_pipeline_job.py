@@ -56,12 +56,11 @@ def build_parser():
     ap.add_argument("--n-hashes", type=int, default=8,
                     help="MinHash lanes (also the --verify estimate "
                          "granularity: thresholds round to 1/n_hashes)")
-    ap.add_argument("--minhash-lane", choices=("md5", "xxhash64", "rolling"),
+    ap.add_argument("--minhash-lane", choices=("md5", "rolling"),
                     default="md5",
-                    help="signature hash lane: md5 (oracle-neutral), "
-                         "xxhash64 (JVM longs), rolling (O(n) NumPy "
-                         "Rabin-Karp — ~6x the xxhash signature "
-                         "throughput; recommended at corpus scale)")
+                    help="signature hash lane: md5 (oracle-neutral) or "
+                         "rolling (O(n) NumPy Rabin-Karp; recommended at "
+                         "corpus scale)")
     ap.add_argument("--max-bucket", type=int, default=200,
                     help="LSH buckets above this are template clusters: "
                          "skipped pairwise, collapsed via exact dedup only")

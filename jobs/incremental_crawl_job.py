@@ -66,7 +66,11 @@ def build_parser() -> argparse.ArgumentParser:
     ap.add_argument("--bands", type=int, default=4)
     ap.add_argument("--max-bucket", type=int, default=1000)
     ap.add_argument("--minhash-lane", default="md5",
-                    choices=("md5", "xxhash64", "rolling"))
+                    choices=("md5", "rolling"),
+                    help="signature hash lane; must match the lane that "
+                    "built --index-dir.  An index built with the removed "
+                    "xxhash64 lane has the rolling lane's type and would "
+                    "silently match nothing: rebuild it")
     return ap
 
 

@@ -1,12 +1,14 @@
 """Group -> sketch builds and merges over Arrow: ``mapInArrow`` map-side,
 ``groupBy().applyInArrow`` for keyed reduces.
 
-Stage 1 of every mergeable sketch here (t-digest, log-histogram, KLL,
+Stage 1 of every Python-built mergeable sketch (log-histogram, KLL,
 Frequent Directions, Misra-Gries heavy-hitter candidates) has one shape:
 each input partition keeps a dict group -> sketch, feeds it every Arrow
 batch split by group, and emits one partial row per (group, partition).
 Only those KB-sized partials shuffle; raw rows never do.  This module is
-that shape, once.
+that shape, once.  The t-digest's stage 1 is the JVM kernel
+(``_jvm_kernel.DigestPartials``); only its stage-2 merge runs here, via
+`reduce_groups`.
 
 The split stays in Arrow: ``dictionary_encode`` per key column (NULL is a
 dictionary entry, so it is a group like any other and the same Python key

@@ -132,6 +132,11 @@ def _bounded_buckets(
 
 LANE_HEX = 8  # 32-bit lanes: 8 hex chars per minhash value
 
+def _check_hash_fn(hash_fn: str) -> None:
+    """Signature lanes: md5 (oracle-neutral) | rolling (production)."""
+    if hash_fn not in ("md5", "rolling"):
+        raise ValueError(f"hash_fn must be 'md5' or 'rolling' (got {hash_fn!r})")
+
 
 def minhash_signatures(
     df: DataFrame,
@@ -150,33 +155,24 @@ def minhash_signatures(
     equals numeric min, so the construction is engine-neutral string
     algebra DuckDB reproduces bit-for-bit.
 
-    hash_fn="xxhash64" (PRODUCTION lane): array<bigint> of
-    min(xxhash64(j, shingle)) per lane j — one JVM long-hash evaluation
-    per lane, no md5 string machinery (concat/substring/hex compares).
-    xxhash64 is Spark-specific, so this lane is for real pipelines, not
-    oracle queries; every downstream consumer (banding, estimated
-    verify, candidate pairs) is signature-type-agnostic.
-
     hash_fn="rolling" (PRODUCTION lane, O(n)): array<bigint> built by an
     Arrow-batched NumPy pass that never materializes a shingle string —
-    see rolling_minhash_frame.  Both JVM lanes pay O(n*k) string bytes
+    see rolling_minhash_frame.  The md5 lane pays O(n*k) string bytes
     per doc assembling shingles; at corpus scale that assembly is the
-    dominant compute of the whole LSH stage.
+    dominant compute of the whole LSH stage.  This lane caps `n_hashes`
+    at 64 (one per-lane offset in `_MINHASH_Z` each).
 
     Lane collisions for random docs are ~2·|shingles|/2³² per 32-bit
     lane (less for 64-bit) — negligible next to banding probabilities.
 
-    Plan shape (JVM lanes): explode distinct shingles, then ONE hash
+    Plan shape (md5 lane): explode distinct shingles, then ONE hash
     aggregate with `n_hashes` min() columns.  The aggregate is partial
     (map-side combine), so the shuffle carries only (doc, n_hashes mins)
     partials — bytes per doc, never the shingle stream.  The rolling
     lane has NO shuffle at all: signatures are finished per doc inside
     the scan-stage Python worker.
     """
-    if hash_fn not in ("md5", "xxhash64", "rolling"):
-        raise ValueError(
-            f"hash_fn must be 'md5', 'xxhash64' or 'rolling' (got {hash_fn!r})"
-        )
+    _check_hash_fn(hash_fn)
     if hash_fn == "rolling":
         return rolling_minhash_frame(
             ensure_parallelism(df.select(F.col(id_col), F.col(text_col))),
@@ -193,23 +189,16 @@ def minhash_signatures(
             F.array_distinct(shingles_from_tokens(F.col("__t"), shingle_k))
         ).alias("__sh"),
     )
-    if hash_fn == "xxhash64":
-        aggs = [
-            F.min(F.xxhash64(F.lit(j), F.col("__sh"))).alias(f"__m{j}")
-            for j in range(n_hashes)
-        ]
-        mins = sh.groupBy(id_col).agg(*aggs)
-    else:
-        n_md5 = (n_hashes * LANE_HEX + 31) // 32
-        allhex = F.concat(
-            *[F.md5(F.concat(F.lit(f"{c}:"), F.col("__sh"))) for c in range(n_md5)]
-        )
-        hashed = sh.select(F.col(id_col), allhex.alias("__h"))
-        aggs = [
-            F.min(F.substring("__h", j * LANE_HEX + 1, LANE_HEX)).alias(f"__m{j}")
-            for j in range(n_hashes)
-        ]
-        mins = hashed.groupBy(id_col).agg(*aggs)
+    n_md5 = (n_hashes * LANE_HEX + 31) // 32
+    allhex = F.concat(
+        *[F.md5(F.concat(F.lit(f"{c}:"), F.col("__sh"))) for c in range(n_md5)]
+    )
+    hashed = sh.select(F.col(id_col), allhex.alias("__h"))
+    aggs = [
+        F.min(F.substring("__h", j * LANE_HEX + 1, LANE_HEX)).alias(f"__m{j}")
+        for j in range(n_hashes)
+    ]
+    mins = hashed.groupBy(id_col).agg(*aggs)
     return mins.select(
         F.col(id_col),
         F.array(*[F.col(f"__m{j}") for j in range(n_hashes)]).alias("minhash_sig"),
@@ -228,8 +217,8 @@ def lsh_band_keys(
 
     The key hash follows the signature lane: md5 over the comma-joined
     hex lanes for string signatures (oracle-neutral), xxhash64 straight
-    over the long-array slice for the xxhash64 production lane (array
-    input — no string rendering at all)."""
+    over the long-array slice for the rolling lane's array<bigint>
+    signatures (array input — no string rendering at all)."""
     from pyspark.sql.types import StringType
 
     str_lanes = isinstance(
@@ -288,6 +277,7 @@ def lsh_candidate_pairs(
     generation AND `estimated_jaccard_pairs` verification."""
     from pyspark import StorageLevel
 
+    _check_hash_fn(hash_fn)
     rows_per_band = _rows_per_band(n_hashes, bands)
     if sigs is None:
         sigs = minhash_signatures(
@@ -427,8 +417,8 @@ def ngram_jaccard_dedup(
     hash_fn: str = "md5",
 ) -> DataFrame:
     """Full near-dup pipeline: LSH candidates -> exact Jaccard >= threshold.
-    Returns (id_a, id_b, jaccard).  `hash_fn="xxhash64"` switches the
-    signature/banding stage to the JVM long-hash production lane (exact
+    Returns (id_a, id_b, jaccard).  `hash_fn="rolling"` switches the
+    signature/banding stage to the O(n) NumPy production lane (exact
     verification is hash-agnostic)."""
     from pyspark import StorageLevel
 
@@ -546,9 +536,16 @@ def dedup_against_index(
     cost, which is what makes monthly-increment dedup feasible when the
     standing corpus is 100 TB.  Pass `new_sigs` to reuse a signature
     frame you already built (e.g. to append it to the index afterwards).
+
+    `hash_fn` (md5 | rolling) must be the lane that built `index_sigs`:
+    signatures of different lanes never match.  An index built by the
+    removed xxhash64 lane has the rolling lane's array<bigint> type, so
+    a rolling run reads it without error and silently matches nothing.
+    Rebuild such an index with the lane you run.
     """
     from pyspark import StorageLevel
 
+    _check_hash_fn(hash_fn)
     if new_sigs is None:
         new_sigs = _track(
             minhash_signatures(
@@ -884,24 +881,22 @@ def dedup_lines_corpus(
     )
 
 
-def span_hashes(toks: Column | str, k: int, hash_fn: str = "md5"):
-    """Hash of every k-token window (stride 1) of a *materialized* token
-    array, as an array<string> / array<bigint> column; docs shorter than
-    k tokens yield an empty array (no duplication evidence at this
-    granularity).  `toks` must be a bound column from its own projection
-    — an inline expression would be re-evaluated per window index
-    (see text.shingles_from_tokens).  O(n*k) hash work per doc; a rolling
-    (Rabin-Karp) lane would make it O(n) but is not expressible as an
+def span_hashes(toks: Column | str, k: int):
+    """md5 of every k-token window (stride 1) of a *materialized* token
+    array, as an array<string> column; docs shorter than k tokens yield
+    an empty array (no duplication evidence at this granularity).
+    `toks` must be a bound column from its own projection — an inline
+    expression would be re-evaluated per window index (see
+    text.shingles_from_tokens).  O(n*k) hash work per doc; the rolling
+    lane (rolling_hashed_frame) is O(n) but not expressible as an
     engine-neutral md5, so the oracle lane pays the k factor."""
     toks = F.col(toks) if isinstance(toks, str) else toks
-    _h = F.md5 if hash_fn == "md5" else F.xxhash64
     n = F.size(toks)
     grams = F.transform(
         F.sequence(F.lit(1), n - F.lit(k - 1)),
-        lambda j: _h(F.concat_ws(" ", F.slice(toks, j, k))),
+        lambda j: F.md5(F.concat_ws(" ", F.slice(toks, j, k))),
     )
-    empty = F.array().cast("array<string>" if hash_fn == "md5" else "array<bigint>")
-    return F.when(n >= k, grams).otherwise(empty)
+    return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
 
 
 # Rabin-Karp rolling lane constants.  FNV-64 prime as the polynomial
@@ -951,7 +946,7 @@ def _rolling_core(np, pd, tok_lists, k, short_whole=False, include_empty=False):
     (span_hashes semantics).  short_whole=True: such docs produce ONE
     whole-doc window (shingles_from_tokens semantics), and
     include_empty decides whether a 0-token doc still gets that one
-    window (hash 0, shared by all empty docs — the JVM lanes' ""
+    window (hash 0, shared by all empty docs — the md5 lane's ""
     shingle) or none (contamination's empty-gram exemption).
     """
     lens = np.array([len(t) for t in tok_lists], dtype=np.int64)
@@ -1017,7 +1012,7 @@ def rolling_hashed_frame(
     dedup_spans_corpus (hash_fn="rolling").
 
     This is the module's one deliberate Python stage (see module
-    docstring: everything else is JVM-side).  The JVM lane's
+    docstring: everything else is JVM-side).  A JVM window lane's
     concat_ws+hash costs O(n*k) string work per doc (~15 us per window
     measured); this lane is O(n): each token is hashed ONCE
     (pandas hash_array, C siphash with a fixed key — deterministic
@@ -1026,8 +1021,9 @@ def rolling_hashed_frame(
     P = segmented prefix sum of token_hash[i] * BASE^(-i), all uint64
     wraparound NumPy, finished with a murmur fmix64 avalanche so the
     low bits of the polynomial (which only mix low token-hash bits)
-    don't cluster LSH-style consumers.  Measured ~50x over the JVM
-    xxhash lane on the 4M-doc corpus; Arrow moves text in and 8 B per
+    don't cluster LSH-style consumers.  On the 4M-doc corpus the whole
+    operator finished in 345 s on this lane where a JVM 8-byte-hash
+    window lane timed out past 1,200 s; Arrow moves text in and 8 B per
     token back out.
 
     Tokenization matches tokens_col(text, " ") exactly (literal-space
@@ -1037,8 +1033,8 @@ def rolling_hashed_frame(
 
     Polynomial-mod-2^64 hashes admit ADVERSARIAL collisions
     (Thue-Morse-style inputs); for boilerplate dedup on natural
-    corpora the collision rate is ~2^-64-like, same risk class as the
-    xxhash lane.  Not oracle-expressible — md5 stays the oracle lane.
+    corpora the collision rate is ~2^-64-like, same risk class as any
+    64-bit hash.  Not oracle-expressible — md5 stays the oracle lane.
     """
     import numpy as np  # lazy: keep module import JVM-only
 
@@ -1088,7 +1084,7 @@ def rolling_minhash_frame(
     """(id, minhash_sig array<bigint>) — the O(n) NumPy production lane
     for minhash_signatures (hash_fn="rolling").
 
-    The JVM lanes pay O(n*k) string bytes per doc building every
+    The md5 lane pays O(n*k) string bytes per doc building every
     shingle STRING before hashing it (the dominant compute of both the
     headline minhash query and the 4M-doc pipeline's LSH stage).  This
     lane never materializes a shingle: tokens are hashed once (pandas
@@ -1103,8 +1099,8 @@ def rolling_minhash_frame(
     with >= k tokens get all n-k+1 shingles; 1..k-1 tokens -> ONE
     whole-doc shingle; empty-after-split OR NULL text -> one shared
     "empty" shingle (all such docs get identical signatures, exactly as
-    the JVM lanes' concat_ws-produced "" shingle — verified against the
-    xxhash lane).  Every downstream consumer (banding,
+    the md5 lane's concat_ws-produced "" shingle — the tests check this
+    coverage against the md5 lane).  Every downstream consumer (banding,
     candidate pairs, estimated verify) is signature-type-agnostic, so
     this lane composes with the whole LSH stack; only the DuckDB
     oracle requires md5.
@@ -1143,9 +1139,9 @@ def _minhash_batch(np, pd, pdf, text_col, id_col, k, zs):
                 "minhash_sig": pd.Series([], dtype=object),
             }
         )
-    # NULL text == empty text here: the JVM lanes' concat_ws
+    # NULL text == empty text here: the md5 lane's concat_ws
     # ignores the NULL token array, so NULL-text docs get the
-    # shared "" shingle too (verified against the xxhash lane)
+    # shared "" shingle too (checked against the md5 lane)
     tok_lists = [
         [w for w in t.split(" ") if w] if isinstance(t, str) else []
         for t in texts
@@ -1274,7 +1270,7 @@ def dedup_spans_corpus(
     is the exception), so the id must never ride the wide shuffle:
     1. COUNT pass — explode window hashes ALONE and partial-agg count
        them: the one corpus-wide shuffle carries bare 8-byte keys
-       (xxhash lane), nothing else.  Survivors (count >= min_count) are
+       (rolling lane), nothing else.  Survivors (count >= min_count) are
        the global dup set — tiny relative to the corpus.
     2. FLAG pass — re-hash scan-side, posexplode (id, pos, hash), and
        broadcast-join the dup set: the join filters in the scan stage,
@@ -1288,10 +1284,10 @@ def dedup_spans_corpus(
        text.
     The count and flag passes share one hashed frame: with
     `cache_hashes` (default) it is persisted between them —
-    O(tokens × 8 B) for the xxhash/rolling lanes (~20% of corpus
-    bytes), but ~1 window STRING of 32 chars per token on the md5
-    lane, i.e. roughly CORPUS-sized blocks — budget for that or use an
-    8-byte lane when caching at scale.  Either lane is far smaller
+    O(tokens × 8 B) for the rolling lane (~20% of corpus bytes), but
+    ~1 window STRING of 32 chars per token on the md5 lane, i.e.
+    roughly CORPUS-sized blocks — budget for that or use the rolling
+    lane when caching at scale.  Either lane is far smaller
     than materializing window strings at rest.  `cache_hashes=False`
     trades a second O(n*k) hashing pass for zero storage (callers
     release via `release_cached()`).  Ids never ride the wide shuffle
@@ -1302,11 +1298,10 @@ def dedup_spans_corpus(
     pathological fully-duplicated doc makes f ~ n, which is why
     doc-level dedup (exact + LSH) should run FIRST in a pipeline —
     this operator then only sees spans inside otherwise-unique docs.
-    hash_fn="md5" is the oracle-neutral lane; "xxhash64" is the JVM
-    8-byte lane (same plan shape); "rolling" is the production lane —
-    an O(n) NumPy Rabin-Karp pass (see rolling_hashed_frame) that
-    removes the O(n*k) JVM string work entirely and feeds the
-    identical downstream plan.
+    hash_fn="md5" is the oracle-neutral lane; "rolling" is the
+    production lane — an O(n) NumPy Rabin-Karp pass (see
+    rolling_hashed_frame) that removes the O(n*k) JVM string work
+    entirely and feeds the identical downstream plan.
 
     Broadcasting the dup set keeps the flag pass's big side
     shuffle-free (the join filters in the scan stage), but a
@@ -1319,10 +1314,7 @@ def dedup_spans_corpus(
     to a shuffle join.  Pass True/False to force either plan and skip
     the counting job.
     """
-    if hash_fn not in ("md5", "xxhash64", "rolling"):
-        raise ValueError(
-            f"hash_fn must be 'md5', 'xxhash64' or 'rolling' (got {hash_fn!r})"
-        )
+    _check_hash_fn(hash_fn)
     if k < 2:
         raise ValueError(f"k must be >= 2 (got {k})")
 
@@ -1336,7 +1328,7 @@ def dedup_spans_corpus(
         hashed = (
             base.select(F.col(id_col), tokens_col(text_col).alias("__ts"))
             .select(
-                F.col(id_col), span_hashes(F.col("__ts"), k, hash_fn).alias("__wh")
+                F.col(id_col), span_hashes(F.col("__ts"), k).alias("__wh")
             )
         )
     if cache_hashes:
@@ -1836,7 +1828,9 @@ def similarity_join(
     right side's template buckets excluded by a partial-agg count
     (fanout capped linear in the left side), then lane-agreement verify
     over ~100 B/row signature joins — text never shuffles, and neither
-    side is ever pairwise-expanded against itself."""
+    side is ever pairwise-expanded against itself.  `hash_fn` is the
+    signature lane of both sides (md5 | rolling, see
+    `minhash_signatures`)."""
     lcol = f"{left_id}_l" if left_id == right_id else left_id
     rcol = f"{right_id}_r" if left_id == right_id else right_id
     ls = minhash_signatures(left, text_col, left_id, n_hashes, shingle_k, hash_fn)

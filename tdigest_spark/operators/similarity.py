@@ -554,7 +554,7 @@ def pq_train(
 
 # codegen guard for the literal encode lane: n_sub*ksub struct candidates,
 # each folding dsub literal terms — beyond this, whole-stage codegen blows
-# up and the NumPy lane wins anyway
+# up and lane='arrow' wins anyway
 PQ_MAX_LITERAL_TERMS = 8192
 
 
@@ -596,14 +596,10 @@ def _pq_argmin_codes(X, CT, cnorms, dsub):
 
 
 def _pq_encode_arrow(emb, codebooks, id_col, vec_col, out_col, extra_cols):
-    """mapInArrow encode lane: the vector column's flat value buffer is
-    viewed as an (n, dim) matrix with ZERO per-row object allocation —
-    the pandas lane's np.vstack over n Python ndarrays is the dominant
-    cost at production batch sizes and churns the allocator across every
-    co-located executor.  Requires non-null vectors of uniform width
-    (what a real embedding table is); raises otherwise."""
+    """`pq_encode`'s arrow lane (see there)."""
     import numpy as np
     import pyarrow as pa
+    import pyarrow.compute as pc
     from typing import Iterator
 
     n_sub = len(codebooks)
@@ -621,13 +617,15 @@ def _pq_encode_arrow(emb, codebooks, id_col, vec_col, out_col, extra_cols):
                 raise ValueError(
                     "pq_encode arrow lane requires non-null vectors"
                 )
-            flat = arr.flatten()
-            if len(flat) != n * dim:
+            # every row, not the total: widths dim-1 and dim+1 sum to
+            # 2*dim and would reshape into mis-sliced vectors
+            w = pc.min_max(pc.list_value_length(arr)).as_py()
+            if w["min"] != dim or w["max"] != dim:
                 raise ValueError(
                     f"pq_encode arrow lane requires uniform width {dim}; "
-                    f"got {len(flat)} values for {n} rows"
+                    f"got row widths {w['min']}..{w['max']}"
                 )
-            X = flat.to_numpy(zero_copy_only=False).astype(
+            X = arr.flatten().to_numpy(zero_copy_only=False).astype(
                 np.float64, copy=False
             ).reshape(n, dim)
             codes = _pq_argmin_codes(X, CT, cnorms, dsub)
@@ -658,6 +656,11 @@ def _pq_encode_arrow(emb, codebooks, id_col, vec_col, out_col, extra_cols):
     )
 
 
+def _check_encode_lane(lane: str) -> None:
+    if lane not in ("literal", "arrow"):
+        raise ValueError(f"lane must be 'literal' or 'arrow' (got {lane!r})")
+
+
 def pq_encode(
     emb: DataFrame,
     codebooks: Sequence[Sequence[Sequence[float]]],
@@ -681,17 +684,18 @@ def pq_encode(
       zero Python; distances are sequential `l2sq_col` folds so codes
       are bit-reproducible across engines.  Guarded by
       PQ_MAX_LITERAL_TERMS (n_sub*ksub*dsub literal terms).
-    - "numpy" (general): one Arrow-batched mapInPandas pass; the argmin
-      is a cache-blocked (blk x ksub) matmul per subspace, the right
-      shape for ksub=256 production codebooks where 16k literal folds
-      would swamp codegen.  May differ from the literal lane only on
-      sub-ulp distance ties (different accumulation order); argmin
-      tie-break (first minimum = lowest j) matches.
-    - "arrow" (production): same kernel via mapInArrow — the vector
-      column's flat buffer is viewed as an (n, dim) matrix with zero
-      per-row object allocation (the pandas lane's np.vstack is its
-      dominant cost).  Requires non-null uniform-width vectors.
+    - "arrow" (production): one mapInArrow pass; the vector column's
+      flat buffer is viewed as an (n, dim) matrix with zero per-row
+      object allocation (an np.vstack over per-row ndarrays costs ~2x
+      per executor and churns the allocator), and the argmin is a
+      cache-blocked (blk x ksub) matmul per subspace — the right shape
+      for ksub=256 production codebooks where 16k literal folds would
+      swamp codegen.  May differ from the literal lane only on sub-ulp
+      distance ties (different accumulation order); argmin tie-break
+      (first minimum = lowest j) matches.  Requires non-null vectors of
+      width exactly n_sub*dsub.
     """
+    _check_encode_lane(lane)
     n_sub = len(codebooks)
     ksub = len(codebooks[0])
     dsub = len(codebooks[0][0])
@@ -700,7 +704,7 @@ def pq_encode(
         if n_sub * ksub * dsub > PQ_MAX_LITERAL_TERMS:
             raise ValueError(
                 f"literal lane would embed {n_sub * ksub * dsub} terms "
-                f"(> {PQ_MAX_LITERAL_TERMS}); use lane='numpy'"
+                f"(> {PQ_MAX_LITERAL_TERMS}); use lane='arrow'"
             )
         # bind each subvector once in its own projection — inlined, every
         # candidate struct would re-slice it (see CLAUDE.md lambda note)
@@ -732,40 +736,7 @@ def pq_encode(
             F.array(*code_cols).alias(out_col),
         )
 
-    if lane == "arrow":
-        return _pq_encode_arrow(
-            emb, codebooks, id_col, vec_col, out_col, extra_cols
-        )
-    if lane != "numpy":
-        raise ValueError(f"unknown lane {lane!r}")
-
-    import numpy as np
-    import pandas as pd
-    from typing import Iterator
-
-    CT, cnorms = _pq_kernel_tables(codebooks)
-
-    def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            X = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            codes = _pq_argmin_codes(X, CT, cnorms, dsub)
-            out = {id_col: pdf[id_col].values}
-            for c in extra_cols:
-                out[c] = pdf[c].values
-            out[out_col] = [c.tolist() for c in codes]
-            yield pd.DataFrame(out)
-
-    types = dict(emb.dtypes)
-    fields = ", ".join(
-        [f"{id_col} {types[id_col]}"]
-        + [f"{c} {types[c]}" for c in extra_cols]
-        + [f"{out_col} array<int>"]
-    )
-    return emb.select(id_col, *extra_cols, vec_col).mapInPandas(
-        encode, schema=fields
-    )
+    return _pq_encode_arrow(emb, codebooks, id_col, vec_col, out_col, extra_cols)
 
 
 def _pq_topk_numpy(
@@ -1068,7 +1039,9 @@ def ivf_pq_index(
     default; see `ivf_residual_frame`) — pass codebooks TRAINED ON
     RESIDUALS (`pq_train(ivf_residual_frame(...))`) and search with
     `ivf_pq_topk(..., residual=True)`.  The residual join is a broadcast
-    of the KB-sized centroid table, still zero corpus Exchange."""
+    of the KB-sized centroid table, still zero corpus Exchange.
+    `lane` is `pq_encode`'s (literal | arrow)."""
+    _check_encode_lane(lane)
     if residual:
         assigned = ivf_residual_frame(emb, centroids, id_col, vec_col)
     else:

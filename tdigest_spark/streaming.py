@@ -540,9 +540,15 @@ def streaming_incremental_dedup(
     per-trigger probe prunes to the batch's buckets instead of
     rescanning every signature.
 
+    `hash_fn` (md5 | rolling) must be the index's lane; see
+    `dedup.dedup_against_index`.
+
     Returns a DataStreamWriter — caller sets checkpointLocation and
     starts it.
     """
+    from .operators.dedup import _check_hash_fn
+
+    _check_hash_fn(hash_fn)  # here, not in the first micro-batch
     sig_type = "array<string>" if hash_fn == "md5" else "array<bigint>"
     id_type = sdf.schema[id_col].dataType.simpleString()
 

@@ -282,16 +282,16 @@ def test_simhash_near_pairs_hot_chunk_guard(spark):
     assert out.get((1000, 2000)) == 0
 
 
-def test_xxhash64_lane_pipeline(corpus):
-    """The xxhash64 production lane: long-array signatures, xxhash64 band
-    keys, hash-agnostic exact verification — same recall contract as the
-    md5 lane on the twin corpus."""
-    sigs = D.minhash_signatures(corpus, hash_fn="xxhash64")
+def test_rolling_lane_pipeline(corpus):
+    """The rolling production lane end to end: long-array signatures,
+    xxhash64 band keys, hash-agnostic exact verification — same recall
+    contract as the md5 lane on the twin corpus."""
+    sigs = D.minhash_signatures(corpus, hash_fn="rolling")
     row = sigs.first()
     assert len(row["minhash_sig"]) == 8
     assert all(isinstance(v, int) for v in row["minhash_sig"])
 
-    out = D.ngram_jaccard_dedup(corpus, threshold=0.8, hash_fn="xxhash64")
+    out = D.ngram_jaccard_dedup(corpus, threshold=0.8, hash_fn="rolling")
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in out.collect()}
     for i in range(10, 15):
         assert got.get((i, 2000 + i)) == 1.0  # exact dups always bucket together
@@ -636,26 +636,13 @@ def test_dedup_spans_corpus_whitespace_normalization(spark):
     assert out[0]["clean_text"] == "tail0" and out[1]["clean_text"] == "tail1"
 
 
-def test_dedup_spans_corpus_xxhash_lane_same_verdicts(spark):
-    rows = [
-        (0, "a b c d e f unique tail zero"),
-        (1, "prefix one a b c d e f and more"),
-        (2, "totally distinct words nothing shared here at all"),
-        (3, None),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    md5 = D.dedup_spans_corpus(df, k=6, min_count=2, hash_fn="md5")
-    xx = D.dedup_spans_corpus(df, k=6, min_count=2, hash_fn="xxhash64")
-    assert sorted(
-        map(tuple, md5.collect()), key=lambda t: t[0]
-    ) == sorted(map(tuple, xx.collect()), key=lambda t: t[0])
-
-
 def test_dedup_spans_corpus_rolling_lane_same_verdicts(spark):
     # the O(n) NumPy Rabin-Karp production lane must produce identical
-    # kept text to the JVM lane: overlapping dups (interval merge),
-    # within-doc repeats, a doc shorter than k, NULL text, multi-space
-    # tokenization alignment (Python split must mirror tokens_col)
+    # kept text to the md5 oracle lane (span verdicts are
+    # hash-independent): overlapping dups (interval merge), within-doc
+    # repeats, a doc shorter than k, NULL text, a doc sharing nothing,
+    # multi-space tokenization alignment (Python split must mirror
+    # tokens_col)
     rows = [
         (0, "a b c d e f g h unique tail zero"),
         (1, "pre a b c d e f g h post and c d e f g h i j k end"),
@@ -663,15 +650,21 @@ def test_dedup_spans_corpus_rolling_lane_same_verdicts(spark):
         (3, "short doc"),
         (4, None),
         (5, "spaced  a b   c d e f g h  tail"),
+        (6, "a b c d e f unique tail zero"),
+        (7, "prefix one a b c d e f and more"),
+        (8, "totally distinct words nothing shared here at all"),
+        (9, None),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    xx = D.dedup_spans_corpus(df, k=6, min_count=2, hash_fn="xxhash64")
+    md5 = D.dedup_spans_corpus(df, k=6, min_count=2, hash_fn="md5")
     roll = D.dedup_spans_corpus(df, k=6, min_count=2, hash_fn="rolling")
-    xs = sorted(map(tuple, xx.collect()))
+    ms = sorted(map(tuple, md5.collect()))
     rs = sorted(map(tuple, roll.collect()))
-    assert xs == rs
-    # sanity: something was actually removed (shared 6-gram runs)
-    assert any(r[1] is not None and r[2] < r[1] for r in xs)
+    assert ms == rs
+    # sanity: something was actually removed (shared 6-gram runs), and
+    # the doc sharing nothing kept every token
+    assert any(r[1] is not None and r[2] < r[1] for r in ms)
+    assert ms[8][1:3] == (8, 8)
 
 
 def test_rolling_span_hashes_no_false_window_collisions(spark):
@@ -700,7 +693,7 @@ def test_rolling_span_hashes_no_false_window_collisions(spark):
 
 
 def test_rolling_minhash_lane_semantics(spark):
-    # the O(n) NumPy signature lane must mirror the JVM lanes' doc
+    # the O(n) NumPy signature lane must mirror the md5 lane's doc
     # coverage and MinHash statistics: exact dups agree on every lane,
     # near-dups on most, distinct docs on none; short docs get a
     # whole-doc shingle; empty/whitespace/NULL docs share one "" shingle
@@ -719,14 +712,14 @@ def test_rolling_minhash_lane_semantics(spark):
         r.doc_id: tuple(r.minhash_sig)
         for r in D.minhash_signatures(df, hash_fn="rolling").collect()
     }
-    xx = {
+    md5 = {
         r.doc_id: tuple(r.minhash_sig)
-        for r in D.minhash_signatures(df, hash_fn="xxhash64").collect()
+        for r in D.minhash_signatures(df, hash_fn="md5").collect()
     }
-    assert sorted(roll) == sorted(xx)  # identical doc coverage
+    assert sorted(roll) == sorted(md5)  # identical doc coverage
     assert roll[0] == roll[1] and roll[0] != roll[3]
     assert roll[5] == roll[6] == roll[7]  # shared empty shingle
-    assert xx[5] == xx[6] == xx[7]  # ...mirroring the JVM lanes
+    assert md5[5] == md5[6] == md5[7]  # ...mirroring the md5 lane
     agree_near = sum(a == b for a, b in zip(roll[0], roll[2]))
     agree_far = sum(a == b for a, b in zip(roll[0], roll[3]))
     assert agree_near >= 4 and agree_far <= 1
@@ -800,6 +793,23 @@ def test_dedup_spans_corpus_validation(spark):
         D.dedup_spans_corpus(df, k=1)
     with pytest.raises(ValueError):
         D.dedup_spans_corpus(df, hash_fn="sha1")
+
+
+def test_removed_xxhash64_lane_rejected_everywhere():
+    # every operator taking `hash_fn` rejects the removed lane up front
+    # (before touching a frame), naming both surviving lanes
+    import inspect
+
+    from tdigest_spark.streaming import streaming_incremental_dedup as sid
+
+    for f, n_frames in (
+        (D.minhash_signatures, 1), (D.lsh_candidate_pairs, 1),
+        (D.ngram_jaccard_dedup, 1), (D.dedup_spans_corpus, 1),
+        (D.dedup_against_index, 2), (D.similarity_join, 2), (sid, 3),
+    ):
+        with pytest.raises(ValueError, match="'md5' or 'rolling'"):
+            f(*[None] * n_frames, hash_fn="xxhash64")
+    assert "hash_fn" not in inspect.signature(D.span_hashes).parameters
 
 
 def test_dedup_spans_corpus_nondefault_paths_same_output(spark):

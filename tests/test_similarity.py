@@ -307,12 +307,16 @@ def test_pq_encode_lanes_agree_and_match_numpy(emb):
         r["vec_id"]: list(r["pq_code"])
         for r in S.pq_encode(df, books, lane="literal").collect()
     }
-    npy = {
+    arw = {
         r["vec_id"]: list(r["pq_code"])
-        for r in S.pq_encode(df.repartition(7), books, lane="numpy").collect()
+        for r in S.pq_encode(df.repartition(7), books, lane="arrow").collect()
     }
     assert lit == expect
-    assert npy == expect
+    assert arw == expect
+    # extra_cols pass through the arrow lane too
+    df2 = df.withColumn("tag", F.col("vec_id") % 3)
+    out = S.pq_encode(df2, books, lane="arrow", extra_cols=["tag"]).collect()
+    assert all(r["tag"] == r["vec_id"] % 3 for r in out)
 
 
 def test_pq_encode_literal_guard():
@@ -321,6 +325,11 @@ def test_pq_encode_literal_guard():
         S.pq_encode(None, books, lane="literal")
     with pytest.raises(ValueError, match="lane"):
         S.pq_encode(None, [[[0.0]]], lane="bogus")
+    # both encode faces reject any other lane up front, naming the two
+    with pytest.raises(ValueError, match="'literal' or 'arrow'"):
+        S.pq_encode(None, [[[0.0]]], lane="numpy")
+    with pytest.raises(ValueError, match="'literal' or 'arrow'"):
+        S.ivf_pq_index(None, None, [[[0.0]]], lane="numpy")
 
 
 def test_pq_topk_matches_numpy_adc(emb):
@@ -371,7 +380,7 @@ def test_pq_train_encode_topk_recall(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     books = S.pq_train(df, n_sub=4, ksub=16, iters=8, seed=3)
     assert len(books) == 4 and len(books[0]) == 16 and len(books[0][0]) == DIM // 4
-    codes = S.pq_encode(df, books, lane="numpy")
+    codes = S.pq_encode(df, books, lane="arrow")
     queries = df.filter(F.col("vec_id") < 5)
     approx = S.pq_topk(codes, queries, books, k=10)
     # quantization can't resolve fine WITHIN-cluster ranks (that's the
@@ -397,9 +406,9 @@ def test_pq_train_encode_topk_recall(spark):
 def test_pq_encode_partitioning_invariant(emb):
     df, rows = emb
     books = S.pq_codebooks_from_vectors([v for _, v in rows[:4]], 2)
-    one = sorted(map(tuple, S.pq_encode(df, books, lane="numpy").collect()))
+    one = sorted(map(tuple, S.pq_encode(df, books, lane="arrow").collect()))
     many = sorted(
-        map(tuple, S.pq_encode(df.repartition(17), books, lane="numpy").collect())
+        map(tuple, S.pq_encode(df.repartition(17), books, lane="arrow").collect())
     )
     assert [(i, list(c)) for i, c in one] == [(i, list(c)) for i, c in many]
 
@@ -475,24 +484,6 @@ def test_random_project_requires_dim(emb):
         S.random_project(df, 4)
 
 
-def test_pq_encode_arrow_lane_matches_numpy(emb):
-    df, rows = emb
-    books = S.pq_codebooks_from_vectors([v for _, v in rows[:5]], 4)
-    npy = sorted(
-        (r["vec_id"], tuple(r["pq_code"]))
-        for r in S.pq_encode(df, books, lane="numpy").collect()
-    )
-    arw = sorted(
-        (r["vec_id"], tuple(r["pq_code"]))
-        for r in S.pq_encode(df.repartition(5), books, lane="arrow").collect()
-    )
-    assert npy == arw
-    # extra_cols pass through the arrow lane too
-    df2 = df.withColumn("tag", F.col("vec_id") % 3)
-    out = S.pq_encode(df2, books, lane="arrow", extra_cols=["tag"]).collect()
-    assert all(r["tag"] == r["vec_id"] % 3 for r in out)
-
-
 def test_pq_encode_arrow_lane_rejects_nulls_and_ragged(spark):
     books = [[[0.0, 0.0]], [[0.0, 0.0]]]  # dim 4
     bad_null = spark.createDataFrame(
@@ -507,6 +498,19 @@ def test_pq_encode_arrow_lane_rejects_nulls_and_ragged(spark):
     )
     with pytest.raises(Exception, match="uniform width"):
         S.pq_encode(bad_ragged, books, lane="arrow").collect()
+
+
+def test_pq_encode_arrow_lane_rejects_compensating_widths(spark):
+    # widths dim-1 and dim+1 in ONE batch hold n*dim values in total: a
+    # total-length check passes them and reshapes row 0 into [1,2,3,4]
+    books = [[[0.0, 0.0]], [[0.0, 0.0]]]  # dim 4
+    short, long_ = [1.0, 2.0, 3.0], [4.0, 5.0, 6.0, 7.0, 8.0]
+    for vecs in ((short, long_), (long_, short)):
+        df = spark.createDataFrame(
+            list(enumerate(vecs)), "vec_id long, embedding array<double>"
+        ).coalesce(1)
+        with pytest.raises(Exception, match="uniform width"):
+            S.pq_encode(df, books, lane="arrow").collect()
 
 
 def test_lsh_multiprobe_recall_monotone(emb):
@@ -559,7 +563,7 @@ def test_ivf_pq_residual_matches_numpy(spark):
     )
     res = S.ivf_residual_frame(df, cents)
     books = S.pq_train(res, n_sub=4, ksub=8, iters=6, seed=2)
-    codes = S.ivf_pq_index(df, cents, books, lane="numpy", residual=True)
+    codes = S.ivf_pq_index(df, cents, books, lane="arrow", residual=True)
     queries = df.filter(F.col("vec_id").isin([0, 11]))
     out = S.ivf_pq_topk(
         codes, queries, cents, books, k=4, nprobe=3, residual=True
@@ -632,11 +636,11 @@ def test_ivf_pq_residual_tightens_quantization(spark):
         return tot / len(rows)
 
     raw_books = S.pq_train(df, n_sub=4, ksub=8, iters=6, seed=2)
-    raw_codes = S.ivf_pq_index(df, cents, raw_books, lane="numpy")
+    raw_codes = S.ivf_pq_index(df, cents, raw_books, lane="arrow")
     res_books = S.pq_train(
         S.ivf_residual_frame(df, cents), n_sub=4, ksub=8, iters=6, seed=2
     )
-    res_codes = S.ivf_pq_index(df, cents, res_books, lane="numpy", residual=True)
+    res_codes = S.ivf_pq_index(df, cents, res_books, lane="arrow", residual=True)
     assert mse(res_codes, res_books, True) < mse(raw_codes, raw_books, False)
 
 
@@ -694,7 +698,7 @@ def test_rerank_exact_recovers_true_topk(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     books = S.pq_train(df, n_sub=4, ksub=16, iters=6, seed=2)
-    codes = S.pq_encode(df, books, lane="numpy")
+    codes = S.pq_encode(df, books, lane="arrow")
     queries = df.filter(F.col("vec_id") < 3)
     cands = S.pq_topk(codes, queries, books, k=60, lane="numpy")
     out = S.rerank_exact(cands, df, queries, k=5)

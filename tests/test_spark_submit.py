@@ -311,3 +311,33 @@ def test_corpus_pipeline_distill_classifier(spark, tmp_path):
             "--input", inp, "--output", str(tmp_path / "out2"),
             "--distill-classifier",
         ]))
+
+
+def test_job_lane_choices_match_operators(spark):
+    """Every --minhash-lane / --decontam-lane choice is a lane its
+    operator accepts, and neither offers the removed xxhash64 lane — a
+    CLI offering a deleted lane would otherwise fail only mid-job."""
+    from tdigest_spark.operators import dedup as D
+
+    df = spark.createDataFrame([(0, "a b c d")], "url long, text string")
+    operator = {
+        "--minhash-lane": lambda lane: D.minhash_signatures(
+            df, "text", "url", hash_fn=lane
+        ),
+        "--decontam-lane": lambda lane: D.ngram_contamination(
+            df, df, "text", "url", gram_lane=lane
+        ),
+    }
+    seen = []
+    for name in ("corpus_pipeline_job", "incremental_crawl_job"):
+        for act in load_job(name).build_parser()._actions:
+            for flag in set(act.option_strings) & set(operator):
+                seen.append(flag)
+                for lane in act.choices:
+                    operator[flag](lane)
+                with pytest.raises(ValueError):
+                    operator[flag]("xxhash64")
+                assert "xxhash64" not in act.choices
+    assert sorted(seen) == [
+        "--decontam-lane", "--minhash-lane", "--minhash-lane"
+    ]

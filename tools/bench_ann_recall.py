@@ -5,8 +5,8 @@ Corpus: deterministic CLUSTERED vectors (planted Gaussian clusters —
 real embedding spaces are clustered; on i.i.d. Gaussian noise all
 pairs are near-equidistant at 64 dims and "recall" measures nothing,
 for ANY index).  Ground truth is exact squared-L2 top-k computed in
-NumPy; the measured paths are the actual Spark operators (arrow/numpy
-encode lanes + ADC search), so the numbers are end-to-end — candidate
+NumPy; the measured paths are the actual Spark operators (arrow encode
+lane + numpy ADC search), so the numbers are end-to-end — candidate
 pruning, tie-breaks, LUT algebra and all.
 
 Prints one JSON line per configuration plus a summary line; the BENCH
@@ -281,7 +281,7 @@ def main() -> None:
             index = spark.read.parquet(cache_dir).persist()
         else:
             index = ivf_pq_index(
-                emb, cents, rbooks, lane="numpy", residual=residual
+                emb, cents, rbooks, lane="arrow", residual=residual
             )
             if cache_dir:
                 index.write.mode("overwrite").parquet(cache_dir)
