@@ -313,10 +313,6 @@ def test_pq_encode_lanes_agree_and_match_numpy(emb):
     }
     assert lit == expect
     assert arw == expect
-    # extra_cols pass through the arrow lane too
-    df2 = df.withColumn("tag", F.col("vec_id") % 3)
-    out = S.pq_encode(df2, books, lane="arrow", extra_cols=["tag"]).collect()
-    assert all(r["tag"] == r["vec_id"] % 3 for r in out)
 
 
 def test_pq_encode_literal_guard():
@@ -482,6 +478,24 @@ def test_random_project_requires_dim(emb):
     df, _ = emb
     with pytest.raises(ValueError, match="dim"):
         S.random_project(df, 4)
+
+
+def test_pq_encode_arrow_lane_matches_numpy(emb):
+    df, rows = emb
+    X = np.array([v for _, v in rows])
+    books = S.pq_codebooks_from_vectors([v for _, v in rows[:5]], 4)
+    expect = sorted(
+        (i, tuple(c)) for (i, _), c in zip(rows, _np_pq_encode(X, books))
+    )
+    arw = sorted(
+        (r["vec_id"], tuple(r["pq_code"]))
+        for r in S.pq_encode(df.repartition(5), books, lane="arrow").collect()
+    )
+    assert arw == expect
+    # extra_cols pass through the arrow lane too
+    df2 = df.withColumn("tag", F.col("vec_id") % 3)
+    out = S.pq_encode(df2, books, lane="arrow", extra_cols=["tag"]).collect()
+    assert all(r["tag"] == r["vec_id"] % 3 for r in out)
 
 
 def test_pq_encode_arrow_lane_rejects_nulls_and_ragged(spark):
