@@ -1,5 +1,5 @@
-"""SQL surface: the query side of every sketch, as Arrow UDFs over
-serialized sketch columns.
+"""SQL surface: the query side of every sketch, as UDFs over serialized
+sketch columns.
 
 Registered by `register_sql_functions` (each `digest` is a BinaryType
 digest produced by operators.digest.digest_by / merge_partials or by
@@ -23,10 +23,18 @@ Registered by `register_sketch_sql_functions`:
 NULL in -> NULL out: a NULL sketch or a NULL/NaN argument gives NULL,
 and so does a NaN result (the quantile of an empty digest, say).
 
-Every query function is one `_sketch_udf`: a scalar Arrow UDF (one
-Python call per ~10k-row Arrow batch) that loads each distinct sketch
-once per batch, so a digest seen with many q values (the quantiles_of
-explode pattern) is deserialized once.
+tdigest_quantile and tdigest_cdf run in the JVM: they are the kernel's
+`DigestQuery` (`operators._jvm_kernel`), bit-identical to
+`MergingDigest.from_bytes(digest).quantile(q)` / `.cdf(x)`, parsing each
+distinct digest once per task, and they start no Python worker.  A q
+outside [0,1] or an infinite x fails the job with the core's message.
+`tdigest_quantile_udf` and `tdigest_cdf_udf` build their columns on the
+active session.
+
+Every other query function is one `_sketch_udf`: a scalar Arrow UDF
+(one Python call per ~10k-row Arrow batch) that loads each distinct
+sketch once per batch, so a sketch seen with many arguments is
+deserialized once.
 """
 
 from __future__ import annotations
@@ -35,7 +43,7 @@ from typing import Any, Callable
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import Column, SparkSession, functions as F
 from pyspark.sql.pandas.types import to_arrow_type
 from pyspark.sql.types import (
     BinaryType, DataType, DoubleType, IntegerType, LongType,
@@ -43,6 +51,7 @@ from pyspark.sql.types import (
 
 from ..core import MergingDigest
 from ..kll import KLL
+from ..operators import _jvm_kernel
 from ..operators._arrow_groups import floats
 from ..scale import get_scale
 from ..sketches import hll_estimate_np, kmv_estimate_py
@@ -104,9 +113,29 @@ def _sketch_udf(
     return F.arrow_udf(run, return_type)
 
 
+def _digest_query(cdf: bool, digest, arg) -> Column:
+    spark = SparkSession.active()
+    cols = [F.col(c) if isinstance(c, str) else c for c in (digest, arg)]
+    return _jvm_kernel.apply_udf(spark, _jvm_kernel.digest_query(spark, cdf).udf(), cols)
+
+
+def tdigest_quantile_udf(digest, q) -> Column:
+    """tdigest_quantile(digest, q) as a column (see the module docstring)."""
+    return _digest_query(False, digest, q)
+
+
+def tdigest_cdf_udf(digest, x) -> Column:
+    """tdigest_cdf(digest, x) as a column (see the module docstring)."""
+    return _digest_query(True, digest, x)
+
+
+def _register_query(spark: SparkSession, cdf: bool) -> None:
+    """Register a `DigestQuery` under its SQL name, through the Java
+    overload the kernel picks (py4j would pick an untyped Scala one)."""
+    _jvm_kernel.digest_query(spark, cdf).register(spark._jsparkSession.udf())
+
+
 _load_digest = MergingDigest.from_bytes
-tdigest_quantile_udf = _sketch_udf(_load_digest, MergingDigest.quantile, DoubleType())
-tdigest_cdf_udf = _sketch_udf(_load_digest, MergingDigest.cdf, DoubleType())
 tdigest_trimmed_mean_udf = _sketch_udf(
     _load_digest, MergingDigest.trimmed_mean, DoubleType()
 )
@@ -136,8 +165,8 @@ kmv_estimate_udf = _sketch_udf(tuple, kmv_estimate_py, DoubleType())
 def register_sql_functions(spark: SparkSession) -> None:
     """Expose the digest query surface to spark.sql(...)."""
     spark.udf.register("tdigest_agg", tdigest_agg_udf)
-    spark.udf.register("tdigest_quantile", tdigest_quantile_udf)
-    spark.udf.register("tdigest_cdf", tdigest_cdf_udf)
+    _register_query(spark, cdf=False)  # tdigest_quantile
+    _register_query(spark, cdf=True)  # tdigest_cdf
     spark.udf.register("tdigest_trimmed_mean", tdigest_trimmed_mean_udf)
     spark.udf.register("tdigest_total_weight", tdigest_total_weight_udf)
     spark.udf.register("tdigest_min", tdigest_min_udf)

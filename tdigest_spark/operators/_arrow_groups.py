@@ -6,9 +6,9 @@ Frequent Directions, Misra-Gries heavy-hitter candidates) has one shape:
 each input partition keeps a dict group -> sketch, feeds it every Arrow
 batch split by group, and emits one partial row per (group, partition).
 Only those KB-sized partials shuffle; raw rows never do.  This module is
-that shape, once.  The t-digest's stage 1 is the JVM kernel
-(``_jvm_kernel.DigestPartials``); only its stage-2 merge runs here, via
-`reduce_groups`.
+that shape, once.  The t-digest does not use it: its build and merge are
+the JVM kernel's (``_jvm_kernel.DigestPartials`` and ``DigestMerge``);
+`merged` stays the reference its merge is checked against.
 
 The split stays in Arrow: ``dictionary_encode`` per key column (NULL is a
 dictionary entry, so it is a group like any other and the same Python key

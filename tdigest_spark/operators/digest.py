@@ -15,19 +15,23 @@ compress + quantile/cdf.  Spark-first mapping:
                        byte-identical to a driver digest fed the same
                        chunks (build_partials_grouped; `by=()` is the
                        per-partition build)
-    stage 2 (merge):   groupBy(keys).applyInArrow (`reduce_groups`):
-                       each group's partials arrive as one Arrow table and
-                       merge in salt order; the key is sliced from that
-                       table, so it stays typed (NaN and NULL stay two
-                       groups) — digests are ~8·delta bytes, so the
-                       shuffle moves KBs per group regardless of input
-                       size
-    evaluate:          scalar Arrow UDFs over the digest column
-                       (tdigest_quantile / tdigest_cdf / ..., the
-                       `functions` surface); per-row scoring
-                       (percentile_enrich) is one JVM UDF (the
-                       `_jvm_kernel` cdf scorer) over the key and value
-                       columns — no row crosses to Python
+    stage 2 (merge):   one JVM groupByKey on the folded key, then
+                       flatMapSortedGroups by salt (`_jvm_kernel`'s
+                       DigestMerge): each group's partials merge in salt
+                       order, byte-identically to `MergingDigest.merge`;
+                       keys stay typed (NaN and NULL stay two groups) —
+                       digests are ~8·delta bytes, so the shuffle moves
+                       KBs per group regardless of input size
+    evaluate:          quantile and cdf are JVM UDFs over the digest
+                       column (`_jvm_kernel`'s DigestQuery, the
+                       tdigest_quantile / tdigest_cdf of the `functions`
+                       surface; quantiles_of, cdfs_of, digest_drift and
+                       quantile_filter use them); per-row scoring
+                       (percentile_enrich) is one JVM UDF (the cdf scorer)
+                       over the key and value columns — no row crosses to
+                       Python.  The other SQL query functions
+                       (trimmed mean, total weight, min, max, centroid
+                       count) are scalar Arrow UDFs
 
 Scale notes (100 TB / 1000 executors):
 - Stage 1 shuffles ZERO raw rows: the JVM kernel keeps a map
@@ -46,16 +50,17 @@ Scale notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import math
 from typing import Iterable, Sequence
 
-import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from ..core import MergingDigest
 from ..scale import get_scale
-from ._arrow_groups import key_tuple, merged, reduce_groups
-from ._jvm_kernel import apply_udf, cdf_scorer, collect_rows, digest_partials
+from ._arrow_groups import key_tuple
+from ._jvm_kernel import (
+    apply_udf, cdf_scorer, collect_rows, digest_merge, digest_partials,
+)
 
 _VALUE = "__td_value"
 _SALT = "__td_salt"
@@ -187,6 +192,13 @@ def merge_partials(
 ) -> DataFrame:
     """Stage-2 merge: combine digest rows down to one per group.
 
+    One JVM pass (`_jvm_kernel.DigestMerge`, a `groupByKey` on the folded
+    key, then `flatMapSortedGroups` by salt): each group's partials merge
+    in ascending salt order, byte-identically to `MergingDigest.merge`
+    over them, and no row crosses to Python.  Keys group as in GROUP BY:
+    NULL is a group, all NaNs are one, -0.0 joins 0.0, binary keys
+    compare by content.
+
     Merge order is canonical (ascending salt) so results are reproducible
     across runs and cluster sizes.  With very high partial counts (e.g.
     100k input splits feeding a global digest), set `stages=2`: a first
@@ -195,18 +207,11 @@ def merge_partials(
     pass touches only `fanin` rows.
     """
     keys = list(by)
-
-    def merge(t: pa.Table) -> tuple:
-        d = merged(t, "digest", _SALT, MergingDigest.from_bytes)
-        return pc.min(t[_SALT]).as_py(), d.to_bytes(), pc.sum(t["n_rows"]).as_py()
-
     cur = partials
     if stages > 1:
         cur = cur.withColumn("__bucket", F.pmod(F.col(_SALT), F.lit(fanin)))
-        cur = reduce_groups(
-            cur, [*keys, "__bucket"], f"{_SALT} int, {DIGEST_FIELDS}", merge
-        ).drop("__bucket")
-    return reduce_groups(cur, keys, DIGEST_FIELDS, lambda t: merge(t)[1:])
+        cur = digest_merge(cur, [*keys, "__bucket"], _SALT, keep_salt=True).drop("__bucket")
+    return digest_merge(cur, keys, _SALT, keep_salt=False)
 
 
 def digest_by(
@@ -251,11 +256,13 @@ def quantiles_of(
     """Expand a digest table to one row per (group, q) with the estimate.
 
     Declarative shape: explode a literal q array next to each digest,
-    then one scalar Arrow UDF (`functions.tdigest_quantile_udf`)
-    evaluates the digest, loading each digest once per Arrow batch."""
+    then one JVM UDF (`functions.tdigest_quantile_udf`, the kernel's
+    `DigestQuery`) evaluates the digest, parsing each digest once per
+    task; no row crosses to Python.  A q outside [0,1] raises ValueError
+    here, before any job runs; a NaN q gives NULL."""
     from ..functions import tdigest_quantile_udf
 
-    qs = [float(q) for q in qs]
+    qs = [_check_q(q) for q in qs]
     out = digests.select(
         *by, "digest", F.explode(F.array(*[F.lit(q) for q in qs])).alias("q")
     )
@@ -270,15 +277,37 @@ def cdfs_of(
     by: Sequence[str] = (),
     value_name: str = "cdf",
 ) -> DataFrame:
+    """Expand a digest table to one row per (group, x) with the cdf
+    estimate, as `quantiles_of` does with the JVM
+    `functions.tdigest_cdf_udf`.  An infinite x raises ValueError here,
+    before any job runs; a NaN x gives NULL."""
     from ..functions import tdigest_cdf_udf
 
-    xs = [float(x) for x in xs]
+    xs = [_check_x(x) for x in xs]
     out = digests.select(
         *by, "digest", F.explode(F.array(*[F.lit(x) for x in xs])).alias("x")
     )
     return out.select(
         *by, "x", tdigest_cdf_udf(F.col("digest"), F.col("x")).alias(value_name)
     )
+
+
+def _check_q(q) -> float:
+    """`q` as a float, or core.quantile's ValueError for a q outside
+    [0,1] (NaN passes: its answer is NULL)."""
+    q = float(q)
+    if q < 0 or q > 1:
+        raise ValueError(f"q should be in [0,1], got {q}")
+    return q
+
+
+def _check_x(x) -> float:
+    """`x` as a float, or core.cdf's ValueError for an infinite x (NaN
+    passes: its answer is NULL)."""
+    x = float(x)
+    if math.isinf(x):
+        raise ValueError(f"Invalid value: {x}")
+    return x
 
 
 def digest_drift(
@@ -316,6 +345,7 @@ def digest_drift(
     no reference counterpart (the reference API is single-digest).
     """
     by = list(by)
+    xs = list(xs)  # read twice; cdfs_of checks it before any job
     ca = cdfs_of(a, xs, by=by, value_name="cdf_a")
     cb = cdfs_of(b, xs, by=by, value_name="cdf_b")
     # null-SAFE group-key equality: a NULL group key populated in BOTH
@@ -372,9 +402,10 @@ def quantile_filter(
     """
     if keep not in ("ge", "gt", "le", "lt"):
         raise ValueError("keep must be one of 'ge', 'gt', 'le', 'lt'")
+    q = _check_q(q)
     d = digest_by(df, value_col, by=by, delta=delta, scale=scale)
     cut = cutoff_col or "__qf_cut"
-    cuts = quantiles_of(d, [float(q)], by=by, value_name=cut).drop("q")
+    cuts = quantiles_of(d, [q], by=by, value_name=cut).drop("q")
     if by:
         renamed = cuts.select(
             *[F.col(c).alias(f"__qf_{c}") for c in by], F.col(cut)

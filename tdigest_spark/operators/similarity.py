@@ -625,6 +625,12 @@ def _pq_encode_arrow(emb, codebooks, id_col, vec_col, out_col, extra_cols):
                     f"pq_encode arrow lane requires uniform width {dim}; "
                     f"got row widths {w['min']}..{w['max']}"
                 )
+            # a NULL element would become NaN, and argmin would give its
+            # subspace code 0
+            if arr.flatten().null_count:
+                raise ValueError(
+                    "pq_encode arrow lane requires vectors without NULL elements"
+                )
             X = arr.flatten().to_numpy(zero_copy_only=False).astype(
                 np.float64, copy=False
             ).reshape(n, dim)
@@ -693,7 +699,7 @@ def pq_encode(
       swamp codegen.  May differ from the literal lane only on sub-ulp
       distance ties (different accumulation order); argmin tie-break
       (first minimum = lowest j) matches.  Requires non-null vectors of
-      width exactly n_sub*dsub.
+      width exactly n_sub*dsub with no NULL element.
     """
     _check_encode_lane(lane)
     n_sub = len(codebooks)

@@ -1,11 +1,18 @@
-"""The JVM map-side digest build (`operators/_jvm_kernel.py`).
+"""The t-digest's JVM kernel (`operators/_jvm_kernel.py`): build, merge,
+per-row cdf scorer and the quantile/cdf queries.
 
-Parity: every partial the JVM kernel emits equals, byte for byte, a
+Build parity: every partial the JVM kernel emits equals, byte for byte, a
 driver `MergingDigest` fed the same group's non-NULL, non-NaN values one
 10,000-input-row chunk at a time, in row order, partition by partition.
 The corpora cover the singleton and compaction regimes (delta 10, 100,
 1000) under every scale K_0..K_3, values with heavy duplicates, signed
 zeros, infinities, NaN and NULL, and keys of every folding class.
+
+Merge parity: each merged digest equals, byte for byte, the group's
+partials merged with `MergingDigest.merge` in ascending salt order
+(`_arrow_groups.merged`), with one merge stage or two.  Query parity:
+`tdigest_quantile` / `tdigest_cdf` equal `from_bytes(b).quantile(q)` /
+`.cdf(x)` bit for bit.
 
 Jar cache: one jar per source hash, reused across calls and sessions of
 the process, and added to each new SparkContext before use.
@@ -26,11 +33,14 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+import pyarrow as pa
+
 from tdigest_spark.core import MergingDigest, _CHUNK
+from tdigest_spark.functions import tdigest_cdf_udf, tdigest_quantile_udf
 from tdigest_spark.operators import _jvm_kernel
-from tdigest_spark.operators._arrow_groups import key_tuple
+from tdigest_spark.operators._arrow_groups import key_tuple, merged
 from tdigest_spark.operators.digest import (
-    build_partials_grouped, build_partials_multi,
+    build_partials_grouped, build_partials_multi, merge_partials,
 )
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -52,6 +62,10 @@ def corpus(spark):
     duplicates, continuous values, +-0.0, +-inf, NaN and NULL, a second
     value column with its own NULL pattern, and one key column per
     folding class (each with NULL)."""
+    return _frame(spark, ROWS_PER_PART, PARTS)
+
+
+def _frame(spark, rows_per_part, parts):
     i = F.col("id")
     h = F.abs(F.xxhash64(i))
     dup = (h % 50).cast("double") / 4.0
@@ -67,7 +81,7 @@ def corpus(spark):
         .otherwise(cont)
     )
     big = 1 << 53
-    return spark.range(0, ROWS_PER_PART * PARTS, numPartitions=PARTS).select(
+    return spark.range(0, rows_per_part * parts, numPartitions=parts).select(
         _pick(i % 4, ["a", "b", "c", None]).alias("k_str"),
         _pick(F.floor(i / 3) % 3, [big + 1, big + 2, None]).cast("bigint").alias("k_big"),
         _pick(i % 5, [float("nan"), -0.0, 0.0, 1.5, None]).cast("double").alias("k_dbl"),
@@ -186,6 +200,145 @@ def test_multi_partials_byte_identical(corpus, rows, delta, scale):
     ).collect()
     expect = _driver_feed(rows, by, ["v", "w"], delta, scale, per_column=True)
     _assert_parity(_jvm_out(parts, by, per_column=True), expect)
+
+
+# ------------------------------------------------------------------ the merge
+
+MERGE_PARTS = 24
+FANIN = 4
+
+
+@pytest.fixture(scope="module")
+def merge_corpus(spark):
+    """MERGE_PARTS partitions of the corpus' rows: each group has enough
+    partials that together they hold more centroids than max_size at
+    delta 10, 100 and 1000, so the merge compacts."""
+    return _frame(spark, 8_000, MERGE_PARTS)
+
+
+def _expect_merge(parts, by, stages):
+    """{key: (bytes, n_rows)}: each group's partials merged as the Python
+    stage 2 merged them, `merged` in ascending salt order, first within
+    `salt % FANIN` buckets when stages=2 (each bucket then carries its
+    least salt)."""
+    groups: dict = {}
+    for r in parts:
+        groups.setdefault(_key(r[k] for k in by), []).append(
+            (r["__td_salt"], bytes(r["digest"]), r["n_rows"])
+        )
+
+    def merge(rows):
+        salts, blobs, ns = zip(*rows)
+        t = pa.table({"s": list(salts), "d": list(blobs)})
+        return min(salts), merged(t, "d", "s", MergingDigest.from_bytes).to_bytes(), sum(ns)
+
+    out = {}
+    for key, rows in groups.items():
+        if stages > 1:
+            buckets: dict = {}
+            for row in rows:
+                buckets.setdefault(row[0] % FANIN, []).append(row)
+            rows = [merge(b) for b in buckets.values()]
+        out[key] = merge(rows)[1:]
+    return out
+
+
+def _merge_out(frame, by):
+    return {_key(r[k] for k in by): (bytes(r["digest"]), r["n_rows"]) for r in frame.collect()}
+
+
+@pytest.mark.parametrize("stages", [1, 2])
+@pytest.mark.parametrize("scale", ["K_0", "K_1", "K_2", "K_3"])
+@pytest.mark.parametrize("delta", [10.0, 100.0, 1000.0])
+def test_merge_byte_identical_across_regimes(merge_corpus, delta, scale, stages):
+    """merge_partials equals the Python merge of the same partials byte
+    for byte under every scale, at delta 10, 100 and 1000, where the
+    partials' centroids overflow the merge buffer (a forced compaction at
+    the private compression), with one stage and with a fan-in stage.
+    K_1 merges with the build's NumPy sin/cos, read through the digest
+    column's compression."""
+    by = ["k_str"]
+    partials = build_partials_grouped(merge_corpus, "v", by=by, delta=delta, scale=scale)
+    partials = partials.persist()
+    try:
+        try:
+            parts = partials.collect()
+        except Exception as e:  # K_0/K_1 at delta=10 cannot compact
+            assert "Merging was ineffective" in str(e)
+            assert delta == 10.0 and scale in ("K_0", "K_1")
+            return
+        got = _merge_out(merge_partials(partials, by=by, fanin=FANIN, stages=stages), by)
+        _assert_parity(got, _expect_merge(parts, by, stages))
+        centroids: dict = {}
+        for r in parts:
+            key = _key(r[k] for k in by)
+            centroids[key] = centroids.get(key, 0) + len(MergingDigest.from_bytes(bytes(r["digest"])))
+        assert max(centroids.values()) > MergingDigest(delta).max_size
+    finally:
+        partials.unpersist()
+
+
+@pytest.mark.parametrize("stages", [1, 2])
+@pytest.mark.parametrize(
+    "by", [["k_big"], ["k_dbl"], ["k_bin"], ["k_str", "k_big", "k_dbl", "k_bin"], []]
+)
+def test_merge_byte_identical_for_every_key_type(merge_corpus, by, stages):
+    """Groups merge as GROUP BY groups them: NULL is its own group in
+    every type, bigints above 2^53 stay exact, NaN keys are one group
+    apart from NULL, and binary keys compare by value."""
+    partials = build_partials_grouped(merge_corpus, "v", by=by, delta=100.0).persist()
+    try:
+        parts = partials.collect()
+        out = merge_partials(partials, by=by, fanin=FANIN, stages=stages)
+        _assert_parity(_merge_out(out, by), _expect_merge(parts, by, stages))
+        if by == ["k_dbl"]:
+            keys = [r["k_dbl"] for r in out.collect()]
+            assert sum(k is None for k in keys) == 1
+            assert sum(k is not None and math.isnan(k) for k in keys) == 1
+        if by == ["k_big"]:
+            assert {r["k_big"] for r in out.collect()} == {(1 << 53) + 1, (1 << 53) + 2, None}
+    finally:
+        partials.unpersist()
+
+
+def test_merge_folds_keys(spark):
+    """Partials keyed -0.0 and 0.0 merge as one group (keyed 0.0), NaN
+    partials as another, NULL as a third; binary keys by content."""
+    def blob(lo):
+        d = MergingDigest(100.0)
+        d.add(np.arange(lo, lo + 50.0))
+        return d.to_bytes()
+
+    nan = float("nan")
+    rows = [(k, b, s, blob(10.0 * s), 50) for s, (k, b) in enumerate(
+        [(0.0, b"a"), (-0.0, b"a"), (nan, b"a"), (nan, b"b"), (None, b"b"), (-0.0, b"b")]
+    )]
+    partials = spark.createDataFrame(
+        rows, "g double, b binary, __td_salt int, digest binary, n_rows long"
+    ).repartition(3)
+    got = _merge_out(merge_partials(partials, by=["g"]), ["g"])
+    parts = spark.createDataFrame(rows, partials.schema).collect()
+    assert got == _expect_merge(parts, ["g"], 1)
+    assert set(got) == {(0.0,), (key_tuple([nan])), (None,)}
+    zero = [r["g"] for r in merge_partials(partials, by=["g"]).collect() if r["g"] == 0.0]
+    assert math.copysign(1, zero[0]) > 0
+    by_bin = _merge_out(merge_partials(partials, by=["b"]), ["b"])
+    assert by_bin == _expect_merge(parts, ["b"], 1) and len(by_bin) == 2
+
+
+def test_merge_rejects_partial_that_would_compact_on_load(spark):
+    """A partial with more centroids than its buffer (from_bytes would
+    compact it; to_bytes never writes one) fails the merge loudly."""
+    n = 71  # delta 10: max_size 70
+    body = np.empty(2 * n, dtype="<f8")
+    body[0::2] = 1.0
+    body[1::2] = np.arange(n)
+    blob = struct.pack("<IBdddIQ", 1, 3, 0.0, n - 1.0, 10.0, n, n) + body.tobytes()
+    partials = spark.createDataFrame(
+        [("a", 0, blob, n)], "g string, __td_salt int, digest binary, n_rows long"
+    )
+    with pytest.raises(Exception, match="more than its buffer"):
+        merge_partials(partials, by=["g"]).collect()
 
 
 def test_kernel_jar_cached_by_source_hash(spark, tmp_path, monkeypatch):
@@ -445,3 +598,107 @@ def test_scorer_rejects_digest_that_would_compact_on_load(spark):
     frame = spark.createDataFrame([("a", 1.0)], "g string, v double")
     with pytest.raises(Exception, match="private compression"):
         percentile_enrich(frame, "v", by=["g"], digests=table).collect()
+
+
+# ------------------------------------------------------------ the queries
+
+
+def _query_blobs(scale, rng):
+    """Digests at delta 10, 100 and 1000 with 0, 1, 2, 40 and 20k values
+    (singleton and compacted), VERBOSE and SMALL."""
+    blobs = {}
+    for delta in (10.0, 100.0, 1000.0):
+        for n in (0, 1, 2, 40, 20_000):
+            d = MergingDigest(delta, scale=scale)
+            if n:
+                try:
+                    d.add(_corpus_values(rng, n))
+                    d.compress()
+                except AssertionError:  # K_0/K_1 at delta=10 cannot compact
+                    continue
+            for small in (False, True):
+                blobs[f"{delta}/{n}/{small}"] = d.to_bytes(small=small)
+    return blobs
+
+
+def _run_query(spark, blobs, probes, column):
+    """column(digest, arg) over (group, arg) probes, in probe order."""
+    table = spark.createDataFrame(list(blobs.items()), "g string, digest binary")
+    frame = spark.createDataFrame(
+        [(i, k, a) for i, (k, a) in enumerate(probes)], "id long, g string, a double"
+    ).repartition(4)
+    out = frame.join(table, "g", "left").select("id", column(F.col("digest"), F.col("a")).alias("r"))
+    got = {r["id"]: r["r"] for r in out.collect()}
+    return [got[i] for i in range(len(probes))]
+
+
+def _expect_query(blobs, probes, method):
+    loaded = {k: MergingDigest.from_bytes(b) for k, b in blobs.items()}
+    out = []
+    for key, a in probes:
+        if key not in loaded or a is None or math.isnan(a):
+            out.append(None)
+            continue
+        r = method(loaded[key], a)
+        out.append(None if math.isnan(r) else float(r))
+    return out
+
+
+@pytest.mark.parametrize("scale", ["K_0", "K_1", "K_2", "K_3"])
+def test_quantile_bit_identical_to_core(spark, scale):
+    """tdigest_quantile equals `from_bytes(blob).quantile(q)` bit for bit
+    at q = 0, 1, 1/n, 1 - 1/n, half-steps from either end and a grid, on
+    empty, one-value, singleton and compacted digests in both encodings;
+    NULL for a NULL q, NaN q or missing digest."""
+    rng = np.random.default_rng(11)
+    blobs = _query_blobs(scale, rng)
+    probes = [("absent", 0.5)]
+    for key, blob in blobs.items():
+        w = MergingDigest.from_bytes(blob).total_weight
+        qs = [0.0, 1.0, *np.linspace(0.0, 1.0, 41), *rng.random(20), math.nan, None]
+        if w:
+            qs += [1 / w, 1 - 1 / w, 0.5 / w, 1 - 0.5 / w, 1.5 / w, 1 - 1.5 / w]
+        probes += [(key, None if q is None else float(min(max(q, 0.0), 1.0))) for q in qs]
+    got = _run_query(spark, blobs, probes, tdigest_quantile_udf)
+    _assert_scores(got, _expect_query(blobs, probes, MergingDigest.quantile), probes)
+    assert sum(g is not None for g in got) > len(probes) // 2
+
+
+@pytest.mark.parametrize("scale", ["K_0", "K_1", "K_2", "K_3"])
+def test_cdf_bit_identical_to_core(spark, scale):
+    """tdigest_cdf equals the scalar `from_bytes(blob).cdf(x)` bit for bit
+    at the min, the max, every centroid, every midpoint, +-0.0 and
+    values around and between them; NULL for a NULL or NaN x."""
+    rng = np.random.default_rng(13)
+    blobs = _query_blobs(scale, rng)
+    probes = [("absent", 1.0)]
+    for key, blob in blobs.items():
+        xs = _probes_for(MergingDigest.from_bytes(blob), rng)
+        probes += [(key, x) for x in xs if x is None or not math.isinf(x)]
+    got = _run_query(spark, blobs, probes, tdigest_cdf_udf)
+    _assert_scores(got, _expect_query(blobs, probes, MergingDigest.cdf), probes)
+    assert sum(g is not None for g in got) > len(probes) // 2
+
+
+def test_query_domain_errors_and_compaction_on_load(spark):
+    """A q outside [0,1] and an infinite x fail the job with the core's
+    message; a digest that would compact on load is rejected."""
+    d = MergingDigest(100.0)
+    d.add(np.arange(1.0, 51.0))
+    frame = spark.createDataFrame([(d.to_bytes(),)], "digest binary")
+    for col, arg, msg in [
+        (tdigest_quantile_udf, 1.5, r"q should be in \[0,1\], got 1.5"),
+        (tdigest_quantile_udf, -0.25, r"q should be in \[0,1\], got -0.25"),
+        (tdigest_cdf_udf, math.inf, "Invalid value: inf"),
+        (tdigest_cdf_udf, -math.inf, "Invalid value: -inf"),
+    ]:
+        with pytest.raises(Exception, match=msg):
+            frame.select(col(F.col("digest"), F.lit(arg))).collect()
+    n = 19  # delta 10: private compression sqrt(70/20)*10 = 18.7
+    body = np.empty(2 * n, dtype="<f8")
+    body[0::2] = 1.0
+    body[1::2] = np.arange(n)
+    blob = struct.pack("<IBdddIQ", 1, 3, 0.0, n - 1.0, 10.0, n, n) + body.tobytes()
+    bad = spark.createDataFrame([(blob,)], "digest binary")
+    with pytest.raises(Exception, match="private compression"):
+        bad.select(tdigest_quantile_udf(F.col("digest"), F.lit(0.5))).collect()

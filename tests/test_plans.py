@@ -102,6 +102,34 @@ def test_merge_shuffles_digest_rows_only(lineitem):
     assert "l_extendedprice" in explain_str(merged).split("ReadSchema")[1][:200]
 
 
+_PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "MapInArrow", "MapInPandas",
+                 "FlatMapGroupsIn", "Python")
+
+
+@pytest.mark.parametrize(
+    "face", ["digest_by", "merge_partials_stages2", "digest_profile", "quantiles_of", "cdfs_of"]
+)
+def test_digest_merge_and_queries_start_no_python(docs, face):
+    """Build, merge (one stage or with the fan-in stage) and the
+    quantile/cdf queries all run in the JVM kernel: no Python node in the
+    plan, and the merge is the kernel's sorted group map."""
+    by = ["lang"]
+    d = digest.digest_by(docs, "n_chars", by=by, delta=500.0)
+    frame = {
+        "digest_by": d,
+        "merge_partials_stages2": digest.merge_partials(
+            digest.build_partials_grouped(docs, "n_chars", by), by=by, fanin=4, stages=2
+        ),
+        "digest_profile": digest.digest_profile(docs, ["n_chars", "doc_id"], by=by),
+        "quantiles_of": digest.quantiles_of(d, [0.1, 0.5], by=by),
+        "cdfs_of": digest.cdfs_of(d, [100.0], by=by),
+    }[face]
+    plan = explain_str(frame, "simple")
+    for node in _PYTHON_NODES:
+        assert node not in plan, (face, node)
+    assert plan.count("MapGroups") == (2 if face == "merge_partials_stages2" else 1)
+
+
 def test_estimated_jaccard_verification_reads_no_text(docs):
     """The scale-path verification joins only signature rows: the plan
     must contain no shingle/token machinery (no array_intersect, no

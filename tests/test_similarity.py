@@ -514,6 +514,22 @@ def test_pq_encode_arrow_lane_rejects_nulls_and_ragged(spark):
         S.pq_encode(bad_ragged, books, lane="arrow").collect()
 
 
+def test_pq_encode_arrow_lane_rejects_null_elements(spark):
+    # [5, NULL, 5, 5] against centroids [0,0]/[5,5]: the NULL would turn
+    # into NaN and its subspace would silently get code 0
+    books = [[[0.0, 0.0], [5.0, 5.0]], [[0.0, 0.0], [5.0, 5.0]]]  # dim 4
+    df = spark.createDataFrame(
+        [(0, [5.0, 5.0, 5.0, 5.0]), (1, [5.0, None, 5.0, 5.0])],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    with pytest.raises(Exception, match="without NULL elements"):
+        S.pq_encode(df, books, lane="arrow").collect()
+    # the literal lane has no such check: the NULL subspace's distances
+    # are all NULL and the least() of its (d, j) candidates picks j = 0
+    got = {r["vec_id"]: r["pq_code"] for r in S.pq_encode(df, books).collect()}
+    assert got == {0: [1, 1], 1: [0, 1]}
+
+
 def test_pq_encode_arrow_lane_rejects_compensating_widths(spark):
     # widths dim-1 and dim+1 in ONE batch hold n*dim values in total: a
     # total-length check passes them and reshapes row 0 into [1,2,3,4]

@@ -180,13 +180,14 @@ _SQL_NULL_CASES = [
 @pytest.mark.parametrize(
     "name,expr,args", _SQL_NULL_CASES, ids=[c[0] for c in _SQL_NULL_CASES]
 )
-def test_sql_functions_null_in_null_out(spark, name, expr, args):
+def test_sql_functions_null_in_null_out(spark, monkeypatch, name, expr, args):
     """NULL in -> NULL out for every registered SQL function: next to a
     valid row, a NULL sketch (row 1), NULL arguments (row 2) and NaN
     double arguments (row 3) give NULL, and the valid row gives what it
     gives alone.  For the aggregate, NULL/NaN values are skipped, so an
     all-NULL or all-NaN group is an empty digest, whose quantile is
     NULL."""
+    from tdigest_spark import functions
     from tdigest_spark.functions import (
         register_sketch_sql_functions, register_sql_functions,
     )
@@ -200,7 +201,10 @@ def test_sql_functions_null_in_null_out(spark, name, expr, args):
             self.names.append(fname)
 
     rec = Names()
-    register_sql_functions(rec)
+    with monkeypatch.context() as m:  # the JVM queries register in Java
+        m.setattr(functions, "_register_query", lambda s, cdf: s.udf.register(
+            "tdigest_cdf" if cdf else "tdigest_quantile", None))
+        register_sql_functions(rec)
     register_sketch_sql_functions(rec)
     assert sorted(rec.names) == sorted(c[0] for c in _SQL_NULL_CASES)
     register_sql_functions(spark)
@@ -239,6 +243,46 @@ def test_sql_functions_null_in_null_out(spark, name, expr, args):
     null_args = None if args else alone
     nan_args = None if set(args) - {"k"} else alone
     assert got == {0: alone, 1: null_sketch, 2: null_args, 3: nan_args}
+
+
+def test_query_arguments_checked_on_driver(spark):
+    """quantiles_of / quantile_filter reject a q outside [0,1], and
+    cdfs_of / digest_drift an infinite x, with the core's message before
+    any job runs; the SQL names fail the job with the same message, and a
+    NaN argument gives NULL."""
+    from tdigest_spark.functions import register_sql_functions
+    from tdigest_spark.operators.digest import cdfs_of, digest_drift, quantile_filter
+
+    sc = spark.sparkContext
+    df = spark.createDataFrame([("a", float(v)) for v in range(1, 51)], "g string, v double")
+    d = digest_by(df, "v", by=["g"])
+    calls = [
+        (lambda: quantiles_of(d, [0.5, 1.5], by=["g"]), r"q should be in \[0,1\], got 1.5"),
+        (lambda: quantiles_of(d, [-0.25], by=["g"]), r"q should be in \[0,1\], got -0.25"),
+        (lambda: quantile_filter(df, "v", 1.01, by=["g"]), r"got 1.01"),
+        (lambda: cdfs_of(d, [1.0, float("inf")], by=["g"]), "Invalid value: inf"),
+        (lambda: digest_drift(d, d, [float("-inf")], by=["g"]), "Invalid value: -inf"),
+    ]
+    sc.setJobGroup("driver_checks", "argument checks")
+    try:
+        for call, msg in calls:
+            with pytest.raises(ValueError, match=msg):
+                call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("driver_checks")) == []
+
+    nan = float("nan")
+    assert [r["quantile"] for r in quantiles_of(d, [nan], by=["g"]).collect()] == [None]
+    assert [r["cdf"] for r in cdfs_of(d, [nan], by=["g"]).collect()] == [None]
+    register_sql_functions(spark)
+    d.createOrReplaceTempView("__arg_checks")
+    for sql, msg in [
+        ("tdigest_quantile(digest, 1.5d)", r"q should be in \[0,1\], got 1.5"),
+        ("tdigest_cdf(digest, CAST('-inf' AS DOUBLE))", "Invalid value: -inf"),
+    ]:
+        with pytest.raises(Exception, match=msg):
+            spark.sql(f"SELECT {sql} FROM __arg_checks").collect()
 
 
 def test_tdigest_agg_sql_aggregate(spark):
